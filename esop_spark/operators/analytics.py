@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from esop_spark.operators.dedup import share_relation
+from esop_spark.operators.iterate import share_relation
 
 
 def cents(col: Column | str) -> Column:

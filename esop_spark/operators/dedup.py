@@ -25,52 +25,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
+from esop_spark.operators.graph import connected_components
 from esop_spark.operators.iterate import (
-    RoundCheckpointer,
-    release_shared_checkpoints,
+    release_shared_relations,  # re-exported: bench.py, tools/, perfbench/
+    share_relation,
     shared_checkpoint,
 )
 from esop_spark.plans.barriers import pin_projection_barrier
 
-# Corpus-shaped relations persisted so one query's legs share a single
-# materialization (signature + verify both read the shingle relation).
-# They should NOT outlive the workload: in a long session (300-query
-# bench, full oracle sweep) never-unpersisted per-query caches accumulate
-# in the CacheManager until eviction pressure distorts every later query —
-# the round-6 q22 bench anomaly's exposure surface. Persisted relations
-# are registered here and released explicitly between queries via
-# :func:`release_shared_relations` (bench.py and tools/check_oracle.py
-# call it, alongside spark.catalog.clearCache()). Releasing early is
-# always safe — an unpersisted DataFrame recomputes from source — so a
-# caller that releases mid-consumption loses only the cache hit, never
-# correctness. Repeat calls within one workload stay warm: persist() of an
-# identical plan dedupes onto the existing CacheManager entry.
-_SHARED_RELATIONS: list[DataFrame] = []
-
-
-def share_relation(df: DataFrame) -> DataFrame:
-    """Persist ``df`` for intra-query leg sharing and register it for
-    deferred release. Used by every operator module whose persisted
-    relation outlives the function call (feeds the returned frame), so a
-    long-lived library session frees them all with one
-    :func:`release_shared_relations` call instead of accumulating
-    CacheManager entries until eviction pressure."""
-    _SHARED_RELATIONS.append(df.persist())
-    return df
-
-
 _share = share_relation  # short internal alias (historical call sites)
-
-
-def release_shared_relations() -> None:
-    """Unpersist every registered shared relation AND every one-shot
-    eager checkpoint block (between-queries hook — one call frees both
-    leak classes). Persisted relations recompute if touched again;
-    checkpointed frames do NOT (lineage truncated), so run this only
-    between queries, after the previous query's frames are consumed."""
-    while _SHARED_RELATIONS:
-        _SHARED_RELATIONS.pop().unpersist(False)
-    release_shared_checkpoints()
 
 # 31-bit hash domain: a*x+b stays < 2^62, safe under ANSI int64 arithmetic.
 HASH_P = 2147483647  # 2^31 - 1 (Mersenne prime)
@@ -358,123 +321,23 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     for fuzzy duplicates identity is the transitive closure of the pair
     relation.
 
-    Two stages, both pure join/agg:
-
-    1. **Star contraction** (one pass): every node is mapped to its
-       representative ``rep(v) = min(v, neighbors(v))`` — a single hash
-       aggregation over the symmetric edge list — and edges are rewritten
-       to connect representatives. Contracting each node into a neighbor
-       (or itself) preserves connectivity exactly, and in a near-dup graph
-       — where most components are stars or dense blobs around one
-       low-id anchor — it collapses the bulk of the edge mass to
-       self-loops, which are dropped. Iteration input becomes
-       |clusters|-shaped instead of |candidate-edges|-shaped: the round-6
-       sf10 rehearsal measured label propagation as candidate-edge-bound
-       (ratio 26.7), and this pass is what removes that term.
-    2. **Min-label propagation** on the contracted graph: every rep
-       starts labeled with itself; each round every rep takes the min
-       label across itself and its neighbors; fixpoint = components. Per
-       round: one shuffle join (edges ⋈ labels) + one hash aggregation —
-       no driver-side graph state, O(diameter) rounds. Superseded rounds'
-       checkpoint blocks are released explicitly (RoundCheckpointer), so
-       a long peel holds at most two rounds resident.
-
-    Exactness: the component's global-min node m satisfies rep(m) = m (m
-    is the minimum of its own neighborhood), so m survives contraction
-    and remains the minimum label of its contracted component; every
-    other node inherits label(rep(v)), and a component that contracted to
-    a single isolated rep keeps that rep as its label (coalesce). Cluster
-    ids and sizes are therefore identical to propagation on the raw pair
-    list.
+    A thin wrapper over :func:`graph.connected_components` (one exchange
+    and one eager checkpoint per propagation round, convergence observed
+    on that checkpoint): the pair columns become the edge relation and the
+    output is cast to bigint.
 
     Input: (id_a, id_b [, ...]) pair DataFrame. Output: one row per
     distinct doc appearing in any pair — (doc_id, cluster_id, cluster_size)
     with cluster_id = min doc_id in the component.
     """
-    # Round 11 A/B note: an explode-based one-pass symmetrization
-    # (graph._symmetrize) was MEASURED here and REVERTED — q48 4.45 →
-    # 5.6/6.8 s min-of-5, q108 4.17 → 4.9/5.2 across two interleaved runs.
-    # The union's double reference to the pair pipeline is already
-    # de-duplicated at runtime (AQE exchange reuse covers the Σdf²
-    # self-join's map side) and the two branches parallelize; the explode
-    # halves task parallelism for no saved work.
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-        .persist()
+    comp = connected_components(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        max_iters=max_iters,
     )
-    ckpt = RoundCheckpointer(pairs)
-    # star contraction: node -> min(self, neighbors); every node of the
-    # symmetric edge list appears as src, so one groupBy covers the graph
-    reps = ckpt.checkpoint(
-        edges.groupBy("src")
-        .agg(F.least(F.col("src"), F.min("dst")).alias("rep"))
-        .select(F.col("src").alias("node"), "rep")
-    )
-    ra = reps.select(F.col("node").alias("src"), F.col("rep").alias("rep_a"))
-    rb = reps.select(F.col("node").alias("dst"), F.col("rep").alias("rep_b"))
-    cedges = ckpt.checkpoint(
-        edges.join(ra, "src")
-        .join(rb, "dst")
-        .filter(F.col("rep_a") != F.col("rep_b"))
-        .select(F.col("rep_a").alias("src"), F.col("rep_b").alias("dst"))
-        .distinct()  # already symmetric: edges was, and the rewrite is 1:1
-    )
-    edges.unpersist()  # contraction consumed it; the loop reads cedges only
-    labels = ckpt.checkpoint(
-        cedges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    # Convergence: eager checkpoint + limit(1) changed-row probe. A
-    # one-job-per-round variant (lazy checkpoint materialized inside a
-    # decimal(38) label-sum aggregate, sum unchanged ⟺ fixpoint) was
-    # A/B-measured SLOWER at sf0.1 (q48 4.1 → 4.8+ s min-of-5, three
-    # interleaved runs) and reverted: the probe job reads checkpointed
-    # blocks and stops at the first changed row, which beats re-scanning
-    # every block for the sum in the rounds before convergence.
-    for _ in range(max_iters):
-        neighbor = cedges.join(
-            labels, cedges["dst"] == labels["node"], "inner"
-        ).select(F.col("src").alias("node"), F.col("label"))
-        new_labels = ckpt.checkpoint(
-            labels.unionByName(neighbor)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        ckpt.release(labels)  # convergence check was its last consumer
-        labels = new_labels
-        if changed == 0:
-            break
-    # expand back to the full node set: label(v) = label(rep(v)); a rep
-    # with no contracted edge (component fully collapsed) keeps itself
-    node_labels = ckpt.checkpoint(
-        reps.join(
-            labels.select(F.col("node").alias("rep"), "label"), "rep", "left"
-        ).select("node", F.coalesce("label", "rep").alias("label"))
-    )
-    ckpt.release(labels)
-    ckpt.release(cedges)
-    ckpt.release(reps)
-    ckpt.disown_to_shared(node_labels)  # consumed lazily by the returned join
-    sizes = node_labels.groupBy("label").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return (
-        node_labels.join(sizes, "label")
-        .select(
-            F.col("node").cast("bigint").alias("doc_id"),
-            F.col("label").cast("bigint").alias("cluster_id"),
-            F.col("cluster_size").cast("bigint").alias("cluster_size"),
-        )
+    return comp.select(
+        F.col("node").cast("bigint").alias("doc_id"),
+        F.col("cluster_id").cast("bigint").alias("cluster_id"),
+        F.col("cluster_size").cast("bigint").alias("cluster_size"),
     )
 
 
@@ -848,6 +711,16 @@ def word_tf(
 _WJ_SEGMENTS = 4
 
 
+def _wj_prune_floor(threshold: float) -> float:
+    """Bound the weighted-Jaccard prunes compare against, just below τ. A
+    true pair's unrounded J_w can sit at τ − 5e-7 (the final filter is on
+    J_w rounded to 6 places), so the floor must stay at or below that for
+    every τ. ``τ·0.999`` alone fails for τ ≤ 5e-4; ``τ − 1e-6`` alone
+    leaves only 5e-7 of room for float error in the prune products. The
+    smaller of the two is safe at every τ."""
+    return min(threshold * 0.999, threshold - 1e-6)
+
+
 def weighted_jaccard_pairs(
     documents: DataFrame,
     threshold: float = 0.8,
@@ -877,9 +750,10 @@ def weighted_jaccard_pairs(
     coalesces the exchange to one task per hot bucket: 86 s vs 4.7 s at
     sf0.1). Inside the join condition a mass-ratio bound prunes before
     any vector work: J_w ≤ min(mass)/max(mass) (Σmin ≤ the smaller total
-    mass, Σmax ≥ the larger), so pairs outside ratio ≥ threshold·0.999
-    never reach the fold; the slop keeps a float product from dropping a
-    ratio-exactly-τ pair, and the authoritative filter is the rounded
+    mass, Σmax ≥ the larger), so pairs below the prune floor (just under
+    τ, :func:`_wj_prune_floor`) never reach the fold; the slop keeps a
+    float product or the 6-place rounding from dropping a true pair, and
+    the authoritative filter is the rounded
     J_w ≥ threshold at the end, identical to the SQL oracle's.
 
     Per surviving pair, Σmin is one integer ``zip_with``/fold over the
@@ -981,21 +855,22 @@ def weighted_jaccard_pairs(
     target = int(spark.conf.get("spark.sql.shuffle.partitions"))
     a = prep.repartition(target, F.col(id_col)).alias("a")
     b = F.broadcast(prep).alias("b")
-    ratio_ok = F.least(F.col("a.mass"), F.col("b.mass")) >= F.lit(
-        threshold * 0.999
-    ) * F.greatest(F.col("a.mass"), F.col("b.mass"))
+    floor = F.lit(_wj_prune_floor(threshold))
+    ratio_ok = F.least(F.col("a.mass"), F.col("b.mass")) >= floor * F.greatest(
+        F.col("a.mass"), F.col("b.mass")
+    )
     # segment-mass upper bound on the shared mass (see prep above):
     # J_w ≤ U/(mass_a + mass_b − U) because J_w = S/(ma+mb−S) is
-    # increasing in S and S ≤ U. Same 0.999 slop convention as ratio_ok
-    # (a true pair has rounded ratio ≥ τ − 5e-7 > τ·0.999, so the prune
-    # can never drop one); the authoritative filter stays the rounded
-    # J_w ≥ threshold at the end.
+    # increasing in S and S ≤ U. Same floor as ratio_ok (see
+    # _wj_prune_floor: a true pair has J_w ≥ τ − 5e-7, never below the
+    # floor, so neither prune can drop one); the authoritative filter
+    # stays the rounded J_w ≥ threshold at the end.
     seg_ub = F.aggregate(
         F.zip_with(F.col("a.segm"), F.col("b.segm"), lambda x, y: F.least(x, y)),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
-    seg_ok = seg_ub.cast("double") >= F.lit(threshold * 0.999) * (
+    seg_ok = seg_ub.cast("double") >= floor * (
         F.col("a.mass") + F.col("b.mass") - seg_ub
     )
     # Σmin over the dense vectors: one zip_with + integer fold per

@@ -1,8 +1,9 @@
 """Distributed graph operators over DataFrame edge relations.
 
-The reference's near-dup clustering already required one graph algorithm
-(connected components, ``dedup.connected_components``); this module adds the
-two other graph primitives a corpus/curation pipeline reaches for:
+The reference's near-dup clustering already required one graph algorithm:
+connected components, which lives here as :func:`connected_components` and
+backs ``dedup.dedup_clusters``. This module adds the two other graph
+primitives a corpus/curation pipeline reaches for:
 
 - ``pagerank`` — importance scores over a directed edge relation (link-graph
   weighting of web-crawl sources, citation-style doc ranking).  Fixed
@@ -23,17 +24,16 @@ wedge is generated exactly once at its lowest-degree apex.
 
 Reference parity: generalizes the membership/refcount joins of
 ``impl/Manifest.java:407-484`` (J4/J5) from bipartite file↔backup incidence
-to arbitrary graphs, the same way dedup.connected_components generalized
+to arbitrary graphs, the same way connected_components generalized
 cross-backup identity.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from esop_spark.operators.dedup import share_relation
-from esop_spark.operators.iterate import RoundCheckpointer
+from esop_spark.operators.iterate import RoundCheckpointer, share_relation
 
 RANK_ONE = 1_000_000_000  # 1.0 in nano units
 
@@ -44,15 +44,15 @@ def _symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFra
     ``e.union(e.reversed)``, so every downstream distinct/agg is unchanged.
 
     Round 11 A/B: used where the symmetrized relation flows into a
-    SHUFFLE next (connected_components' distinct, adamic-adar's degree
-    agg over an already-persisted input) — there the single pass saves
-    one evaluation of the reduce-side work above the union's reusable
-    exchanges at no parallelism cost. NOT used where the union feeds an
-    eager checkpoint directly (kcore_peel / densest_subgraph_peel /
-    dedup_clusters): measured slower there (q305 3.4/3.5 → 4.9/3.9,
-    q48 4.45 → 5.6/6.8 min-of-5) — the union's two branches materialize
-    with twice the task parallelism while AQE exchange reuse already
-    shares the map side beneath them."""
+    SHUFFLE next (connected_components' adjacency agg, adamic-adar's
+    degree agg over an already-persisted input) — there the single pass
+    saves one evaluation of the reduce-side work above the union's
+    reusable exchanges at no parallelism cost. NOT used where the union
+    feeds an eager checkpoint directly (kcore_peel /
+    densest_subgraph_peel): measured slower there (q305 3.4/3.5 →
+    4.9/3.9 min-of-5) — the union's two branches materialize with twice
+    the task parallelism while AQE exchange reuse already shares the map
+    side beneath them."""
     return edges.select(
         F.explode(
             F.array(
@@ -250,100 +250,89 @@ def triangle_count(edges_undirected: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
-    """Generic connected components over a ``(src, dst)`` edge relation
-    with keys of ANY orderable type (dedup.dedup_clusters is the bigint
-    doc-id specialization; this one also serves string-keyed graphs like
-    the PMI term graph).
+def _checkpoint_counting_changed(
+    ckpt: RoundCheckpointer, state: DataFrame
+) -> tuple[DataFrame, int]:
+    """Eagerly checkpoint one vertex-state round and return it with its
+    number of ``changed`` rows. The count rides on the checkpoint's own
+    job as an observed metric, so convergence costs no extra job."""
+    obs = Observation()
+    out = ckpt.checkpoint(state.observe(obs, F.count_if("changed").alias("n")))
+    return out, obs.get["n"]
 
-    Same scale construction as :func:`dedup.dedup_clusters` (round 11 —
-    formerly plain min-label propagation on the raw symmetric edge list):
-    one STAR-CONTRACTION pass (rep(v) = min(v, neighbors(v)), a single
-    hash aggregation; ``least``/``min`` order strings and bigints alike),
-    then iterative min-label propagation on the contracted graph — one
-    shuffle join + one hash agg per round, O(contracted diameter) rounds,
-    ``localCheckpoint`` truncating lineage; no driver-side graph state.
-    Near-dup/co-occurrence graphs are mostly stars and dense blobs around
-    a low-key anchor, so contraction collapses the bulk of the edge mass
-    to dropped self-loops and the loop runs ~2-3 rounds instead of ~8
-    (q278's A/B: 8 propagation rounds on the raw graph; the loop was pure
-    per-round scheduling overhead at sf0.1 — guide §1.2, fewer rounds
-    beats cheaper rounds). Exactness: the component's global-min node m
-    has rep(m) = m, survives contraction, and stays the min label; every
-    node inherits label(rep(v)) — fixpoint labels identical to
-    propagation on the raw edge list.
-    (Pointer-doubling path compression was measured here and REJECTED:
-    the extra label-of-label join per round cost more than the rounds it
-    saved on these low-diameter graphs — 8.4s vs 7.7s at sf0.1. On a
-    high-diameter graph the trade reverses; revisit if one appears.)
+
+def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
+    """Connected components over a ``(src, dst)`` edge relation with keys
+    of any orderable type (bigint doc ids in :func:`dedup.dedup_clusters`,
+    strings in the PMI term graph). Duplicate edges, both orientations and
+    self-loops are all allowed.
+
+    Vertex-centric min-label propagation (Pregel-style messages with
+    semi-naive evaluation). The state is ONE checkpointed vertex relation
+    ``(node, label, nbrs, changed)``:
+
+    - built by a single ``groupBy(src).agg(collect_set(dst))`` over the
+      symmetrized edges, with ``label = least(node, array_min(nbrs))``:
+      every node starts at the minimum of its closed neighbourhood, which
+      already spends the first propagation hop;
+    - ``changed`` marks the nodes whose label a neighbour may not have
+      seen yet. Initially that is ``label < node``: a node labelled with
+      its own key is a local minimum, and every neighbour already took it
+      into account when its own label was built.
+
+    Each round is one union and one ``groupBy(node)``, i.e. one exchange:
+    self rows carry ``nbrs`` and the old label, and every changed node
+    explodes ``nbrs`` into ``(neighbour, label)`` messages. The group
+    takes ``min(label)`` and sets ``changed = new < old``; only changed
+    nodes send next round. The number of changed rows is observed on the
+    round's eager ``localCheckpoint`` itself, so a round costs one
+    exchange and no separate convergence job. The loop stops when no
+    label changed, or after ``max_iters`` rounds (labels are then the
+    minimum within ``max_iters + 1`` hops). Superseded rounds' checkpoint
+    blocks are released as soon as the next round is materialized, and
+    the final round is handed to the shared registry because the returned
+    frame reads it lazily.
 
     Returns ``(node, cluster_id, cluster_size)`` with cluster_id = the
     minimum node key in the component.
     """
-    sym = _symmetrize(edges).distinct().persist()
     ckpt = RoundCheckpointer(edges)
-    # star contraction: node -> min(self, neighbors); every node of the
-    # symmetric edge list appears as src, so one groupBy covers the graph
-    reps = ckpt.checkpoint(
-        sym.groupBy("src")
-        .agg(F.least(F.col("src"), F.min("dst")).alias("rep"))
-        .select(F.col("src").alias("node"), "rep")
+    adj = _symmetrize(edges).groupBy(F.col("src").alias("node")).agg(
+        F.collect_set("dst").alias("nbrs")
     )
-    ra = reps.select(F.col("node").alias("src"), F.col("rep").alias("rep_a"))
-    rb = reps.select(F.col("node").alias("dst"), F.col("rep").alias("rep_b"))
-    cedges = ckpt.checkpoint(
-        sym.join(ra, "src")
-        .join(rb, "dst")
-        .filter(F.col("rep_a") != F.col("rep_b"))
-        .select(F.col("rep_a").alias("src"), F.col("rep_b").alias("dst"))
-        .distinct()  # already symmetric: sym was, and the rewrite is 1:1
-    )
-    sym.unpersist()  # contraction consumed it; the loop reads cedges only
-    labels = ckpt.checkpoint(
-        cedges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
+    label = F.least(F.col("node"), F.array_min("nbrs"))
+    state, n_changed = _checkpoint_counting_changed(
+        ckpt,
+        adj.select(
+            "node", label.alias("label"), "nbrs",
+            (label < F.col("node")).alias("changed"),
+        ),
     )
     for _ in range(max_iters):
-        neighbor = cedges.join(
-            labels, cedges["dst"] == labels["node"], "inner"
-        ).select(F.col("src").alias("node"), F.col("label"))
-        # eager checkpoint + limit(1) probe: a one-job-per-round variant
-        # (lazy checkpoint materialized by a FULL count of the changed
-        # join) was A/B-measured SLOWER at sf0.1 (q176 2.6 → 3.3 s, q278
-        # 5.1 → 5.5) and reverted — the probe job reads checkpointed
-        # blocks and executeTake stops at the first changed row (one
-        # reduce partition in the common still-converging case), which is
-        # cheaper than evaluating the full join every round. Labels are
-        # generic (string keys allowed), so the exact label-sum invariant
-        # dedup_clusters uses does not apply here.
-        new_labels = ckpt.checkpoint(
-            labels.unionByName(neighbor)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        ckpt.release(labels)  # convergence check was its last consumer
-        labels = new_labels
-        if changed == 0:
+        if n_changed == 0:
             break
-    # expand back to the full node set: label(v) = label(rep(v)); a rep
-    # with no contracted edge (component fully collapsed) keeps itself
-    node_labels = ckpt.checkpoint(
-        reps.join(
-            labels.select(F.col("node").alias("rep"), "label"), "rep", "left"
-        ).select("node", F.coalesce("label", "rep").alias("label"))
-    )
-    ckpt.release(labels)
-    ckpt.release(cedges)
-    ckpt.release(reps)
-    ckpt.disown_to_shared(node_labels)  # the returned join reads it lazily
+        own = state.select("node", "label", "nbrs", F.col("label").alias("old"))
+        msgs = state.filter("changed").select(
+            F.explode("nbrs").alias("node"), "label"
+        )
+        nxt = (
+            own.unionByName(msgs, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(
+                F.min("label").alias("label"),
+                F.first("nbrs", ignorenulls=True).alias("nbrs"),
+                F.min("old").alias("old"),
+            )
+            .select(
+                "node", "label", "nbrs",
+                (F.col("label") < F.col("old")).alias("changed"),
+            )
+        )
+        prev = state
+        state, n_changed = _checkpoint_counting_changed(ckpt, nxt)
+        ckpt.release(prev)
+    ckpt.disown_to_shared(state)  # the returned join reads it lazily
+    node_labels = state.select("node", "label")
     sizes = node_labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )
@@ -753,10 +742,10 @@ def component_census(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     |nodes|) means the similarity threshold is too loose and transitive
     closure is about to merge the corpus into one doc.
 
-    Scale shape: :func:`connected_components`' iterative min-label
-    propagation (one shuffle join + hash agg per round, localCheckpoint
-    lineage truncation, early exit on convergence), then two bounded
-    folds: component grain → size grain. Output per size:
+    Scale shape: :func:`connected_components`' vertex-state min-label
+    loop (one exchange and one eager checkpoint per round, convergence
+    observed on the checkpoint itself), then two bounded folds:
+    component grain → size grain. Output per size:
     (component_size, n_components)."""
     comp = connected_components(edges, max_iters=max_iters)
     return (

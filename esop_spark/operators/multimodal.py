@@ -37,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from esop_spark.operators.dedup import share_relation
+from esop_spark.operators.iterate import share_relation
 
 MEDIA_SCHEMA = StructType(
     [

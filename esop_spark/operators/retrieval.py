@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from esop_spark.operators.dedup import share_relation
+from esop_spark.operators.iterate import share_relation
 
 from esop_spark.operators.similarity import ann_topk
 

@@ -27,8 +27,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from esop_spark.operators.dedup import md5_hash32, share_relation
-from esop_spark.operators.iterate import RoundCheckpointer, shared_checkpoint
+from esop_spark.operators.dedup import md5_hash32
+from esop_spark.operators.iterate import (
+    RoundCheckpointer,
+    share_relation,
+    shared_checkpoint,
+)
 
 # Sampling decisions compare a hash bucket in [0, 1e6) against rate*1e6 —
 # 6 decimal digits of rate resolution, plenty for curation mixes.
@@ -133,7 +137,7 @@ def _distributed_stratum_rank(
     )
     # registry-registered so repeated sampler calls in one long session
     # don't pin rank-exchange blocks until JVM GC (released between
-    # queries by dedup.release_shared_relations)
+    # queries by iterate.release_shared_relations)
     ranged = shared_checkpoint(ranged)
     w_local = Window.partitionBy("_pid", strata_col).orderBy("_b", "_k")
     local = ranged.withColumn("_local_rn", F.row_number().over(w_local))

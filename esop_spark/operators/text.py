@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from esop_spark.operators.dedup import share_relation
+from esop_spark.operators.iterate import share_relation
 
 DEFAULT_STOPWORDS = ("a", "the")
 

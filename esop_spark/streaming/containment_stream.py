@@ -121,6 +121,7 @@ crash replay; Hadoop FileSystem I/O (file:/hdfs:/s3a:).
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
@@ -139,6 +140,7 @@ from esop_spark.operators.dedup import doc_shingle_counts, shingles
 from esop_spark.streaming.dedup_stream import (
     _EMPTY_IDS as _EMPTY,
     _delete_version,
+    _hadoop_fs,
     _read_versioned,
     _state_versions,
 )
@@ -163,6 +165,45 @@ _ROT_KEY = {
     "probe": "h",
     "pairs": "id_a",
 }
+
+
+# The rotation period decides which residue each base version holds, so
+# state written under one period is unreadable under another — and the
+# retention pass would delete bases it wrongly believes superseded. The
+# period is therefore persisted next to the state tables on the first
+# batch and checked wherever the state is opened.
+_META_FILE = "_containment_meta.json"
+
+
+def _period(compact_every: int) -> int:
+    return max(1, int(compact_every))
+
+
+def _check_period(spark, state_dir: str, period: int, record: bool = False):
+    """Raise ``ValueError`` if ``state_dir`` was written with another
+    rotation period; with ``record``, persist ``period`` when the state
+    has no metadata file yet (first batch of a fresh state)."""
+    fs, path = _hadoop_fs(spark, f"{state_dir}/{_META_FILE}")
+    if fs.exists(path):
+        stream = fs.open(path)
+        try:
+            meta = json.loads(
+                spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+            )
+        finally:
+            stream.close()
+        if meta["compact_every"] != period:
+            raise ValueError(
+                f"containment state at {state_dir} was written with "
+                f"compact_every={meta['compact_every']}, not {period}; the "
+                "rotation period cannot change over existing state"
+            )
+    elif record:
+        out = fs.create(path, False)
+        try:
+            out.write(bytearray(json.dumps({"compact_every": period}).encode()))
+        finally:
+            out.close()
 
 
 def _rotating_versions(spark, root: str, batch_id: int, period: int):
@@ -287,13 +328,16 @@ def read_containment_state(
     rounds 10–11; equals what the next batch would see (probe rows of
     dead shingles excluded, as the fold does). ``compact_every`` must
     match the running query's setting — it is the rotation period that
-    maps base versions to key residues."""
+    maps base versions to key residues — and a mismatch with the period
+    recorded in ``state_dir`` raises ``ValueError``."""
+    period = _period(compact_every)
+    _check_period(spark, state_dir, period)
 
     def chain(t: str) -> DataFrame:
         vmap, _, deltas = _rotating_versions(
-            spark, f"{state_dir}/{t}", 1 << 62, compact_every
+            spark, f"{state_dir}/{t}", 1 << 62, period
         )
-        return _chain(spark, state_dir, t, vmap, deltas, compact_every)
+        return _chain(spark, state_dir, t, vmap, deltas, period)
 
     hist = chain(table)
     if table == "counts":  # append-only fact rows, one per seen doc
@@ -331,7 +375,7 @@ def _containment_fn_factory(
     compact_every: int = 10,
     files_per_version: int = 8,
 ):
-    period = max(1, int(compact_every))
+    period = _period(compact_every)
     # every state write coalesces to this many files. Inside foreachBatch
     # AQE is unavailable (Spark disables it for streaming plans), so each
     # shuffle keeps the session's full partition count and an uncoalesced
@@ -345,6 +389,7 @@ def _containment_fn_factory(
 
     def fn(batch_docs: DataFrame, batch_id: int) -> None:
         spark = batch_docs.sparkSession
+        _check_period(spark, state_dir, period, record=True)
         # estimate-driven auto-broadcast is OFF for this batch (restored
         # in the finally): every join in this function either carries an
         # explicit broadcast hint on a batch-bounded side or must shuffle
@@ -706,7 +751,10 @@ def containment_compacted_query(
     :func:`read_containment_state` (pass the same ``compact_every``);
     ``compact_every`` is the fold-rotation period — the
     read-amplification / write-amplification dial (1 ≡ full rewrite
-    every batch). Returns the started query."""
+    every batch). It is recorded in ``state_dir`` on the first batch; a
+    restart with a different period raises ``ValueError`` before any
+    batch runs, leaving the state untouched. Returns the started query."""
+    _check_period(documents.sparkSession, state_dir, _period(compact_every))
     fn = _containment_fn_factory(
         pairs_dir, state_dir, n, probe_k, int(min_hits), int(max_df),
         text_col, id_col, int(compact_every), int(files_per_version),

@@ -270,3 +270,47 @@ def test_containment_crash_replay_is_idempotent(spark, tmp_path):
     second = snap()
     assert first == second
     assert set(first[0]) == _batch_candidates(docs)
+
+
+def test_containment_changed_compact_every_fails_fast(spark, tmp_path):
+    """A restart with a different rotation period must raise before any
+    batch runs, leaving every state file as it was — under the new
+    period the retention pass would otherwise delete live bases."""
+    import pytest
+
+    from esop_spark.streaming.containment_stream import read_containment_state
+
+    docs = _corpus(spark)
+    src, pairs, state, ckpt = _dirs(tmp_path)
+    os.makedirs(src, exist_ok=True)
+    docs.filter(F.col("doc_id") < 3).coalesce(1).write.parquet(
+        os.path.join(src, "a")
+    )
+    _drain(spark, os.path.join(src, "*"), pairs, state, ckpt, compact_every=2)
+
+    def files():
+        return {
+            os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+            for d, _, fs in os.walk(state)
+            for f in fs
+        }
+
+    before = files()
+    assert before
+    docs.filter(F.col("doc_id") >= 3).coalesce(1).write.parquet(
+        os.path.join(src, "b")
+    )
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(os.path.join(src, "*"))
+    )
+    with pytest.raises(ValueError, match="compact_every=2"):
+        containment_compacted_query(stream, pairs, state, ckpt, compact_every=3)
+    with pytest.raises(ValueError, match="compact_every=2"):
+        read_containment_state(spark, state, "counts", compact_every=3)
+    assert files() == before
+    # the recorded period still opens the state
+    assert read_containment_state(
+        spark, state, "counts", compact_every=2
+    ).count() == 3

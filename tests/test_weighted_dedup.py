@@ -16,6 +16,16 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+@pytest.mark.parametrize("tau", [1e-5, 1e-4, 5e-4, 0.5, 0.9])
+def test_weighted_jaccard_prune_floor_keeps_rounding_slack(tau):
+    # a true pair's unrounded J_w can sit at tau - 5e-7 (the final filter
+    # rounds to 6 places): both prunes must compare against a floor that
+    # never exceeds it, at tiny thresholds too
+    floor = dedup._wj_prune_floor(tau)
+    assert floor <= tau - 5e-7
+    assert floor >= tau * 0.999 - 1e-6  # still a tight prune
+
+
 def test_weighted_jaccard_separates_tf_profiles(spark):
     # identical WORD SETS everywhere — set jaccard is 1.0 for every pair —
     # but only (0,1) share a tf profile; weighted jaccard must separate.

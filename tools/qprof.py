@@ -7,9 +7,12 @@ Usage:
   python tools/qprof.py q301_cosine_pairs_lsh q48_dedup_clusters \
       [--sf /root/testdata/sf0.1] [--plans r11:before] [--trials 5]
 
-The job count comes from running each timed trial in its own job group and
-asking the status tracker for the group's job ids — one number that explains
-"why is this 5 s on 2,000 rows" faster than any timeline.
+Each timed trial runs in two job groups: one around the ``queries()`` call
+that BUILDS the DataFrame (operators that materialize intermediate rounds
+eagerly fire their jobs here) and one around the noop write that EXECUTES
+it. The status tracker's job ids per group give ``build_jobs=`` and
+``exec_jobs=`` per trial, next to the build and total seconds — numbers
+that explain "why is this 5 s on 2,000 rows" faster than any timeline.
 """
 
 from __future__ import annotations
@@ -92,19 +95,31 @@ def main() -> None:
             with open(os.path.join(plan_dir, f"{name}_{suffix}.txt"), "w") as fh:
                 fh.write(txt)
         trials = []
-        jobs = []
+        builds = []
+        build_jobs = []
+        exec_jobs = []
         for t in range(args.trials):
-            group = f"qprof-{name}-{t}-{uuid.uuid4().hex[:6]}"
-            sc.setJobGroup(group, name)
-            t0 = time.perf_counter()
-            qs[name](spark, args.sf).write.format("noop").mode("overwrite").save()
-            trials.append(time.perf_counter() - t0)
-            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-            sc.setJobGroup(None, None)
+            tag = f"qprof-{name}-{t}-{uuid.uuid4().hex[:6]}"
+            try:
+                sc.setJobGroup(f"{tag}-build", name)
+                t0 = time.perf_counter()
+                df = qs[name](spark, args.sf)
+                t1 = time.perf_counter()
+                sc.setJobGroup(f"{tag}-exec", name)
+                df.write.format("noop").mode("overwrite").save()
+                t2 = time.perf_counter()
+            finally:
+                sc.setJobGroup(None, None)
+            builds.append(t1 - t0)
+            trials.append(t2 - t0)
+            tracker = sc.statusTracker()
+            build_jobs.append(len(tracker.getJobIdsForGroup(f"{tag}-build")))
+            exec_jobs.append(len(tracker.getJobIdsForGroup(f"{tag}-exec")))
         trials_r = [round(x, 3) for x in trials]
         print(
             f"{name}: min={min(trials_r)} med={sorted(trials_r)[len(trials_r)//2]}"
-            f" trials={trials_r} jobs/trial={jobs}",
+            f" trials={trials_r} build_s={[round(x, 3) for x in builds]}"
+            f" build_jobs={build_jobs} exec_jobs={exec_jobs}",
             flush=True,
         )
     spark.stop()
