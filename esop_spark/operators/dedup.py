@@ -33,8 +33,6 @@ from esop_spark.operators.iterate import (
 )
 from esop_spark.plans.barriers import pin_projection_barrier
 
-_share = share_relation  # short internal alias (historical call sites)
-
 # 31-bit hash domain: a*x+b stays < 2^62, safe under ANSI int64 arithmetic.
 HASH_P = 2147483647  # 2^31 - 1 (Mersenne prime)
 
@@ -249,7 +247,7 @@ def ngram_jaccard_pairs(
             .agg(F.count(F.lit(1)).alias("shared"))
         )
         return _jaccard_from_shared(shared, counts, threshold, id_col)
-    sh = _share(sh)  # reused by the df agg, the capped join, and the hot leg
+    sh = share_relation(sh)  # reused by the df agg, the capped join, and the hot leg
     # the hot-key list is tiny (df > max_df ⇒ at most |corpus|/max_df keys);
     # checkpoint it eagerly so the document-frequency aggregation runs once
     # for both the anti-join (rare side) and semi-join (hot postings)
@@ -615,7 +613,7 @@ def _lsh_candidates(
     # Registered for deferred release: the verify leg runs at the caller's
     # materialization time, so the relation is freed by the next
     # release_shared_relations() hook, not here.
-    base = _share(shingles(documents, n, text_col, id_col))
+    base = share_relation(shingles(documents, n, text_col, id_col))
     sig = minhash_signatures(
         documents, num_hashes, n, text_col, id_col, hash_family, base=base
     )
@@ -636,7 +634,7 @@ def _bucket_pairs(buckets: DataFrame, id_col: str, max_bucket: int) -> DataFrame
     sizes = buckets.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("_bsz"), F.min(id_col).alias("_anchor")
     )
-    sized = _share(buckets.join(sizes, ["band", "bucket"]))
+    sized = share_relation(buckets.join(sizes, ["band", "bucket"]))
     small = sized.filter(F.col("_bsz") <= max_bucket)
     a = small.alias("a")
     b = small.alias("b")
@@ -986,7 +984,7 @@ def _weighted_lsh_candidates(
     # one persisted replicated-element materialization feeds the signature
     # aggregation, the per-doc capped-mass counts, and the verify leg —
     # registered for deferred release like every shared relation
-    base = _share(rep)
+    base = share_relation(rep)
     sig = minhash_signatures(
         documents, num_hashes, id_col=id_col, hash_family=hash_family, base=base
     )
@@ -1096,7 +1094,7 @@ def containment_pairs(
     restricted to candidates, identical to before. ``num_hashes``/
     ``bands``/``hash_family`` are retained for signature compatibility but
     no longer drive candidate generation."""
-    base = _share(shingles(documents, n, text_col, id_col))
+    base = share_relation(shingles(documents, n, text_col, id_col))
     counts = doc_shingle_counts(documents, n, text_col, id_col)
     candidates = containment_candidates(
         base, id_col, k=probe_k, min_hits=min_hits, max_df=max_df, counts=counts
@@ -1546,7 +1544,7 @@ def incremental_minhash_pairs(
     larger than ``max_bucket`` route new members to the bucket's min-id
     anchor (star pairing), the same hot-bucket guard as _lsh_candidates.
     """
-    base = _share(shingles(documents, n, text_col, id_col))
+    base = share_relation(shingles(documents, n, text_col, id_col))
     sig = minhash_signatures(
         documents, num_hashes, n, text_col, id_col, hash_family, base=base
     )
@@ -1558,7 +1556,7 @@ def incremental_minhash_pairs(
     sizes = old_b.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("_bsz"), F.min(id_col).alias("_anchor")
     )
-    annotated_new = _share(new_b.join(sizes, ["band", "bucket"]))
+    annotated_new = share_relation(new_b.join(sizes, ["band", "bucket"]))
     pairs_small = (
         annotated_new.filter(F.col("_bsz") <= max_bucket)
         .join(
@@ -2114,7 +2112,7 @@ def sparse_cosine_topk(
         .groupBy("did", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    tf = _share(tf)
+    tf = share_relation(tf)
     norms = tf.groupBy("did").agg(
         F.sum(F.col("tf") * F.col("tf")).alias("n2")
     )

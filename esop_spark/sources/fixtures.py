@@ -13,7 +13,8 @@ Every SQL string in ``FIXTURE_SQL`` is written in the dialect intersection of
 Spark SQL and DuckDB (``||`` concat, ``CAST .. AS STRING``, ``md5``, integer
 arithmetic) and is used verbatim by both engines:
 
-- Spark: ``register_fixture_views(spark)`` creates temp views.
+- Spark: ``register_fixture_views(spark)`` creates plain temp views (nothing
+  is cached; each query derives what it reads inside its own plan).
 - DuckDB: ``oracle_with_clause(...)`` builds a ``WITH`` prefix for oracle SQL.
 
 Fixture-design requirements mirror FIXTURES.md: object_keys overlap across
@@ -47,10 +48,14 @@ BASE_TABLES = [
 # backup = f(l_suppkey), object_key = f(l_partkey, l_orderkey) so the same
 # immutable object appears in several backups; size/hash are functions of the
 # object_key alone so every reference to an object agrees on its metadata.
+# Every output column is a function of the integer key (l_suppkey % 4,
+# l_partkey, l_orderkey % 10), and the row is injective in it (backup_name
+# and object_key spell the key out), so the DISTINCT runs on the three
+# integers and the strings and md5 are built once per distinct key.
 _MANIFEST_ENTRIES = """
-SELECT DISTINCT
-  'backup-' || CAST(l_suppkey % 4 AS STRING) AS backup_name,
-  1600000000000 + (l_suppkey % 4) * 86400000 AS backup_ts,
+SELECT
+  'backup-' || CAST(b AS STRING) AS backup_name,
+  1600000000000 + b * 86400000 AS backup_ts,
   CASE
     WHEN l_partkey % 31 = 0 THEN 'system'
     WHEN l_partkey % 31 = 1 THEN 'system_schema'
@@ -58,10 +63,13 @@ SELECT DISTINCT
     ELSE 'ks' || CAST(l_partkey % 3 AS STRING)
   END AS keyspace,
   't' || CAST(l_partkey % 7 AS STRING) AS table_name,
-  'obj-' || CAST(l_partkey AS STRING) || '-' || CAST(l_orderkey % 10 AS STRING) AS object_key,
-  (l_partkey % 997) * 100 + (l_orderkey % 10) + 13 AS size,
-  md5('obj-' || CAST(l_partkey AS STRING) || '-' || CAST(l_orderkey % 10 AS STRING)) AS hash
-FROM lineitem
+  'obj-' || CAST(l_partkey AS STRING) || '-' || CAST(o AS STRING) AS object_key,
+  (l_partkey % 997) * 100 + o + 13 AS size,
+  md5('obj-' || CAST(l_partkey AS STRING) || '-' || CAST(o AS STRING)) AS hash
+FROM (
+  SELECT DISTINCT l_suppkey % 4 AS b, l_partkey, l_orderkey % 10 AS o
+  FROM lineitem
+) k
 """
 
 # -- manifests: one row per backup with prefix collisions (Manifest.java:254-283)
@@ -154,17 +162,23 @@ WHERE table_name <> 't6'
 # RemoveBackupOperation.java:100-190). 2 dcs × 3 nodes each; object keys are
 # shared across backups AND across nodes (replica copies of the same
 # immutable sstable); backup_ts jitters per node so per-node --oldest is a
-# real per-node decision; size is a function of object_key alone.
+# real per-node decision; size is a function of object_key alone. As for
+# manifest_entries, the DISTINCT runs on the integer key the row is an
+# injective function of (dc = node % 2).
 _FLEET_MANIFEST_ENTRIES = """
-SELECT DISTINCT
+SELECT
   'cluster1' AS cluster,
-  'dc' || CAST(l_suppkey % 2 AS STRING) AS dc,
-  'node-' || CAST(l_suppkey % 6 AS STRING) AS node,
-  'backup-' || CAST(l_orderkey % 3 AS STRING) AS backup_name,
-  1600000000000 + (l_orderkey % 3) * 86400000 + (l_suppkey % 6) * 1000 AS backup_ts,
-  'obj-' || CAST(l_partkey AS STRING) || '-' || CAST(l_orderkey % 10 AS STRING) AS object_key,
-  (l_partkey % 997) * 100 + (l_orderkey % 10) + 13 AS size
-FROM lineitem
+  'dc' || CAST(n % 2 AS STRING) AS dc,
+  'node-' || CAST(n AS STRING) AS node,
+  'backup-' || CAST(b AS STRING) AS backup_name,
+  1600000000000 + b * 86400000 + n * 1000 AS backup_ts,
+  'obj-' || CAST(l_partkey AS STRING) || '-' || CAST(o AS STRING) AS object_key,
+  (l_partkey % 997) * 100 + o + 13 AS size
+FROM (
+  SELECT DISTINCT l_suppkey % 6 AS n, l_orderkey % 3 AS b, l_partkey,
+                  l_orderkey % 10 AS o
+  FROM lineitem
+) k
 """
 
 # -- snapshot_schemas: per-backup table schema digests (Snapshots.java:643-656)
@@ -271,46 +285,31 @@ def load_base_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 _BASE_LOADED: dict[str, tuple[str, SparkSession, dict[str, DataFrame]]] = {}
 
 # sf_dir most recently registered per session — registration is idempotent
-# and re-running it per query would re-read parquet footers and re-plan the
-# DISTINCT derivation every time.
+# and re-running it per query would re-read parquet footers and re-analyze
+# every view's SQL.
 _REGISTERED: dict[str, str] = {}
 
 
 def register_fixture_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register base tables + derived esop-style fixture views (cached).
+    """Register base tables + derived esop-style fixture views (memoized).
 
-    ``manifest_entries`` (the only expensive derivation — a DISTINCT shuffle
-    over lineitem) is Spark-cached so every downstream query in the session
-    reuses one materialization.
+    The views are plain: nothing is cached, so each query derives the
+    fixtures it reads inside its own plan, as a cold esop command does.
     """
-    key = id(spark.sparkContext)
-    cache_key = f"{key}:{sf_dir}"
-    if _REGISTERED.get(str(key)) == cache_key:
+    key = str(id(spark.sparkContext))
+    if _REGISTERED.get(key) == sf_dir:
         return
-    if str(key) in _REGISTERED:  # sf_dir switch: drop the stale cache
-        try:
-            spark.catalog.uncacheTable("manifest_entries")
-        except Exception:
-            pass
     load_base_tables(spark, sf_dir)
     for name in _FIXTURE_ORDER:
         spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {FIXTURE_SQL[name]}")
-    spark.catalog.cacheTable("manifest_entries")
-    _REGISTERED[str(key)] = cache_key
+    _REGISTERED[key] = sf_dir
 
 
 def reset_registration_cache() -> None:
-    """Forget the per-session registration memo. Bench reset mode calls
-    ``spark.catalog.clearCache()`` between queries, which silently drops
-    the ``manifest_entries`` cache; without clearing the memo the next
-    ``register_fixture_views`` would be skipped and every esop-family
-    query would run uncached for the rest of the session."""
+    """Forget the view-registration memo, so the next
+    ``register_fixture_views`` registers the views again. It guards no
+    cache: the fixture views hold no materialized data."""
     _REGISTERED.clear()
-
-
-def fixture_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    register_fixture_views(spark, sf_dir)
-    return spark.table(name)
 
 
 def oracle_with_clause(*names: str) -> str:

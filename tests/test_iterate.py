@@ -115,7 +115,7 @@ def test_release_shared_relations_frees_checkpoints_too(spark):
     dedup.release_shared_relations()  # drain earlier tests' registrations
     base = _n_persistent(spark)
     shared_checkpoint(spark.range(100)).count()
-    rel = dedup._share(spark.range(50).withColumn("z", F.col("id") % 5))
+    rel = dedup.share_relation(spark.range(50).withColumn("z", F.col("id") % 5))
     rel.count()
     assert _n_persistent(spark) >= base + 2
     dedup.release_shared_relations()

@@ -6,11 +6,11 @@ were all discovered by the BENCH's reset machinery; this pins the same
 guarantee at the library boundary: run a basket of assorted queries through
 ONE SparkSession with NO bench resets, call
 ``dedup.release_shared_relations()`` once, and the persistent-RDD set must
-return to its baseline — the one intentional long-lived cache (the
-``manifest_entries`` fixture derivation) and nothing else.
+return to its baseline. The fixture views are plain (nothing cached), so
+the baseline holds no long-lived cache.
 
-The basket deliberately covers every block-pinning surface: ``_share``-d
-corpus relations (q22/q23), ``share_relation``-ed graph/text relations
+The basket deliberately covers every block-pinning surface:
+``share_relation``-ed corpus relations (q22/q23) and graph/text relations
 (q159/q166/q54), one-shot ``shared_checkpoint``s (q64 splits prefix sum,
 q75 stratum rank), and ``disown_to_shared``-ed final rounds of iterative
 loops (q48 clusters, q278 component census).
@@ -27,17 +27,17 @@ from esop_spark.operators.dedup import release_shared_relations
 SF_DIR = "/root/testdata/sf0.001"
 
 BASKET = [
-    "q01_list_backups",          # fixture views + manifest_entries cache
+    "q01_list_backups",          # fixture views (plain, no cache)
     "q21_dedup_exact",
-    "q22_dedup_minhash_lsh",     # _share-d shingle/signature relations
-    "q23_ngram_jaccard",         # _share-d exact shingle relation
+    "q22_dedup_minhash_lsh",     # shared shingle/signature relations
+    "q23_ngram_jaccard",         # shared exact shingle relation
     "q48_dedup_clusters",        # RoundCheckpointer + disown_to_shared
     "q64_train_split",           # splits shared_checkpoint (prefix sum)
     "q75_temperature_resample",  # sampler shared_checkpoint (rank exchange)
     "q159_pagerank",             # share_relation-ed edge/node relations
     "q166_triangles",            # share_relation-ed oriented edges
     "q54_pii_scan",
-    "q304_weighted_minhash_lsh",  # _share-d replicated-element relation
+    "q304_weighted_minhash_lsh",  # shared replicated-element relation
     "q305_densest_subgraph",     # best-round retention + disown_to_shared
 ]
 
@@ -49,8 +49,8 @@ def _persistent_ids(spark) -> set:
 
 def test_library_session_returns_to_baseline(spark):
     qs = entry_mod.queries()
-    # Materialize the one intentional long-lived cache first so it is part
-    # of the baseline, not a diff entry.
+    # Register the fixture views and touch the base tables first, so the
+    # baseline is taken after the session's first-use state.
     qs["q01_list_backups"](spark, SF_DIR).collect()
     release_shared_relations()
     base = _persistent_ids(spark)

@@ -3,8 +3,13 @@ backup twice → list in 4 formats → remove oldest → only unique files gone)
 
 import json
 import os
+import uuid
 
+import __spark_entry__ as entry_mod
 from esop_spark.operators import entities, manifest, pipelines, topology
+from esop_spark.operators.dedup import release_shared_relations
+from esop_spark.sources import fixtures
+from tests.test_library_session import SF_DIR
 from tests.test_pipelines import BASE_FILES, TABLE_ID, make_tree
 
 
@@ -86,3 +91,31 @@ def test_schema_consensus(spark):
     t2 = spark.createDataFrame([("n1", "sv1"), ("n2", "sv2")], "h string, schema_version string")
     assert topology.schema_consensus(t1) is True
     assert topology.schema_consensus(t2) is False
+
+
+def test_cold_upload_diff_job_budget(spark):
+    """A cold esop ``backup`` command (q03 upload diff) after bench.py's
+    per-command reset derives manifest_entries inside its own plan: no
+    cache is filled, and build + collect stay within four Spark jobs.
+    The base parquet tables are registered first, as bench.py's warm-up
+    leaves them: the reset keeps that memo, and a first read of each
+    table's schema costs a job of its own."""
+    fixtures.load_base_tables(spark, SF_DIR)
+    release_shared_relations()
+    spark.catalog.clearCache()
+    fixtures.reset_registration_cache()
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in list(jmap.keySet().toArray()):
+        if jmap.containsKey(rid):
+            jmap.get(rid).unpersist(False)
+    sc = spark.sparkContext
+    group = f"cold-q03-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "q03_upload_diff build + collect")
+    try:
+        rows = entry_mod.queries()["q03_upload_diff"](spark, SF_DIR).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert rows
+    assert jobs <= 4, f"{jobs} jobs for one cold q03_upload_diff"
+    assert not spark.catalog.isCached("manifest_entries")

@@ -65,9 +65,7 @@ def main() -> int:
             # checkpoints, then purge any remaining persistent RDD blocks
             # (disowned final rounds of iterative loops) — mirrors
             # bench.py's reset so a 300-query sweep doesn't accumulate
-            # pinned blocks until JVM GC. The fixture cache's CacheManager
-            # ENTRY survives (only its blocks drop; they re-materialize
-            # lazily on next touch), so registration stays memoized.
+            # pinned blocks until JVM GC.
             release_shared_relations()
             jmap = spark.sparkContext._jsc.getPersistentRDDs()
             for rid in list(jmap.keySet().toArray()):
