@@ -51,7 +51,7 @@ UPLOAD_BACKUP = "backup-2"
 
 
 def _fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    fx.register_fixture_views(spark, sf_dir)
+    fx.register_fixture_views(spark, sf_dir, name)
     return spark.table(name)
 
 
@@ -68,14 +68,14 @@ def q02_removable_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q03_upload_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fx.register_fixture_views(spark, sf_dir)
+    fx.register_fixture_views(spark, sf_dir, "manifest_entries", "remote_objects")
     return diff.upload_diff(
         spark.table("manifest_entries"), spark.table("remote_objects"), UPLOAD_BACKUP
     )
 
 
 def q04_restore_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fx.register_fixture_views(spark, sf_dir)
+    fx.register_fixture_views(spark, sf_dir, "manifest_entries", "local_files")
     manifest_files = (
         spark.table("manifest_entries")
         .filter(F.col("backup_name") == DIFF_BACKUP)
@@ -305,7 +305,7 @@ def q35_import_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J9: restore entities joined to the live table catalog — rows for
     tables that no longer exist locally (t6) are dropped, and each surviving
     row carries the LOCAL table id (the enrichment id-rewrite, P14)."""
-    fx.register_fixture_views(spark, sf_dir)
+    fx.register_fixture_views(spark, sf_dir, "manifest_entries", "local_tables")
     ents = (
         spark.table("manifest_entries")
         .filter(F.col("backup_name") == "backup-0")

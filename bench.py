@@ -137,8 +137,8 @@ def main() -> None:
 
     # Warm the JVM, parquet footers and the fixture views so per-query
     # numbers measure the steady-state plan, not first-touch JIT/IO (two
-    # passes: the first registers the base tables and fixture views, the
-    # second warms codegen).
+    # passes: the first registers the base tables and the manifest_entries
+    # view, the second warms codegen).
     for _ in range(2):
         qs["q01_list_backups"](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
@@ -146,13 +146,13 @@ def main() -> None:
     # reverts to the shared-session mode): before each query's untimed
     # warmup, release the dedup module's shared relations, clear the Spark
     # cache, and drop the fixture-registration memo so the warmup registers
-    # the fixture views again. In a 300-query session the
+    # the fixture views it reads again. In a 300-query session the
     # CacheManager otherwise accumulates every query's never-unpersisted
     # relations until eviction pressure distorts later measurements — the
     # round-6 q22 record (47.6 s recorded vs 1.6-1.9 s on every re-run)
     # was adjudicated an environment artifact, and this removes the
     # engine's exposure to it. The reset cost lands in the untimed warmup
-    # (which re-registers the fixture views), so timed trials still
+    # (which re-registers the query's fixture views), so timed trials still
     # measure the steady-state warm plan; each trial derives the fixtures
     # it reads inside its own plan.
     reset = os.environ.get("SPARK_GRAFT_BENCH_RESET", "1") != "0"

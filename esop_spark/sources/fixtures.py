@@ -13,9 +13,14 @@ Every SQL string in ``FIXTURE_SQL`` is written in the dialect intersection of
 Spark SQL and DuckDB (``||`` concat, ``CAST .. AS STRING``, ``md5``, integer
 arithmetic) and is used verbatim by both engines:
 
-- Spark: ``register_fixture_views(spark)`` creates plain temp views (nothing
-  is cached; each query derives what it reads inside its own plan).
+- Spark: ``register_fixture_views(spark, sf_dir, *names)`` creates plain temp
+  views (nothing is cached; each query derives what it reads inside its own
+  plan). A query names the views it reads and only those, with their
+  dependencies, are registered; no names registers all nine.
 - DuckDB: ``oracle_with_clause(...)`` builds a ``WITH`` prefix for oracle SQL.
+
+``_fixture_closure`` is the one definition of which fixture reads which, so
+both engines derive the same dependency set.
 
 Fixture-design requirements mirror FIXTURES.md: object_keys overlap across
 backups (immutable-SSTable reuse → reclaimable != sum(size)); remote listings
@@ -216,6 +221,24 @@ _FIXTURE_ORDER = [
     "fleet_manifest_entries",
 ]
 
+# The fixtures whose SQL reads another fixture view: all of them read
+# manifest_entries. Shared by the Spark registration and the oracle WITH.
+_READS_MANIFEST_ENTRIES = frozenset(
+    ("remote_objects", "local_files", "local_tables", "snapshot_schemas")
+)
+
+
+def _fixture_closure(names) -> list[str]:
+    """The fixtures ``names`` need, dependencies included, in derivation
+    order. Unknown names raise ``KeyError``."""
+    needed = set(names)
+    unknown = needed - FIXTURE_SQL.keys()
+    if unknown:
+        raise KeyError(f"unknown fixture view(s): {sorted(unknown)}")
+    if needed & _READS_MANIFEST_ENTRIES:
+        needed.add("manifest_entries")
+    return [n for n in _FIXTURE_ORDER if n in needed]
+
 
 def load_base_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register the driver parquet tables as temp views and return them.
@@ -243,6 +266,12 @@ def load_base_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     cached = _BASE_LOADED.get(key)
     if cached is not None and cached[0] == sf_dir and cached[1] is spark:
         return cached[2]
+    if cached is not None:
+        # the fixture views hold analyzed plans over the old tables: drop
+        # them and their memo, so none reads the old sf_dir
+        for name in FIXTURE_SQL:
+            spark.catalog.dropTempView(name)
+        _REGISTERED.pop(key, None)
 
     out: dict[str, DataFrame] = {}
     for name in BASE_TABLES:
@@ -284,31 +313,36 @@ def load_base_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # id(session) -> (sf_dir, pinned session, table dict)
 _BASE_LOADED: dict[str, tuple[str, SparkSession, dict[str, DataFrame]]] = {}
 
-# sf_dir most recently registered per session — registration is idempotent
-# and re-running it per query would re-read parquet footers and re-analyze
-# every view's SQL.
-_REGISTERED: dict[str, str] = {}
+# fixture views registered per session: id(session) -> (pinned session,
+# names). load_base_tables drops a session's entry when it switches sf_dir.
+_REGISTERED: dict[str, tuple[SparkSession, set[str]]] = {}
 
 
-def register_fixture_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register base tables + derived esop-style fixture views (memoized).
+def register_fixture_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
+    """Register the base tables and the fixture views ``names`` read, with
+    their dependencies (memoized per session, sf_dir and view).
 
-    The views are plain: nothing is cached, so each query derives the
-    fixtures it reads inside its own plan, as a cold esop command does.
+    With no names it registers all nine fixture views. A query names the
+    views it reads, so a cold command analyzes only those (on a 4-core
+    box, all nine cost ~0.1 s, one view 10-20 ms). The views are plain:
+    nothing is cached, so each query derives the fixtures it reads inside
+    its own plan, as a cold esop command does. Each view is registered
+    from its analyzed DataFrame, so a read does not parse and analyze the
+    SQL again. Temp views belong to the session, so the memo is keyed on
+    it.
     """
-    key = str(id(spark.sparkContext))
-    if _REGISTERED.get(key) == sf_dir:
-        return
     load_base_tables(spark, sf_dir)
-    for name in _FIXTURE_ORDER:
-        spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {FIXTURE_SQL[name]}")
-    _REGISTERED[key] = sf_dir
+    done = _REGISTERED.setdefault(str(id(spark)), (spark, set()))[1]
+    for name in _fixture_closure(names or _FIXTURE_ORDER):
+        if name not in done:
+            spark.sql(FIXTURE_SQL[name]).createOrReplaceTempView(name)
+            done.add(name)
 
 
 def reset_registration_cache() -> None:
     """Forget the view-registration memo, so the next
-    ``register_fixture_views`` registers the views again. It guards no
-    cache: the fixture views hold no materialized data."""
+    ``register_fixture_views`` registers the views it is asked for again.
+    It guards no cache: the fixture views hold no materialized data."""
     _REGISTERED.clear()
 
 
@@ -316,15 +350,5 @@ def oracle_with_clause(*names: str) -> str:
     """Build a DuckDB ``WITH`` prefix defining the requested fixtures (plus
     their dependencies) for oracle SQL. Base tables are pre-registered views
     in the driver's DuckDB session."""
-    needed: list[str] = []
-    for n in _FIXTURE_ORDER:
-        if n in names or (
-            n == "manifest_entries"
-            and any(
-                x in names
-                for x in ("remote_objects", "local_files", "snapshot_schemas", "local_tables")
-            )
-        ):
-            needed.append(n)
-    parts = [f"{n} AS ({FIXTURE_SQL[n]})" for n in needed]
+    parts = [f"{n} AS ({FIXTURE_SQL[n]})" for n in _fixture_closure(names)]
     return "WITH " + ",\n".join(parts) + "\n"

@@ -4,6 +4,7 @@ reference's global-removal embedded tests (RemoveBackupOperation.java:100-190,
 LocalFileRestorer.java:279-313)."""
 
 import os
+import shutil
 
 import pytest
 
@@ -24,18 +25,28 @@ def _files(node: str, tag: str):
     return base
 
 
-@pytest.fixture()
-def fleet_bucket(spark, tmp_path):
-    base = tmp_path / "buckets"
+@pytest.fixture(scope="module")
+def fleet_template(spark, tmp_path_factory):
+    """The fleet bucket, backed up once per module (16 backups)."""
+    root = tmp_path_factory.mktemp("fleet")
+    base = root / "buckets"
     for dc, node in NODES:
         node_dir = base / "cluster1" / dc / node
         for tag, ts in (("snap1", 1000), ("snap2", 2000)):
-            data = tmp_path / "data" / node / tag
+            data = root / "data" / node / tag
             make_tree(str(data), tag, _files(node, tag))
             pipelines.backup(
                 spark, [str(data)], tag, str(node_dir),
                 schema_version="sv1", ts_millis=ts,
             )
+    return base
+
+
+@pytest.fixture()
+def fleet_bucket(fleet_template, tmp_path):
+    """A private copy of the template: removal tests mutate their bucket."""
+    base = tmp_path / "buckets"
+    shutil.copytree(fleet_template, base)
     return str(base)
 
 

@@ -1,9 +1,15 @@
 """Listing render goldens + removal e2e (mirrors BaseListingRemovalTest.java:
 backup twice → list in 4 formats → remove oldest → only unique files gone)."""
 
+import inspect
 import json
 import os
+import random
+import re
 import uuid
+
+import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 from esop_spark.operators import entities, manifest, pipelines, topology
@@ -11,6 +17,8 @@ from esop_spark.operators.dedup import release_shared_relations
 from esop_spark.sources import fixtures
 from tests.test_library_session import SF_DIR
 from tests.test_pipelines import BASE_FILES, TABLE_ID, make_tree
+
+OTHER_SF_DIR = SF_DIR.replace("sf0.001", "sf0.01")
 
 
 def test_render_report_four_formats(spark):
@@ -93,13 +101,12 @@ def test_schema_consensus(spark):
     assert topology.schema_consensus(t2) is False
 
 
-def test_cold_upload_diff_job_budget(spark):
-    """A cold esop ``backup`` command (q03 upload diff) after bench.py's
-    per-command reset derives manifest_entries inside its own plan: no
-    cache is filled, and build + collect stay within four Spark jobs.
-    The base parquet tables are registered first, as bench.py's warm-up
-    leaves them: the reset keeps that memo, and a first read of each
-    table's schema costs a job of its own."""
+def _cold_jobs(spark, name):
+    """Rows and Spark jobs of one cold command: bench.py's per-command
+    reset, then build + collect in one job group. The base parquet tables
+    are registered first, as bench.py's warm-up leaves them: the reset
+    keeps that memo, and a first read of each table's schema costs a job
+    of its own."""
     fixtures.load_base_tables(spark, SF_DIR)
     release_shared_relations()
     spark.catalog.clearCache()
@@ -109,13 +116,179 @@ def test_cold_upload_diff_job_budget(spark):
         if jmap.containsKey(rid):
             jmap.get(rid).unpersist(False)
     sc = spark.sparkContext
-    group = f"cold-q03-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "q03_upload_diff build + collect")
+    group = f"cold-{name}-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, f"{name} build + collect")
     try:
-        rows = entry_mod.queries()["q03_upload_diff"](spark, SF_DIR).collect()
+        rows = entry_mod.queries()[name](spark, SF_DIR).collect()
     finally:
         sc.setJobGroup(None, None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cold_upload_diff_job_budget(spark):
+    """A cold esop ``backup`` command (q03 upload diff) derives
+    manifest_entries inside its own plan: no cache is filled, and build +
+    collect stay within four Spark jobs."""
+    rows, jobs = _cold_jobs(spark, "q03_upload_diff")
     assert rows
     assert jobs <= 4, f"{jobs} jobs for one cold q03_upload_diff"
     assert not spark.catalog.isCached("manifest_entries")
+
+
+@pytest.mark.parametrize(
+    "name,budget", [("q01_list_backups", 4), ("q02_removable_entries", 3)]
+)
+def test_cold_list_remove_job_budget(spark, name, budget):
+    """``list`` and ``remove-backup`` read manifest_entries once (one
+    window on object_key, no self-join), so a cold command derives the
+    fixture once: 6 and 5 jobs with the join."""
+    rows, jobs = _cold_jobs(spark, name)
+    assert rows
+    assert jobs <= budget, f"{jobs} jobs for one cold {name}"
+
+
+def _fixture_views(session):
+    return {
+        t.name for t in session.catalog.listTables() if t.isTemporary
+    } & fixtures.FIXTURE_SQL.keys()
+
+
+@pytest.mark.parametrize(
+    "name,views",
+    [
+        ("q07_commitlog_window", {"commitlogs"}),
+        ("q03_upload_diff", {"manifest_entries", "remote_objects"}),
+    ],
+)
+def test_cold_command_registers_only_its_views(spark, name, views):
+    """A command registers the fixture views it reads and their
+    dependencies, not all nine."""
+    session = spark.newSession()
+    entry_mod.queries()[name](session, SF_DIR)
+    assert _fixture_views(session) == views
+
+
+def test_sf_dir_switch_drops_views_of_the_old_tables(spark):
+    """Fixture views hold analyzed plans over the base tables, so a switch
+    of sf_dir drops them: a view the new command did not name cannot read
+    the old directory's data."""
+    session = spark.newSession()
+    fixtures.register_fixture_views(session, SF_DIR, "remote_objects")
+    fixtures.register_fixture_views(session, OTHER_SF_DIR, "commitlogs")
+    assert _fixture_views(session) == {"commitlogs"}
+
+
+def test_fixture_views_are_per_session(spark):
+    """Temp views belong to a session: a query run in a second session
+    registers the views there, though the first session already did."""
+    qs = entry_mod.queries()
+    want = sorted(qs["q01_list_backups"](spark, SF_DIR).collect())
+    got = sorted(qs["q01_list_backups"](spark.newSession(), SF_DIR).collect())
+    assert got == want
+
+
+def _reads_a_fixture(name, fn, oracle):
+    """Whether the oracle defines a fixture in its WITH or the Spark side
+    names one as a string."""
+    views = "|".join(fixtures.FIXTURE_SQL)
+    in_oracle = re.search(rf"\b({views}) AS \(", oracle.get(name, ""))
+    in_spark = re.search(rf"[\"']({views})[\"']", inspect.getsource(fn))
+    return bool(in_oracle or in_spark)
+
+
+def test_every_fixture_read_is_declared(spark):
+    """Each fixture-reading query, built (not collected) in a fresh session,
+    which holds no temp views: a read of a view the query did not declare
+    to ``register_fixture_views`` fails analysis."""
+    qs, oracle = entry_mod.queries(), entry_mod.oracle_sql()
+    names = [n for n, fn in qs.items() if _reads_a_fixture(n, fn, oracle)]
+    assert len(names) >= 21
+    try:
+        for name in names:
+            qs[name](spark.newSession(), SF_DIR)
+    finally:
+        release_shared_relations()
+
+
+# -- the join formulations the one-read operators replaced, kept verbatim as
+# the reference for the differential test below
+
+
+def _ref_object_reference_counts(entries):
+    return entries.groupBy("object_key").agg(
+        F.countDistinct("backup_name").alias("n_backups"),
+        F.max("size").alias("obj_size"),
+    )
+
+
+def _ref_list_backups(entries):
+    refcounts = _ref_object_reference_counts(entries)
+    return (
+        entries.join(refcounts, "object_key")
+        .groupBy("backup_name", "backup_ts")
+        .agg(
+            F.count(F.lit(1)).alias("files"),
+            F.sum("size").cast("bigint").alias("size_bytes"),
+            F.sum(F.when(F.col("n_backups") == 1, F.col("size")).otherwise(F.lit(0)))
+            .cast("bigint")
+            .alias("reclaimable_bytes"),
+        )
+    )
+
+
+def _ref_removable_entries(entries, backup_name):
+    refcounts = _ref_object_reference_counts(entries)
+    return (
+        entries.filter(F.col("backup_name") == backup_name)
+        .select("object_key", "size")
+        .distinct()
+        .join(refcounts.filter(F.col("n_backups") == 1), "object_key", "left_semi")
+    )
+
+
+BACKUPS = {"b0": 1000, "b1": 2000, "b2": 3000}
+
+
+def _generated_entries(seed):
+    """Manifest entries with every shape the one-read operators must agree
+    on: duplicate rows, objects shared by 1, 2 and 3 backups, null
+    object_key / backup_name / size, and one backup_name (b2) carrying two
+    backup_ts values."""
+    rng = random.Random(seed)
+    names = sorted(BACKUPS)
+    rows = []
+    for i in range(24):
+        key = f"k{i}"
+        size = None if i % 7 == 3 else rng.randrange(1, 50)
+        for b in rng.sample(names, 1 + i % 3):
+            rows.append((b, BACKUPS[b], key, size))
+        if i % 5 == 0:
+            rows.append((None, 9000, key, size))
+        if i % 6 == 0:
+            rows.append(rows[-1])
+    rows += [
+        ("b2", 3500, "k1", rows[0][3]),
+        ("b1", 2000, None, 7),
+        (None, 9000, None, None),
+        ("b0", 1000, "k_only_null_size", None),
+        (None, 9000, "k_only_null_backup", 4),
+    ]
+    rng.shuffle(rows)
+    return rows
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("seed", [5, 17])
+def test_one_read_listing_and_removal_match_join_forms(spark, seed):
+    e = spark.createDataFrame(
+        _generated_entries(seed),
+        "backup_name string, backup_ts long, object_key string, size long",
+    )
+    assert _sorted_rows(manifest.list_backups(e)) == _sorted_rows(_ref_list_backups(e))
+    for b in sorted(BACKUPS):
+        assert _sorted_rows(manifest.removable_entries(e, b)) == _sorted_rows(
+            _ref_removable_entries(e, b)
+        ), b

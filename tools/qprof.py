@@ -60,8 +60,8 @@ def main() -> None:
         else:
             names.append(pat)
 
-    # same warmup ritual as bench.py: register the base tables and fixture
-    # views (plain views, nothing cached), then warm codegen
+    # same warmup ritual as bench.py: register the base tables and the
+    # manifest_entries view (plain, nothing cached), then warm codegen
     for _ in range(2):
         qs["q01_list_backups"](spark, args.sf).write.format("noop").mode("overwrite").save()
 
