@@ -75,16 +75,6 @@ def render_timestamp(ms: int) -> str:
     return base
 
 
-def render_timestamp_col(ms_col: Column | str) -> Column:
-    """Distributed F11 for the common case (non-zero millis rendered, zero
-    millis omitted) via JVM date_format."""
-    c = F.col(ms_col) if isinstance(ms_col, str) else ms_col
-    ts = F.timestamp_millis(c.cast("bigint"))
-    with_ms = F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSS")
-    no_ms = F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss")
-    return F.when(c % 1000 == 0, no_ms).otherwise(with_ms)
-
-
 def render_table(rows: list[list[str]]) -> str:
     """F18: nodetool-style aligned table — each column padded to its max cell
     width, left-justified, single-space delimited, trailing newline per row."""

@@ -11,7 +11,6 @@ Semantics (with reference citations for parity checking):
   (/root/reference/core/src/main/java/com/instaclustr/esop/impl/SSTableUtils.java:35-45).
 - F7 storage-location parse: ``protocol://bucket/cluster/dc/node``
   (/root/reference/core/src/main/java/com/instaclustr/esop/impl/StorageLocation.java:23-98).
-- F15 snapshot-tag timestamp test (Snapshots.java:778-790).
 - F16 secondary-index key test: 6 path components, component 3 starts with
   ``.`` (SSTableUtils.java:183-187).
 - F17 table-dir parse ``<table>-<32-hex-id>`` (Snapshots.java:524,554-565).
@@ -65,17 +64,6 @@ def sstable_base(filename: Column | str) -> Column:
 
 def sstable_generation(filename: Column | str) -> Column:
     return F.regexp_extract(_c(filename), SSTABLE_RE, 2)
-
-
-def sstable_format(filename: Column | str) -> Column:
-    fmt = F.regexp_extract(_c(filename), SSTABLE_RE, 3)
-    return F.when(fmt == "", F.lit("big")).otherwise(fmt)
-
-
-def sstable_id(generation: Column | str, digest: Column | str) -> Column:
-    """Content-addressed sstable id ``<generation>-<digest>``
-    (SSTableUtils.java:48-74) — the key that makes global dedup work."""
-    return F.concat_ws("-", _c(generation), _c(digest))
 
 
 # F4 digest parity (SSTableUtils.java:42,54-64): a ``-Digest.{crc32,adler32,
@@ -146,7 +134,7 @@ def content_hash(binary_col: Column | str, algorithm: str = "sha256") -> Column:
     raise ValueError(f"unsupported hash algorithm: {algorithm}")
 
 
-# --- F7/F8: storage location ------------------------------------------------
+# --- F7: storage location ---------------------------------------------------
 
 def storage_location_parts(col: Column | str) -> Column:
     """Struct (protocol, bucket, cluster, dc, node) from a location URI."""
@@ -160,30 +148,7 @@ def storage_location_parts(col: Column | str) -> Column:
     )
 
 
-def storage_location_update(
-    col: Column | str,
-    cluster: Column | None = None,
-    dc: Column | None = None,
-    node: Column | None = None,
-) -> Column:
-    """F8: replace cluster/dc/node components of a location string."""
-    p = storage_location_parts(col)
-    return F.concat_ws(
-        "/",
-        F.concat(p["protocol"], F.lit(":/")),
-        p["bucket"],
-        cluster if cluster is not None else p["cluster"],
-        dc if dc is not None else p["dc"],
-        node if node is not None else p["node"],
-    )
-
-
-# --- F15/F16/F17: path predicates ------------------------------------------
-
-def snapshot_tag_has_timestamp(col: Column | str) -> Column:
-    """True if the tag ends with ``-<parseable long>``."""
-    return F.substring_index(_c(col), "-", -1).cast("bigint").isNotNull()
-
+# --- F16/F17: path predicates ----------------------------------------------
 
 def is_secondary_index_key(col: Column | str) -> Column:
     """6 path components and the 4th (0-based index 3) starts with ``.``."""

@@ -260,18 +260,6 @@ def decode_containers(media: DataFrame) -> DataFrame:
     return media.mapInPandas(batches, schema=DECODED_CONTAINER_SCHEMA)
 
 
-def frame_sample(media: DataFrame, every_n_bytes: int = 100) -> DataFrame:
-    """Frame-sampling analog: emit one row per sampled offset of each payload
-    (what video frame extraction becomes once codecs exist). Pure JVM-side —
-    sequence + explode, no Python."""
-    return media.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest((F.col("n_bytes") - 1) / every_n_bytes, F.lit(0)).cast("bigint"))
-        ).alias("frame_idx"),
-    ).withColumn("byte_offset", F.col("frame_idx") * every_n_bytes)
-
-
 def _bmp_gray_rows(payload: bytes) -> tuple[int, int, list[list[int]]]:
     """Parse a 24-bit BMP into grayscale rows (top-down). Real container
     math: pixel array offset from the file header, 4-byte row padding,

@@ -4,8 +4,8 @@ Reference semantics:
 - W1/P13 latest-manifest: among manifests sharing a (snapshot, schema_version)
   prefix, the one with the max embedded timestamp wins
   (/root/reference/core/src/main/java/com/instaclustr/esop/impl/Manifest.java:254-283).
-- P10 removal selection: --oldest → min-timestamp manifest; --backup-name →
-  exact match; --older-than → unixtimestamp < now − Δ
+- P10 removal selection: --older-than → unixtimestamp < now − Δ
+  (--oldest and --backup-name are selected in pipelines.remove_backup)
   (/root/reference/core/src/main/java/com/instaclustr/esop/impl/remove/RemoveBackupOperation.java:177-190).
 - P9/W4 listing filters: --from-timestamp upper bound, --last-n oldest N
   (/root/reference/core/src/main/java/com/instaclustr/esop/impl/list/ListOperation.java:167-198).
@@ -102,14 +102,6 @@ def retention_older_than(manifests: DataFrame, cutoff_ts_millis: int) -> DataFra
     return manifests.filter(F.col("ts") < F.lit(cutoff_ts_millis)).select(
         "backup_name", "ts"
     )
-
-
-def oldest_backup(manifests: DataFrame) -> DataFrame:
-    """--oldest victim selection (deterministic tiebreak on name; null-ts
-    manifests sort last so an unparseable name is never the default victim)."""
-    return manifests.orderBy(
-        F.col("ts").asc_nulls_last(), F.col("backup_name").asc()
-    ).limit(1)
 
 
 def last_n(manifests: DataFrame, n: int) -> DataFrame:

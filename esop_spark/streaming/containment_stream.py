@@ -7,9 +7,9 @@ The batch operator (:func:`~esop_spark.operators.dedup.
 containment_candidates`) is ASYMMETRIC: each document probes with its
 bottom-k shingles against a df-capped inverted shingle index, and a pair
 becomes a candidate at ≥ ``min_hits`` distinct probe hits. That shape
-does not fit the (band, bucket) per-key state machinery of
-``dedup_stream`` — the hit count aggregates ACROSS shingle keys, so a
-per-key state function cannot decide emission alone. It fits the
+does not fit the (band, bucket) per-key bucket state of
+``dedup_stream`` — the hit count aggregates ACROSS shingle keys, so
+per-key state cannot decide emission alone. It fits the
 compacted-table shape naturally: five JVM-side state tables maintained
 by plain joins in a foreachBatch function, no Python in the loop —
 
@@ -50,11 +50,11 @@ by plain joins in a foreachBatch function, no Python in the loop —
   immutable facts too — written once, never merged.
 
 State layout (round 12): each table is a DELTA LOG of exactly-once fact
-rows with periodic compaction, sharing ``dedup_stream``'s version-dir
-machinery. Because batches carry disjoint new documents (the counts
-left-anti drops redeliveries) and within-batch shingle sets are
-distinct, every (h, did) posting, (h, pid) probe and (id_a, id_b) pair
-appears EXACTLY ONCE across the whole log. That makes the expensive
+rows with periodic compaction, built on the version-dir primitives of
+:mod:`~esop_spark.streaming.state_store`. Because batches carry disjoint
+new documents (the counts left-anti drops redeliveries) and within-batch
+shingle sets are distinct, every (h, did) posting, (h, pid) probe and
+(id_a, id_b) pair appears EXACTLY ONCE across the whole log. That makes the expensive
 merge layer of the round-11 layout unnecessary:
 
 - cumulative document frequency = a plain SUM of a shingle's per-batch
@@ -112,8 +112,8 @@ corpus gets the superset/bounded-state test). Verification (exact
 containment on shingles) stays a batch job over the emitted pair log,
 the same candidates-then-verify split as every twin here.
 
-Exactly-once follows ``dedup_stream``'s compacted core: pair output
-overwrites ``pairs_dir/batch=<id>``, per-table delta and base dirs
+Exactly-once follows the compacted LSH streams of ``dedup_stream``: pair
+output overwrites ``pairs_dir/batch=<id>``, per-table delta and base dirs
 overwrite ``.../v=<id>``, and the compaction decision counts only
 versions strictly below the replayed batch — all idempotent under
 crash replay; Hadoop FileSystem I/O (file:/hdfs:/s3a:).
@@ -122,27 +122,20 @@ crash replay; Hadoop FileSystem I/O (file:/hdfs:/s3a:).
 from __future__ import annotations
 
 import json
-import os
-import sys
-import time
 from concurrent.futures import ThreadPoolExecutor
-
-# development aid: CONTAINMENT_STREAM_DEBUG=1 prints per-phase wall times
-# of every micro-batch to stderr (foreachBatch runs in the driver's
-# Python, so plain timers around the write actions see the real costs)
-_DEBUG = os.environ.get("CONTAINMENT_STREAM_DEBUG", "") == "1"
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from esop_spark.operators.dedup import doc_shingle_counts, shingles
-from esop_spark.streaming.dedup_stream import (
-    _EMPTY_IDS as _EMPTY,
-    _delete_version,
-    _hadoop_fs,
-    _read_versioned,
-    _state_versions,
+from esop_spark.streaming.state_store import (
+    EMPTY_IDS,
+    delete_version,
+    hadoop_fs,
+    read_versioned,
+    start_foreach_batch,
+    state_versions,
 )
 
 _SCHEMAS = {
@@ -183,7 +176,7 @@ def _check_period(spark, state_dir: str, period: int, record: bool = False):
     """Raise ``ValueError`` if ``state_dir`` was written with another
     rotation period; with ``record``, persist ``period`` when the state
     has no metadata file yet (first batch of a fresh state)."""
-    fs, path = _hadoop_fs(spark, f"{state_dir}/{_META_FILE}")
+    fs, path = hadoop_fs(spark, f"{state_dir}/{_META_FILE}")
     if fs.exists(path):
         stream = fs.open(path)
         try:
@@ -219,7 +212,7 @@ def _rotating_versions(spark, root: str, batch_id: int, period: int):
     prunable, anything above it may still carry some residue's live
     rows (the per-row filter in :func:`_chain` decides)."""
     base_vs = [
-        v for v in _state_versions(spark, f"{root}/base") if v < batch_id
+        v for v in state_versions(spark, f"{root}/base") if v < batch_id
     ]
     vmap = {
         r: max((v for v in base_vs if v % period == r), default=None)
@@ -228,7 +221,7 @@ def _rotating_versions(spark, root: str, batch_id: int, period: int):
     floor = min((-1 if v is None else v) for v in vmap.values())
     deltas = [
         v
-        for v in _state_versions(spark, f"{root}/delta")
+        for v in state_versions(spark, f"{root}/delta")
         if floor < v < batch_id
     ]
     return vmap, floor, deltas
@@ -255,13 +248,40 @@ def _chain(spark, state_dir: str, table: str, vmap, deltas, period: int):
     root = f"{state_dir}/{table}"
     schema = _SCHEMAS[table]
     bases = sorted(v for v in vmap.values() if v is not None)
-    base_df = _read_versioned(spark, f"{root}/base", bases, schema).drop("_v")
-    delta_df = _read_versioned(spark, f"{root}/delta", deltas, schema)
+    base_df = read_versioned(spark, f"{root}/base", bases, schema).drop("_v")
+    delta_df = read_versioned(spark, f"{root}/delta", deltas, schema)
     key = _ROT_KEY[table]
     live = delta_df.filter(
         F.col("_v") > _residue_floor(key, vmap, period)
     ).drop("_v")
     return base_df.unionByName(live)
+
+
+def _fold_input(
+    spark, state_dir: str, table: str, vmap, deltas, period: int,
+    fold_r: int, batch_rows: DataFrame,
+) -> DataFrame:
+    """Every row of residue ``fold_r`` of one state table once this
+    batch's ``batch_rows`` land — the input of that residue's base
+    rewrite. Reads ONE base: ``base/v=b`` holds only residue
+    ``b % period``, so ``vmap[fold_r]`` is read whole and no other base
+    can hold a row of this residue; only deltas above it can carry live
+    rows of the residue, and those (with the batch rows) are
+    residue-filtered. O(state/period), never O(total state)."""
+    root = f"{state_dir}/{table}"
+    schema = _SCHEMAS[table]
+    base_v = vmap[fold_r]
+    floor = -1 if base_v is None else base_v
+    base = read_versioned(
+        spark, f"{root}/base", [] if base_v is None else [base_v], schema
+    )
+    live = read_versioned(
+        spark, f"{root}/delta", [v for v in deltas if v > floor], schema
+    )
+    res = F.pmod(F.col(_ROT_KEY[table]), F.lit(period)) == F.lit(fold_r)
+    return base.drop("_v").unionByName(
+        live.drop("_v").unionByName(batch_rows).filter(res)
+    )
 
 
 def _retain_rotating(spark, root: str, vmap, floor: int, period: int):
@@ -272,13 +292,13 @@ def _retain_rotating(spark, root: str, vmap, floor: int, period: int):
     vmap[r]); deltas at or below ``floor`` are folded into every
     residue's visible base. The base just written by this batch is never
     touched (it is above everything in ``vmap``)."""
-    for v in _state_versions(spark, f"{root}/base"):
+    for v in state_versions(spark, f"{root}/base"):
         newest = vmap.get(v % period)
         if newest is not None and v < newest:
-            _delete_version(spark, f"{root}/base", v)
-    for v in _state_versions(spark, f"{root}/delta"):
+            delete_version(spark, f"{root}/base", v)
+    for v in state_versions(spark, f"{root}/delta"):
         if v <= floor:
-            _delete_version(spark, f"{root}/delta", v)
+            delete_version(spark, f"{root}/delta", v)
 
 
 def _bottom_k_probes(sh_hashed: DataFrame, k: int) -> DataFrame:
@@ -304,7 +324,7 @@ def _merged_post(hist: DataFrame, dead: DataFrame) -> DataFrame:
         .select("h", "dids", F.lit(0).alias("dead"))
     )
     return live.unionByName(
-        dead.select("h", F.expr(_EMPTY).alias("dids"), F.lit(1).alias("dead"))
+        dead.select("h", F.expr(EMPTY_IDS).alias("dids"), F.lit(1).alias("dead"))
     )
 
 
@@ -558,13 +578,11 @@ def _containment_fn_factory(
             # every persisted relation above exactly once (its subtree
             # touches all of them), so the delta writes below read only
             # cached blocks
-            _t0 = time.perf_counter()
             crossed.filter(F.col("crossed") == 1).select(
                 "id_a", "id_b"
             ).coalesce(files).write.mode("overwrite").parquet(
                 f"{pairs_dir}/batch={batch_id}"
             )
-            _t1 = time.perf_counter()
             # ---- per-table fact-row deltas: this batch's new facts ----
             # a shingle dead by this batch stops accumulating postings
             # and df (its pn freezes at death, as in the batch operator);
@@ -615,7 +633,6 @@ def _containment_fn_factory(
                         delta_writes,
                     )
                 )
-            _t2 = time.perf_counter()
             # the fold consumes only the deltas (cached via sh_live/meta/
             # probes_b/crossed/counts_all) plus fresh chain scans — the
             # batch's biggest caches are dead weight past this point;
@@ -635,12 +652,13 @@ def _containment_fn_factory(
             # rest as the new base — no groupBy over state ----
             fold_r = batch_id % period
 
-            def res_of(key: str):
-                return F.pmod(F.col(key), F.lit(period)) == F.lit(fold_r)
+            def fold_input(table: str, batch_rows: DataFrame) -> DataFrame:
+                return _fold_input(
+                    spark, state_dir, table, vmap, deltas, period, fold_r,
+                    batch_rows,
+                )
 
-            shmeta_full_r = (
-                hist("shmeta").unionByName(shmeta_delta).filter(res_of("h"))
-            ).persist()
+            shmeta_full_r = fold_input("shmeta", shmeta_delta).persist()
             # persisted: the post AND probe base rewrites both anti-join
             # this residue's dead set
             dead_r = (
@@ -657,28 +675,21 @@ def _containment_fn_factory(
                 # pair rows are exactly-once facts: relocation, no merge.
                 # The five base rewrites are independent
                 # scan→filter→write jobs: overlap them (guide §2.6)
-                post_base = (
-                    hist("post")
-                    .unionByName(post_delta)
-                    .filter(res_of("h"))
-                    .join(dead_r, "h", "left_anti")
+                post_base = fold_input("post", post_delta).join(
+                    dead_r, "h", "left_anti"
                 )
                 shmeta_base = shmeta_full_r.groupBy("h").agg(
                     F.sum("bn").cast("int").alias("bn"),
                     F.max("dead").alias("dead"),
                 )
-                probe_base = (
-                    hist("probe")
-                    .unionByName(probe_delta)
-                    .filter(res_of("h"))
-                    .join(dead_r, "h", "left_anti")
+                probe_base = fold_input("probe", probe_delta).join(
+                    dead_r, "h", "left_anti"
                 )
-                pairs_base = (
-                    hist("pairs")
-                    .unionByName(pairs_delta)
-                    .filter(res_of("id_a"))
+                pairs_base = fold_input("pairs", pairs_delta)
+                # counts_all (cached) already holds every counts row
+                counts_base = counts_all.filter(
+                    F.pmod(F.col("did"), F.lit(period)) == F.lit(fold_r)
                 )
-                counts_base = counts_all.filter(res_of("did"))
                 base_writes = [
                     (counts_base,
                      f"{state_dir}/counts/base/v={batch_id}"),
@@ -707,13 +718,6 @@ def _containment_fn_factory(
             finally:
                 dead_r.unpersist()
                 shmeta_full_r.unpersist()
-            _t3 = time.perf_counter()
-            if _DEBUG:
-                print(
-                    f"[containment b={batch_id}] pairs={_t1 - _t0:.1f}s "
-                    f"deltas={_t2 - _t1:.1f}s fold={_t3 - _t2:.1f}s",
-                    file=sys.stderr,
-                )
         finally:
             for df in (crossed, counts_all, sh_live, meta,
                        probes_b, sh, docs):
@@ -759,13 +763,4 @@ def containment_compacted_query(
         pairs_dir, state_dir, n, probe_k, int(min_hits), int(max_df),
         text_col, id_col, int(compact_every), int(files_per_version),
     )
-    writer = (
-        documents.writeStream.foreachBatch(fn)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(documents, fn, checkpoint_dir, processing_time)

@@ -1,29 +1,40 @@
-"""Streaming MinHash-LSH near-duplicate candidate detection: online dedup
-of an incoming document stream against everything seen so far.
+"""Streaming LSH near-duplicate candidate detection: online dedup of an
+incoming stream against everything seen so far, one compacted
+foreachBatch query per banded family (MinHash, weighted MinHash, SimHash,
+embedding).
 
-The batch LSH (operators.dedup._lsh_candidates) banding is recomputed
-stream-side as pure projections — per-row signature via
-``with_minhash_signature`` (bit-identical to the batch aggregation) and the
-same band-bucket hash — so a replayed corpus lands in the SAME buckets the
-batch job would build. The stateful leg is keyed by (band, bucket); its
-state is the bucket's member-id list, capped at ``max_bucket`` with the
-batch operator's star-pairing degradation: once a bucket goes hot, new
-members emit only their anchor edge (O(1) per arrival, cluster
-connectivity preserved for downstream connected-components), and the state
-collapses to the anchor alone — bounded forever after, no matter how much
-boilerplate the crawl keeps sending.
+The batch banding is recomputed stream-side as pure projections — per-row
+signature via ``with_minhash_signature`` and its siblings (bit-identical
+to the batch aggregations) and the same band-bucket hash — so a replayed
+corpus lands in the SAME buckets the batch job would build. Bucket state
+is keyed by (band, bucket): the bucket's member-id list, capped at
+``max_bucket`` with the batch operator's star-pairing degradation: once a
+bucket goes hot, new members emit only their anchor edge (O(1) per
+arrival, cluster connectivity preserved for downstream
+connected-components), and the state collapses to the anchor alone —
+bounded forever after, no matter how much boilerplate the crawl keeps
+sending.
 
 Candidate pairs are exactly that — candidates. Verification (exact Jaccard
-on shingles) stays a batch job over the emitted pair log, the same split
-the batch pipeline uses.
+on shingles, Hamming radius, exact cosine) stays a batch job over the
+emitted pair log, the same split the batch pipeline uses.
+
+**Pair-log contract — consumers must treat it as a SET** (``distinct()``
+before any per-pair counting). Two caveats make the raw log a superset of
+the batch pair set for oversized buckets: (1) a bucket that crosses
+``max_bucket`` mid-stream has already emitted its pre-cap pairwise edges
+and then emits star edges; (2) after hot-collapse the state keeps only
+the anchor, so a document re-delivered later (source replays,
+at-least-once upstreams) re-emits its anchor edge. Both extras are edges
+WITHIN the bucket's connected component, so the intended consumer —
+connected-components clustering — is unaffected even without dedup; only
+pair-count statistics need the distinct().
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from esop_spark.operators.dedup import (
     _band_buckets,
@@ -33,69 +44,22 @@ from esop_spark.operators.dedup import (
     with_weighted_minhash_signature,
 )
 from esop_spark.plans.barriers import pin_projection_barrier
+from esop_spark.streaming.state_store import (
+    EMPTY_IDS,
+    delete_version,
+    latest_per_key,
+    read_versioned,
+    start_foreach_batch,
+    state_versions,
+)
 
-LSH_OUTPUT = "band int, id_a bigint, id_b bigint"
 LSH_DELTA = "band int, news array<bigint>, olds array<bigint>, star int"
-LSH_STATE = "ids string, hot int"
-
-
-def _lsh_fn_factory(max_bucket: int):
-    """Stateful leg: per (band, bucket) group, ONE compact delta row per
-    micro-batch — (news, olds, star) member arrays — never the pairs
-    themselves. The r8 sf10 stream bench showed the drain dominated by
-    candidate-pair rows (7.9M) emitted one-by-one through the Arrow state
-    function (847 rows/s); Arrow volume is now O(members) per group and
-    the O(pairs) expansion happens JVM-side (:func:`_expand_delta_pairs`),
-    inside whole-stage codegen. State transitions are byte-identical to
-    the previous pair-emitting version (same LSH_STATE schema and values,
-    so existing checkpoints resume cleanly)."""
-    def fn(key, pdfs, state: GroupState):
-        import json as _json
-
-        ids, hot = (
-            (_json.loads(state.get[0]), int(state.get[1]))
-            if state.exists
-            else ([], 0)
-        )
-        known = set(ids)
-        new_set = {int(i) for pdf in pdfs for i in pdf["did"].tolist()}
-        new_set -= known
-        if not new_set:
-            return  # replayed members only: no state change, no output
-        new = sorted(new_set)
-        prior = ids
-        if hot or len(ids) + len(new) > max_bucket:
-            # star degradation (batch's oversized-bucket contract): the
-            # expansion emits anchor edges only; state collapses to the
-            # anchor — bounded forever after
-            ids, hot, star = [min(prior + new)], 1, 1
-        else:
-            ids, star = sorted(new_set | known), 0
-        state.update((_json.dumps(ids), hot))
-        # fast path for the dominant group shape — a bucket seeing its
-        # FIRST (single) member: no pair can exist, so skip the pandas
-        # construction entirely. At sf10 the weighted stream's exchange
-        # visits ~9M (band, bucket) keys, nearly all singletons; emitting
-        # a delta row for each was measured at ~+110 s of pure per-group
-        # overhead. (A lone-new-arrival HOT bucket still emits: the
-        # expansion may owe a star/bridge edge against the old members.)
-        if star == 0 and not prior and len(new) == 1:
-            return
-        yield pd.DataFrame(
-            {
-                "band": pd.Series([int(key[0])], dtype="int32"),
-                "news": pd.Series([new], dtype="object"),
-                "olds": pd.Series([prior], dtype="object"),
-                "star": pd.Series([star], dtype="int32"),
-            }
-        )
-
-    return fn
 
 
 def _expand_delta_pairs(delta: DataFrame) -> DataFrame:
-    """JVM-side pair expansion of the stateful leg's delta rows — exactly
-    the pair set the state function used to emit row-by-row:
+    """JVM-side pair expansion of the per-bucket delta rows
+    (``LSH_DELTA``: this batch's new members, the bucket's prior members,
+    and the star flag):
 
     - star = 0 (bucket under the cap): all within-``news`` pairs (a < b;
       ``news`` is sorted-distinct) plus every news × olds cross pair
@@ -162,8 +126,8 @@ def _expand_delta_pairs(delta: DataFrame) -> DataFrame:
 
 
 def _bb_minhash(documents, num_hashes, bands, n, hash_family, text_col, id_col):
-    """(did, band, bucket) membership projection for the MinHash family —
-    shared by the stateful stream and the compacted foreachBatch variant."""
+    """(did, band, bucket) membership projection for the MinHash family;
+    each ``_bb_*`` builder gives its family's relation in this shape."""
     sig = with_minhash_signature(
         documents, num_hashes, n, text_col, id_col, hash_family
     )
@@ -209,185 +173,21 @@ def _bb_embedding(embeddings, bands, band_planes, dim, seed, vec_col, id_col):
     )
 
 
-def lsh_candidate_stream(
-    documents: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    hash_family: str = "xxhash64",
-    max_bucket: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Streaming counterpart of the batch LSH candidate generation: input
-    stream of (doc_id, text) rows; emits (band, id_a, id_b) candidate
-    pairs as documents arrive, id_a < id_b. A full replay's distinct
-    (id_a, id_b) set equals the batch ``_lsh_candidates`` pair set for
-    buckets within ``max_bucket`` (exact-set parity is tested); oversized
-    buckets degrade to the same anchor-star connectivity contract as the
-    batch operator. State per (band, bucket) is bounded: member ids up to
-    the cap, a single anchor after.
-
-    **Pair-log contract — consumers must treat it as a SET** (``distinct()``
-    before any per-pair counting). Two append-mode caveats make the raw log
-    a superset of the batch pair set for oversized buckets: (1) a bucket
-    that crosses ``max_bucket`` mid-stream has already emitted its pre-cap
-    pairwise edges and then emits star edges; (2) after hot-collapse the
-    state keeps only the anchor, so a document re-delivered later (source
-    replays, at-least-once upstreams) re-emits its anchor edge. Both extras
-    are edges WITHIN the bucket's connected component, so the intended
-    consumer — connected-components clustering — is unaffected even
-    without dedup; only pair-count statistics need the distinct()."""
-    bb = _bb_minhash(
-        documents, num_hashes, bands, n, hash_family, text_col, id_col
-    )
-    return _expand_delta_pairs(
-        bb.groupBy("band", "bucket").applyInPandasWithState(
-            _lsh_fn_factory(int(max_bucket)),
-            outputStructType=LSH_DELTA,
-            stateStructType=LSH_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def weighted_lsh_candidate_stream(
-    documents: DataFrame,
-    num_hashes: int = 200,
-    bands: int = 20,
-    tf_cap: int = 10,
-    hash_family: str = "xxhash64",
-    max_bucket: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Streaming twin of the WEIGHTED MinHash candidate generation
-    (dedup.weighted_minhash_lsh_pairs): online tf-multiset near-dup
-    against everything seen so far, with the exact state machinery of
-    :func:`lsh_candidate_stream` — only the signature differs (per-row
-    replicated-element projection, ``with_weighted_minhash_signature``,
-    bit-identical to the batch chain, so a replayed corpus lands in the
-    batch job's (band, bucket) keys). Same pair-log SET contract and
-    hot-bucket anchor-star degradation; verification (exact capped
-    weighted Jaccard) stays a batch job over the emitted pair log, the
-    same split as every LSH stream here.
-
-    THROUGHPUT NOTE: this leg's 20 deep bands touch ~9M mostly-singleton
-    (band, bucket) keys per 500k-doc replay and applyInPandasWithState
-    pays a fixed ~50 µs Python round-trip per key — 516.8 s at sf10 of
-    which ~450 s is that overhead. For drain/backfill throughput use
-    :func:`weighted_lsh_compacted_query` (identical pair semantics,
-    64.2 s on the same corpus); keep this leg for low-latency per-record
-    emission."""
-    bb = _bb_weighted_minhash(
-        documents, num_hashes, bands, tf_cap, hash_family, text_col, id_col
-    )
-    return _expand_delta_pairs(
-        bb.groupBy("band", "bucket").applyInPandasWithState(
-            _lsh_fn_factory(int(max_bucket)),
-            outputStructType=LSH_DELTA,
-            stateStructType=LSH_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def simhash_candidate_stream(
-    documents: DataFrame,
-    num_bits: int = 48,
-    chunks: int = 4,
-    hash_family: str = "xxhash64",
-    max_bucket: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Streaming twin of the SimHash candidate generation
-    (dedup.simhash_pairs): online Hamming-radius near-dup against
-    everything seen so far — the last banded family without a streaming
-    leg (MinHash, weighted MinHash, and hyperplane cosine have theirs).
-    Per-row signature via :func:`~esop_spark.operators.dedup.
-    with_simhash_signature` (bit-identical to the batch aggregation) and
-    the batch operator's own pigeonhole chunking
-    (:func:`~esop_spark.operators.dedup.simhash_chunks`), so a replayed
-    corpus lands in the batch equi-join's (chunk_idx, chunk_val) buckets.
-    Same state machinery, pair-log SET contract, and hot-bucket
-    anchor-star degradation as :func:`lsh_candidate_stream`; the Hamming
-    verification (bit_count(xor) ≤ radius) stays a batch job over the
-    emitted pair log — the same candidates-then-verify split as every
-    LSH stream here. Output (band, id_a, id_b); band is the chunk index."""
-    bb = _bb_simhash(documents, num_bits, chunks, hash_family, text_col, id_col)
-    return _expand_delta_pairs(
-        bb.groupBy("band", "bucket").applyInPandasWithState(
-            _lsh_fn_factory(int(max_bucket)),
-            outputStructType=LSH_DELTA,
-            stateStructType=LSH_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def embedding_candidate_stream(
-    embeddings: DataFrame,
-    bands: int = 8,
-    band_planes: int = 3,
-    dim: int = 64,
-    seed: str = "hp",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    max_bucket: int = 100,
-) -> DataFrame:
-    """Streaming twin of the banded-LSH COSINE candidate generation
-    (similarity.cosine_pairs_lsh): online embedding near-dup against
-    everything seen so far, with the exact state machinery of
-    :func:`lsh_candidate_stream` — only the banding differs (hyperplane
-    sign patterns instead of MinHash slices; both are pure per-row
-    projections, so a replayed corpus lands in the batch leg's buckets).
-
-    Emits (band, id_a, id_b) candidate pairs; exact-cosine verification
-    stays a batch job over the pair log (join the ids back to the
-    embedding table — similarity.cosine_pairs_lsh's verify tail), the
-    same candidates-then-verify split as the text path. State per
-    (band, bucket) is bounded: member ids up to ``max_bucket``, a single
-    anchor after — the pair-log SET contract documented on
-    :func:`lsh_candidate_stream` applies identically."""
-    bb = _bb_embedding(
-        embeddings, bands, band_planes, dim, seed, vec_col, id_col
-    )
-    return _expand_delta_pairs(
-        bb.groupBy("band", "bucket").applyInPandasWithState(
-            _lsh_fn_factory(int(max_bucket)),
-            outputStructType=LSH_DELTA,
-            stateStructType=LSH_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# --- Compacted foreachBatch variant: no Python state function ------------
+# --- Compacted bucket state: no Python state function ------------------
 #
-# applyInPandasWithState pays a fixed per-key Python/Arrow round-trip
-# (~50 µs) for every (band, bucket) key a micro-batch touches, REGARDLESS
-# of output — and deep-banded signatures make keys proliferate: the
-# weighted stream's 20 bands over a 500k-doc corpus touch ~9M mostly-
-# singleton keys per replay, ~450 s of the 516.8 s sf10 drain (SCALE.md
-# round-9 stream table). The pairs stopped crossing Arrow in round 9; the
-# KEYS still did. This variant removes Python from the loop entirely:
-# bucket membership lives in a COMPACTED state table — one row per
+# Bucket membership lives in a COMPACTED state table — one row per
 # (band, bucket): (ids array ≤ max_bucket, hot flag) — maintained by a
-# foreachBatch function as plain JVM DataFrame ops, and the per-batch
-# delta rows feed the same :func:`_expand_delta_pairs` expansion the
-# stateful leg uses, so pair semantics are IDENTICAL by construction
-# (same (news, olds, star) rule, same expansion — parity-tested against
-# both the batch operator and the stateful stream).
+# foreachBatch function as plain JVM DataFrame ops; each batch's
+# (news, olds, star) delta rows feed :func:`_expand_delta_pairs`. No
+# Python runs per key: deep-banded signatures make keys proliferate (the
+# weighted family's 20 bands touch ~9M mostly-singleton keys per sf10
+# replay), and a per-key Python/Arrow round-trip (~50 µs) cost ~450 s of
+# a 516.8 s drain (SCALE.md round-9 stream table).
 #
 # State layout (round 11): a DELTA LOG with periodic compaction, so
 # per-batch WRITE cost is O(changed keys), not O(buckets-seen) — the
 # merge-on-read design Delta/Iceberg MERGE implements, built from the
-# version-dir primitives already here:
+# version-dir primitives in :mod:`~esop_spark.streaming.state_store`:
 #
 #   state_dir/delta/v=<b>  — the keys batch b CHANGED, post-batch values
 #   state_dir/base/v=<B>   — full fold of everything ≤ B, written every
@@ -410,101 +210,43 @@ def embedding_candidate_stream(
 # compaction decision depends only on version dirs STRICTLY BELOW the
 # replayed batch, so it replays identically. Retention keeps the two
 # newest bases and every delta after the older of the two — exactly what
-# a replay of the newest batch can read. State I/O goes through the
-# Hadoop FileSystem API, so the same code runs on file:/, hdfs:/ or
-# s3a:/ state dirs.
-
-
-def _hadoop_fs(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _state_versions(spark, state_dir: str) -> list[int]:
-    fs, root = _hadoop_fs(spark, state_dir)
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("v=") and name[2:].isdigit():
-            out.append(int(name[2:]))
-    return sorted(out)
-
-
-def _delete_version(spark, root: str, v: int) -> None:
-    fs, _ = _hadoop_fs(spark, root)
-    fs.delete(spark._jvm.org.apache.hadoop.fs.Path(f"{root}/v={v}"), True)
-
-
-_EMPTY_IDS = "CAST(array() AS array<bigint>)"
+# a replay of the newest batch can read.
 
 STATE_SCHEMA = "band int, bucket string, ids array<bigint>, hot int"
-
-
-def _read_versioned(spark, root: str, versions: list[int], schema: str):
-    """Union of ``root/v=<v>`` reads, each tagged with its version as
-    ``_v`` — the raw material for a latest-per-key merge."""
-    if not versions:
-        return spark.createDataFrame([], schema).withColumn(
-            "_v", F.lit(0).cast("long")
-        )
-    dfs = [
-        spark.read.schema(schema).parquet(f"{root}/v={v}").withColumn(
-            "_v", F.lit(v).cast("long")
-        )
-        for v in versions
-    ]
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
-
-
-def _latest_per_key(hist: DataFrame, keys: list[str]) -> DataFrame:
-    """Resolve a versioned history to current state: for each key, the
-    payload of the row with the largest ``_v``. One hash aggregate."""
-    payload = [c for c in hist.columns if c not in keys and c != "_v"]
-    agg = hist.groupBy(*keys).agg(
-        F.max_by(F.struct(*payload), F.col("_v")).alias("_s")
-    )
-    return agg.select(*keys, *[F.col(f"_s.{c}").alias(c) for c in payload])
 
 
 def _live_versions(spark, state_dir: str, batch_id: int):
     """(base_v, deltas) visible to ``batch_id``: the newest base strictly
     below it and every delta between that base and the batch."""
-    base_vs = _state_versions(spark, f"{state_dir}/base")
-    delta_vs = _state_versions(spark, f"{state_dir}/delta")
+    base_vs = state_versions(spark, f"{state_dir}/base")
+    delta_vs = state_versions(spark, f"{state_dir}/delta")
     base_v = max((v for v in base_vs if v < batch_id), default=None)
     floor = -1 if base_v is None else base_v
     deltas = [v for v in delta_vs if floor < v < batch_id]
     return base_v, deltas
 
 
-def _state_history(spark, state_dir: str, batch_id: int, schema: str):
+def _state_history(spark, state_dir: str, batch_id: int):
     """Versioned history visible to ``batch_id`` (base + deltas, ``_v``
     tagged) plus the version list bookkeeping for retention."""
     base_v, deltas = _live_versions(spark, state_dir, batch_id)
-    hist = _read_versioned(
+    hist = read_versioned(
         spark,
         f"{state_dir}/base",
         [base_v] if base_v is not None else [],
-        schema,
-    ).unionByName(_read_versioned(spark, f"{state_dir}/delta", deltas, schema))
+        STATE_SCHEMA,
+    ).unionByName(
+        read_versioned(spark, f"{state_dir}/delta", deltas, STATE_SCHEMA)
+    )
     return hist, base_v, deltas
 
 
-def read_compacted_state(
-    spark, state_dir: str, schema: str = STATE_SCHEMA,
-    keys: tuple[str, ...] = ("band", "bucket"),
-) -> DataFrame:
+def read_compacted_state(spark, state_dir: str) -> DataFrame:
     """Reconstruct the CURRENT compacted state table (latest-per-key over
     the newest base and subsequent deltas) — the external read surface for
     consumers and tests; equals what the next batch would see."""
-    hist, _, _ = _state_history(spark, state_dir, 1 << 62, schema)
-    return _latest_per_key(hist, list(keys))
+    hist, _, _ = _state_history(spark, state_dir, 1 << 62)
+    return latest_per_key(hist, ["band", "bucket"])
 
 
 def _retain_versions(spark, state_dir: str, base_v, deltas, compacted: bool):
@@ -514,16 +256,16 @@ def _retain_versions(spark, state_dir: str, base_v, deltas, compacted: bool):
     folded into it when it was written)."""
     if base_v is None:
         return
-    for v in _state_versions(spark, f"{state_dir}/base"):
+    for v in state_versions(spark, f"{state_dir}/base"):
         if v < base_v:
-            _delete_version(spark, f"{state_dir}/base", v)
+            delete_version(spark, f"{state_dir}/base", v)
     if compacted:
         # the batch just wrote base/v=batch_id; deltas ≤ base_v are now
         # covered twice over — drop them (deltas in (base_v, batch) stay
         # until the NEXT compaction makes base_v itself obsolete)
-        for v in _state_versions(spark, f"{state_dir}/delta"):
+        for v in state_versions(spark, f"{state_dir}/delta"):
             if v <= base_v:
-                _delete_version(spark, f"{state_dir}/delta", v)
+                delete_version(spark, f"{state_dir}/delta", v)
 
 
 def _compacted_fn_factory(
@@ -543,12 +285,10 @@ def _compacted_fn_factory(
             .groupBy("band", "bucket")
             .agg(F.sort_array(F.collect_set("did")).alias("batch_ids"))
         ).persist()
-        hist, base_v, deltas = _state_history(
-            spark, state_dir, batch_id, STATE_SCHEMA
-        )
+        hist, base_v, deltas = _state_history(spark, state_dir, batch_id)
         # current state of TOUCHED keys only: semi-join prune BEFORE the
         # latest-per-key merge, so the shuffle is O(touched × versions)
-        prior = _latest_per_key(
+        prior = latest_per_key(
             hist.join(
                 arrivals.select("band", "bucket"), ["band", "bucket"],
                 "left_semi",
@@ -556,7 +296,7 @@ def _compacted_fn_factory(
             ["band", "bucket"],
         )
         joined = arrivals.join(prior, ["band", "bucket"], "left")
-        olds = F.coalesce(F.col("ids"), F.expr(_EMPTY_IDS))
+        olds = F.coalesce(F.col("ids"), F.expr(EMPTY_IDS))
         touched = joined.select(
             "band",
             "bucket",
@@ -602,7 +342,7 @@ def _compacted_fn_factory(
                         "_v", F.lit(batch_id).cast("long")
                     )
                 )
-                _latest_per_key(fold, ["band", "bucket"]).write.mode(
+                latest_per_key(fold, ["band", "bucket"]).write.mode(
                     "overwrite"
                 ).parquet(f"{state_dir}/base/v={batch_id}")
         finally:
@@ -626,8 +366,8 @@ def start_compacted_candidates(
     (did, band, bucket) membership relation (one of the ``_bb_*``
     builders). Pairs land under ``pairs_dir/batch=<id>`` —
     ``spark.read.parquet(pairs_dir)`` exposes the epoch as a ``batch``
-    partition column; the SET contract of
-    :func:`lsh_candidate_stream` applies to the union. State lives under
+    partition column; the module's pair-log SET contract applies to the
+    union. State lives under
     ``state_dir/{base,delta}/v=<id>`` (read it back with
     :func:`read_compacted_state`); ``compact_every`` sets how many deltas
     accumulate before a full fold — the read-amplification / write-
@@ -635,20 +375,14 @@ def start_compacted_candidates(
     :class:`~pyspark.sql.streaming.StreamingQuery` (default trigger
     availableNow; pass ``processing_time`` for a continuous micro-batch
     cadence)."""
-    writer = (
-        bb.writeStream.foreachBatch(
-            _compacted_fn_factory(
-                pairs_dir, state_dir, int(max_bucket), int(compact_every)
-            )
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
+    return start_foreach_batch(
+        bb,
+        _compacted_fn_factory(
+            pairs_dir, state_dir, int(max_bucket), int(compact_every)
+        ),
+        checkpoint_dir,
+        processing_time,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def lsh_compacted_query(
@@ -666,9 +400,13 @@ def lsh_compacted_query(
     processing_time: str | None = None,
     compact_every: int = 10,
 ):
-    """Compacted-state twin of :func:`lsh_candidate_stream` — identical
-    pair semantics (same banding projection, same (news, olds, star)
-    delta rule, same JVM expansion), no Python state function."""
+    """Streaming MinHash-LSH candidates over a (doc_id, text) document
+    stream: emits (band, id_a, id_b) candidate pairs, id_a < id_b, as
+    documents arrive (see :func:`start_compacted_candidates` for the
+    output and state layout). A full replay's distinct (id_a, id_b) set
+    equals the batch ``_lsh_candidates`` pair set for buckets within
+    ``max_bucket`` (exact-set parity is tested); oversized buckets
+    degrade to the batch operator's anchor-star connectivity contract."""
     bb = _bb_minhash(
         documents, num_hashes, bands, n, hash_family, text_col, id_col
     )
@@ -693,11 +431,14 @@ def weighted_lsh_compacted_query(
     processing_time: str | None = None,
     compact_every: int = 10,
 ):
-    """Compacted-state twin of :func:`weighted_lsh_candidate_stream` —
-    THE leg this variant exists for: its 20 deep bands touch ~9M mostly-
-    singleton (band, bucket) keys per sf10 replay, and the per-key Python
-    round-trip (~450 s of a 516.8 s drain) disappears entirely when the
-    state lives in a compacted JVM-side table (see module note)."""
+    """Streaming WEIGHTED MinHash candidates
+    (dedup.weighted_minhash_lsh_pairs): online tf-multiset near-dup with
+    the per-row replicated-element signature
+    ``with_weighted_minhash_signature`` (bit-identical to the batch
+    chain), so a replayed corpus lands in the batch job's (band, bucket)
+    keys. Its 20 deep bands touch ~9M mostly-singleton keys per sf10
+    replay — the key volume the JVM-side bucket state is built for (see
+    the compacted-state note above)."""
     bb = _bb_weighted_minhash(
         documents, num_hashes, bands, tf_cap, hash_family, text_col, id_col
     )
@@ -721,7 +462,13 @@ def simhash_compacted_query(
     processing_time: str | None = None,
     compact_every: int = 10,
 ):
-    """Compacted-state twin of :func:`simhash_candidate_stream`."""
+    """Streaming SimHash candidates (dedup.simhash_pairs): per-row
+    signature via ``with_simhash_signature`` (bit-identical to the batch
+    aggregation) and the batch operator's own pigeonhole chunking
+    (``simhash_chunks``), so a replayed corpus lands in the batch
+    equi-join's (chunk_idx, chunk_val) buckets. Output (band, id_a, id_b);
+    band is the chunk index. The Hamming verification
+    (bit_count(xor) ≤ radius) stays a batch job over the pair log."""
     bb = _bb_simhash(
         documents, num_bits, chunks, hash_family, text_col, id_col
     )
@@ -746,7 +493,13 @@ def embedding_compacted_query(
     processing_time: str | None = None,
     compact_every: int = 10,
 ):
-    """Compacted-state twin of :func:`embedding_candidate_stream`."""
+    """Streaming banded-LSH COSINE candidates
+    (similarity.cosine_pairs_lsh) over an embedding stream: hyperplane
+    sign patterns instead of MinHash slices, both pure per-row
+    projections, so a replayed corpus lands in the batch leg's buckets.
+    Exact-cosine verification stays a batch job over the pair log (join
+    the ids back to the embedding table — cosine_pairs_lsh's verify
+    tail)."""
     bb = _bb_embedding(
         embeddings, bands, band_planes, dim, seed, vec_col, id_col
     )

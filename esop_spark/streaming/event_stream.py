@@ -2,7 +2,7 @@
 
 The reference's point-in-time window + "one late overhang segment" rule
 (RestoreCommitLogsOperation.java:115-146) generalizes to Structured
-Streaming's event-time machinery: tumbling/sliding windows with watermarks
+Streaming's event-time machinery: tumbling windows with watermarks
 for bounded lateness, and ``dropDuplicatesWithinWatermark`` for streaming
 exact dedup (the streaming analog of the content-addressed upload skip).
 
@@ -38,26 +38,6 @@ def tumbling_counts(
             key_col,
             "events",
             "total_value",
-        )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    width: str = "30 minutes",
-    slide: str = "15 minutes",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Sliding-window event counts (each event lands in width/slide windows)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), width, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "events",
         )
     )
 

@@ -1,7 +1,7 @@
 """Compacted foreachBatch candidate streams (no Python state function):
-pair-set parity with the batch operator AND the applyInPandasWithState
-leg, hot-bucket star degradation, incremental arrival across restarts,
-and crash-replay idempotence of the versioned state/pairs layout."""
+pair-set parity with the batch operator, hot-bucket star degradation,
+incremental arrival across restarts, and crash-replay idempotence of the
+versioned state/pairs layout."""
 
 import os
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from esop_spark.operators.dedup import _lsh_candidates
 from esop_spark.streaming.dedup_stream import (
     _compacted_fn_factory,
-    lsh_candidate_stream,
     lsh_compacted_query,
     weighted_lsh_compacted_query,
 )
@@ -75,62 +74,6 @@ def test_compacted_replay_equals_batch_candidates(spark, tmp_path):
     assert expect
 
 
-def test_compacted_matches_stateful_stream(spark, tmp_path):
-    """Same corpus, split over two files so the compacted path exercises a
-    real state handoff (maxFilesPerTrigger=1 -> two micro-batches): the
-    distinct pair set must equal the applyInPandasWithState leg's."""
-    docs = _corpus(spark)
-    src, pairs, state, ckpt = _dirs(tmp_path)
-    os.makedirs(src, exist_ok=True)
-    docs.filter(F.col("doc_id") <= 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(src, "a"))
-    docs.filter(F.col("doc_id") > 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(src, "b"))
-    glob = os.path.join(src, "*")
-
-    stateful: list = []
-
-    def sink(batch_df, _bid):
-        stateful.extend(batch_df.collect())
-
-    q = (
-        lsh_candidate_stream(
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(glob)
-        )
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt-stateful"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "stateful stream did not terminate"
-    want = {(r["id_a"], r["id_b"]) for r in stateful}
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(glob)
-    )
-    qc = lsh_compacted_query(stream, pairs, state, ckpt)
-    assert qc.awaitTermination(180), "compacted stream did not terminate"
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(pairs).select("id_a", "id_b").collect()
-    }
-    assert got == want
-    assert want
-    # two micro-batches -> pairs exposes both epochs as partition values
-    batches = {
-        r["batch"]
-        for r in spark.read.parquet(pairs).select("batch").distinct().collect()
-    }
-    assert len(batches) == 2
-
-
 def test_compacted_incremental_arrival_and_restart(spark, tmp_path):
     """Arrivals split across two runs of the SAME checkpoint: run 1 sees
     docs 0-1, the query stops (availableNow), docs 2-4 land, run 2 resumes
@@ -150,6 +93,12 @@ def test_compacted_incremental_arrival_and_restart(spark, tmp_path):
     ).parquet(os.path.join(src, "b"))
     got2 = _drain_compacted(spark, glob, pairs, state, ckpt)
     assert got2 == expect
+    # the restart ran as a new epoch: pairs exposes both as partition values
+    batches = {
+        r["batch"]
+        for r in spark.read.parquet(pairs).select("batch").distinct().collect()
+    }
+    assert len(batches) == 2
 
 
 def test_compacted_hot_bucket_star_and_bounded_state(spark, tmp_path):

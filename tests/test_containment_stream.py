@@ -223,7 +223,43 @@ def test_containment_compaction_folds_and_prunes(spark, tmp_path):
             for r in range(period)
         )
         assert all(v > replay_floor for v in deltas), t
-    from esop_spark.streaming.containment_stream import read_containment_state
+    from esop_spark.streaming.containment_stream import (
+        _ROT_KEY,
+        _SCHEMAS,
+        _chain,
+        _fold_input,
+        _rotating_versions,
+        read_containment_state,
+    )
+
+    # the next batch's fold reads ONE base per table: base/v=b holds only
+    # residue b % period, so no other residue's base is scanned — and the
+    # slice it reads is exactly that residue's share of the full chain
+    nxt = 1 + max(
+        int(d[2:])
+        for sub in ("base", "delta")
+        for d in os.listdir(f"{state}/counts/{sub}")
+        if d.startswith("v=")
+    )
+    fold_r = nxt % period
+    for t in _SCHEMAS:
+        vmap, _, live = _rotating_versions(spark, f"{state}/{t}", nxt, period)
+        assert all(v is not None for v in vmap.values()), t
+        fold = _fold_input(
+            spark, state, t, vmap, live, period, fold_r,
+            spark.createDataFrame([], _SCHEMAS[t]),
+        )
+        base_dirs = {
+            f.split("/base/")[1].split("/")[0]
+            for f in fold.inputFiles()
+            if "/base/" in f
+        }
+        assert base_dirs == {f"v={vmap[fold_r]}"}, (t, fold.inputFiles())
+        in_residue = F.pmod(F.col(_ROT_KEY[t]), F.lit(period)) == fold_r
+        want = _chain(spark, state, t, vmap, live, period).filter(in_residue)
+        assert sorted(map(str, fold.collect())) == sorted(
+            map(str, want.collect())
+        ), t
 
     probe = read_containment_state(spark, state, "probe", compact_every=2)
     assert probe.filter(F.size("pids") == 0).count() == 0  # no tombstones

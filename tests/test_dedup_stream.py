@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from esop_spark.operators import dedup
 from esop_spark.operators.dedup import _lsh_candidates, with_minhash_signature
-from esop_spark.streaming.dedup_stream import lsh_candidate_stream
+from esop_spark.streaming.dedup_stream import lsh_compacted_query
 
 SCHEMA = "doc_id long, text string"
 
@@ -45,23 +45,33 @@ def test_projection_signature_equals_batch_aggregation(spark):
                 assert row[f"h{i}"] == proj[did][f"h{i}"], (family, did, i)
 
 
-def _drain(spark, src, ckpt, **kw):
-    rows: list = []
+def drain_compacted(spark, query, src, schema, run, **kw):
+    """availableNow drain of ``src`` through a ``*_compacted_query``,
+    with pairs, state and checkpoint under ``run``. Returns the pair rows
+    of the ``batch=`` partitions THIS drain wrote, so a restart's drain
+    reports only its own output."""
+    pairs = os.path.join(run, "pairs")
 
-    def sink(batch_df, _bid):
-        rows.extend(batch_df.collect())
+    def batches():
+        return set(os.listdir(pairs)) if os.path.isdir(pairs) else set()
 
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = (
-        lsh_candidate_stream(stream, **kw)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    before = batches()
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = query(
+        stream, pairs, os.path.join(run, "state"), os.path.join(run, "ckpt"),
+        **kw,
     )
-    assert q.awaitTermination(120), "stream did not terminate"
-    return rows
+    assert q.awaitTermination(180), "stream did not terminate"
+    new = sorted(d for d in batches() - before if d.startswith("batch="))
+    if not new:
+        return []
+    return spark.read.schema("band int, id_a bigint, id_b bigint").parquet(
+        *(os.path.join(pairs, d) for d in new)
+    ).collect()
+
+
+def _drain(spark, src, ckpt, **kw):
+    return drain_compacted(spark, lsh_compacted_query, src, SCHEMA, ckpt, **kw)
 
 
 def _batch_pairs(docs, **kw):

@@ -7,7 +7,8 @@ import os
 from pyspark.sql import functions as F
 
 from esop_spark.operators.similarity import banded_semantic_buckets
-from esop_spark.streaming.dedup_stream import embedding_candidate_stream
+from esop_spark.streaming.dedup_stream import embedding_compacted_query
+from tests.test_dedup_stream import drain_compacted
 
 SCHEMA = "vec_id bigint, embedding array<double>"
 DIM = 64
@@ -57,22 +58,10 @@ def _batch_candidates(vecs):
 
 
 def _drain(spark, src, ckpt, max_bucket=100):
-    rows: list = []
-
-    def sink(batch_df, _bid):
-        rows.extend(batch_df.collect())
-
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = (
-        embedding_candidate_stream(stream, max_bucket=max_bucket)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return drain_compacted(
+        spark, embedding_compacted_query, src, SCHEMA, ckpt,
+        max_bucket=max_bucket,
     )
-    assert q.awaitTermination(120), "stream did not terminate"
-    return rows
 
 
 def test_replay_equals_batch_candidates(spark, tmp_path):

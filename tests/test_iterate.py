@@ -13,18 +13,24 @@ from esop_spark.operators.iterate import (
 )
 
 
-def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persistent_ids(spark) -> set[int]:
+    """Ids of the session's persistent RDDs. Tests compare id SETS, not
+    counts: the ContextCleaner may unpersist an earlier test's garbage
+    RDD at any moment, which shifts a session-wide count but cannot add
+    an id or bring back a released one."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_checkpoint_release_frees_blocks(spark):
-    base = _n_persistent(spark)
+    base = _persistent_ids(spark)
     ckpt = RoundCheckpointer(spark)
     df = ckpt.checkpoint(spark.range(1000).withColumn("x", F.col("id") * 2))
     assert df.count() == 1000
-    assert _n_persistent(spark) > base  # the checkpoint pinned blocks
+    pinned = _persistent_ids(spark) - base
+    assert pinned  # the checkpoint pinned blocks
     ckpt.release(df)
-    assert _n_persistent(spark) == base
+    # release removed exactly the pinned ids and nothing new appeared
+    assert _persistent_ids(spark) - base == set()
 
 
 def test_lazy_checkpoint_materializes_on_first_full_action(spark):
@@ -33,21 +39,23 @@ def test_lazy_checkpoint_materializes_on_first_full_action(spark):
     blocks (the one-job-per-round loop construction); release then frees
     exactly those blocks. Values are identical to the eager form."""
     ckpt = RoundCheckpointer(spark)
-    base = _n_persistent(spark)
+    base = _persistent_ids(spark)
     df = ckpt.checkpoint(
         spark.range(500).withColumn("x", F.col("id") * 2), eager=False
     )
     total = df.agg(F.sum("x")).first()[0]
     assert total == 2 * (499 * 500 // 2)
-    assert _n_persistent(spark) > base  # the action pinned the blocks
+    pinned = _persistent_ids(spark) - base
+    assert pinned  # the action pinned the blocks
     # the frame now reads its own blocks (lineage truncated, values stable)
     assert df.count() == 500
     ckpt.release(df)
-    assert _n_persistent(spark) == base
+    # release removed exactly the pinned ids and nothing new appeared
+    assert _persistent_ids(spark) - base == set()
 
 
 def test_loop_holds_bounded_rounds(spark):
-    base = _n_persistent(spark)
+    base = _persistent_ids(spark)
     ckpt = RoundCheckpointer(spark)
     cur = ckpt.checkpoint(spark.range(100))
     for _ in range(6):
@@ -55,10 +63,10 @@ def test_loop_holds_bounded_rounds(spark):
         cur = ckpt.checkpoint(cur.withColumn("id", F.col("id") + 1))
         ckpt.release(prev)
         # at most the live round's ids are pinned by this checkpointer
-        assert _n_persistent(spark) - base <= 2
+        assert len(_persistent_ids(spark) - base) <= 2
     assert cur.agg(F.min("id")).collect()[0][0] == 6
     ckpt.release_all()
-    assert _n_persistent(spark) == base
+    assert _persistent_ids(spark) - base == set()
 
 
 def test_release_is_noop_for_unowned_frames(spark):
@@ -79,31 +87,33 @@ def test_release_spares_side_effect_caches(spark):
     from esop_spark.operators import dedup
 
     dedup.release_shared_relations()  # drain earlier tests' registrations
-    base = _n_persistent(spark)
+    base = _persistent_ids(spark)
     dep = spark.range(500).persist()  # lazy: no buffer blocks yet
-    assert _n_persistent(spark) == base
+    assert _persistent_ids(spark) - base == set()
     ckpt = RoundCheckpointer(spark)
     out = ckpt.checkpoint(dep.withColumn("y", F.col("id") + 1))
     # the checkpoint job materialized BOTH the checkpoint and dep's cache
-    assert _n_persistent(spark) == base + 2
+    both = _persistent_ids(spark) - base
+    assert len(both) == 2
     ckpt.release(out)
     # only the checkpoint's own block freed; the cache survives
-    assert _n_persistent(spark) == base + 1
+    cache = _persistent_ids(spark) - base
+    assert len(cache) == 1 and cache < both
     assert dep.count() == 500
     dep.unpersist(False)
-    assert _n_persistent(spark) == base
+    assert _persistent_ids(spark) - base == set()
 
 
 def test_shared_checkpoint_released_by_hook(spark):
     from esop_spark.operators import dedup
 
     dedup.release_shared_relations()  # drain earlier tests' registrations
-    base = _n_persistent(spark)
+    base = _persistent_ids(spark)
     df = shared_checkpoint(spark.range(200).withColumn("x", F.col("id") * 3))
     assert df.count() == 200
-    assert _n_persistent(spark) > base  # pinned until the hook runs
+    assert _persistent_ids(spark) - base  # pinned until the hook runs
     release_shared_checkpoints()
-    assert _n_persistent(spark) == base
+    assert _persistent_ids(spark) - base == set()
 
 
 def test_release_shared_relations_frees_checkpoints_too(spark):
@@ -113,13 +123,15 @@ def test_release_shared_relations_frees_checkpoints_too(spark):
     from esop_spark.operators import dedup
 
     dedup.release_shared_relations()  # drain earlier tests' registrations
-    base = _n_persistent(spark)
-    shared_checkpoint(spark.range(100)).count()
+    base = _persistent_ids(spark)
+    # held, so only the hook (not the ContextCleaner) can drop its blocks
+    ck = shared_checkpoint(spark.range(100))
+    ck.count()
     rel = dedup.share_relation(spark.range(50).withColumn("z", F.col("id") % 5))
     rel.count()
-    assert _n_persistent(spark) >= base + 2
+    assert len(_persistent_ids(spark) - base) >= 2
     dedup.release_shared_relations()
-    assert _n_persistent(spark) == base
+    assert _persistent_ids(spark) - base == set()
 
 
 def test_repeated_capped_jaccard_leaves_persistent_rdds_flat(spark):
@@ -136,18 +148,18 @@ def test_repeated_capped_jaccard_leaves_persistent_rdds_flat(spark):
         "doc_id long, text string",
     )
     dedup.release_shared_relations()  # drain earlier tests' registrations
-    base = _n_persistent(spark)
+    base = _persistent_ids(spark)
     for _ in range(3):
         dedup.ngram_jaccard_pairs(docs, threshold=0.3, max_df=3).collect()
         dedup.release_shared_relations()
-        assert _n_persistent(spark) == base
+        assert _persistent_ids(spark) - base == set()
 
 
 def test_disown_leaves_final_round_usable(spark):
-    base = _n_persistent(spark)
+    base = _persistent_ids(spark)
     ckpt = RoundCheckpointer(spark)
     df = ckpt.checkpoint(spark.range(50))
     ckpt.disown(df)
     ckpt.release_all()  # must not free the disowned frame's blocks
     assert df.count() == 50
-    assert _n_persistent(spark) > base  # still pinned (GC will reclaim)
+    assert _persistent_ids(spark) - base  # still pinned (GC will reclaim)

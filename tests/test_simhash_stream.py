@@ -14,7 +14,8 @@ from esop_spark.operators.dedup import (
     simhash_signatures,
     with_simhash_signature,
 )
-from esop_spark.streaming.dedup_stream import simhash_candidate_stream
+from esop_spark.streaming.dedup_stream import simhash_compacted_query
+from tests.test_dedup_stream import drain_compacted
 
 SCHEMA = "doc_id long, text string"
 KW = dict(num_bits=32, chunks=4)
@@ -68,22 +69,9 @@ def test_projection_handles_repeated_tokens(spark):
 
 
 def _drain(spark, src, ckpt, **kw):
-    rows: list = []
-
-    def sink(batch_df, _bid):
-        rows.extend(batch_df.collect())
-
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = (
-        simhash_candidate_stream(stream, **kw)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return drain_compacted(
+        spark, simhash_compacted_query, src, SCHEMA, ckpt, **kw
     )
-    assert q.awaitTermination(120), "stream did not terminate"
-    return rows
 
 
 def _batch_candidates(docs, **kw):

@@ -12,7 +12,8 @@ from esop_spark.operators.dedup import (
     _weighted_lsh_candidates,
     with_weighted_minhash_signature,
 )
-from esop_spark.streaming.dedup_stream import weighted_lsh_candidate_stream
+from esop_spark.streaming.dedup_stream import weighted_lsh_compacted_query
+from tests.test_dedup_stream import drain_compacted
 
 SCHEMA = "doc_id long, text string"
 
@@ -72,22 +73,9 @@ def test_weighted_projection_caps_tf(spark):
 
 
 def _drain(spark, src, ckpt, **kw):
-    rows: list = []
-
-    def sink(batch_df, _bid):
-        rows.extend(batch_df.collect())
-
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = (
-        weighted_lsh_candidate_stream(stream, **kw)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return drain_compacted(
+        spark, weighted_lsh_compacted_query, src, SCHEMA, ckpt, **kw
     )
-    assert q.awaitTermination(120), "stream did not terminate"
-    return rows
 
 
 def _batch_pairs(docs, **kw):

@@ -1,14 +1,16 @@
-"""Streaming-twin throughput bench: drain an availableNow replay of a
-parquet table through each LSH candidate stream and report wall time,
-input rows, and rows/s — the streaming analogue of tools/rehearse.py.
+"""Streaming throughput bench: drain an availableNow replay of a parquet
+table through each compacted candidate stream (the four LSH families and
+containment) and report wall time, input rows, candidate rows and rows/s
+— the streaming analogue of tools/rehearse.py.
 
 The number that matters at 100 TB is sustained rows/s through the
-stateful (band, bucket) exchange: state per key is bounded (member ids up
-to the hot cap, a single anchor after), so throughput should hold as the
-corpus grows — measured here at two SFs.
+compacted state: state per key is bounded (member ids up to the hot cap,
+a single anchor after), so throughput should hold as the corpus grows —
+measured here at two SFs. ``--batches=N`` splits the source into N files
+and drains them as N micro-batches, printing per-batch durations.
 
 Usage:
-  python tools/stream_bench.py /root/testdata/sf0.1 [/root/repo/.scratch/sf10]
+  python tools/stream_bench.py SF_DIR [SF_DIR ...] [--batches=N] [--only=a,b]
 """
 
 from __future__ import annotations
@@ -23,13 +25,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import _pinned_shuffle_partitions
 from esop_spark.session import get_spark
 from esop_spark.streaming.dedup_stream import (
-    embedding_candidate_stream,
     embedding_compacted_query,
-    lsh_candidate_stream,
     lsh_compacted_query,
-    simhash_candidate_stream,
     simhash_compacted_query,
-    weighted_lsh_candidate_stream,
     weighted_lsh_compacted_query,
 )
 from esop_spark.streaming.containment_stream import containment_compacted_query
@@ -37,19 +35,8 @@ from esop_spark.streaming.containment_stream import containment_compacted_query
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
 
-STREAMS = [
-    ("lsh_candidate_stream", "documents", DOC_SCHEMA,
-     lambda df: lsh_candidate_stream(df)),
-    ("weighted_lsh_candidate_stream", "documents", DOC_SCHEMA,
-     lambda df: weighted_lsh_candidate_stream(df)),
-    ("simhash_candidate_stream", "documents", DOC_SCHEMA,
-     lambda df: simhash_candidate_stream(df)),
-    ("embedding_candidate_stream", "embeddings", EMB_SCHEMA,
-     lambda df: embedding_candidate_stream(df)),
-]
-
-# foreachBatch variants own their sink (pairs_dir) and state (state_dir);
-# the drain counts the written pair rows instead of foreachBatch output
+# each query owns its sink (pairs_dir) and state (state_dir); a drain
+# counts the written pair rows
 COMPACTED = [
     ("lsh_compacted_query", "documents", DOC_SCHEMA, lsh_compacted_query),
     ("weighted_lsh_compacted_query", "documents", DOC_SCHEMA,
@@ -78,48 +65,23 @@ def _sf_of(sf_dir: str) -> float:
         return -1.0
 
 
-def drain(spark, sf_dir: str, name: str, table: str, schema: str, build, ckpt_root: str):
+def _stage_source(sf_dir: str, table: str, ckpt_root: str) -> str:
+    """Directory to readStream ``table`` from: readStream sources must be
+    directories, so the single-file testdata layout is staged behind a
+    symlink dir (sf10 tables are already dirs)."""
     src = os.path.join(sf_dir, f"{table}.parquet")
     if os.path.isfile(src):
-        # readStream sources must be directories; stage the single-file
-        # testdata layout behind a symlink dir (sf10 tables are already dirs)
         stage = os.path.join(ckpt_root, f"src-{table}-{_sf_tag(sf_dir)}")
         os.makedirs(stage, exist_ok=True)
         link = os.path.join(stage, "part-0.parquet")
         if not os.path.exists(link):
             os.symlink(src, link)
         src = stage
-    n_in = spark.read.parquet(src).count()
-    counts = {"rows": 0}
-
-    def sink(batch_df, _bid):
-        counts["rows"] += batch_df.count()
-
-    ckpt = os.path.join(ckpt_root, f"{name}-{_sf_tag(sf_dir)}")
-    stream = spark.readStream.schema(schema).parquet(src)
-    t0 = time.perf_counter()
-    q = (
-        build(stream)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    wall = time.perf_counter() - t0
-    return n_in, counts["rows"], round(wall, 2), round(n_in / wall)
+    return src
 
 
 def drain_compacted(spark, sf_dir, name, table, schema, query, ckpt_root):
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isfile(src):
-        stage = os.path.join(ckpt_root, f"src-{table}-{_sf_tag(sf_dir)}")
-        os.makedirs(stage, exist_ok=True)
-        link = os.path.join(stage, "part-0.parquet")
-        if not os.path.exists(link):
-            os.symlink(src, link)
-        src = stage
+    src = _stage_source(sf_dir, table, ckpt_root)
     n_in = spark.read.parquet(src).count()
     run = os.path.join(ckpt_root, f"{name}-{_sf_tag(sf_dir)}")
     pairs, state, ckpt = (os.path.join(run, d) for d in ("pairs", "state", "ckpt"))
@@ -184,24 +146,16 @@ def main() -> None:
         elif f.startswith("--only="):
             only = set(f.split("=", 1)[1].split(","))
             flags.discard(f)
-    unknown = flags - {"--stateful-only", "--compacted-only"}
-    if unknown:
-        sys.exit(f"unknown flag(s): {sorted(unknown)} (valid: "
-                 f"--stateful-only, --compacted-only, --batches=N, --only=a,b)")
-    if flags >= {"--stateful-only", "--compacted-only"}:
-        sys.exit("--stateful-only and --compacted-only are mutually exclusive")
+    if flags:
+        sys.exit(f"unknown flag(s): {sorted(flags)} (valid: "
+                 f"--batches=N, --only=a,b)")
     sf_dirs = args or ["/root/testdata/sf0.1"]
-    which = []
-    if "--stateful-only" not in flags:
-        which.append((COMPACTED, drain_compacted))
-    if "--compacted-only" not in flags:
-        which.insert(0, (STREAMS, drain))
     spark = get_spark("stream-bench")
     import tempfile
 
     ckpt_root = tempfile.mkdtemp(prefix="stream-bench-")
     if batches:
-        # incremental regime: compacted family only, per-batch timings
+        # incremental regime: per-batch timings
         spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
                        str(max(2 * batches, 100)))
         print("| stream | sf_dir | batches | input rows | candidate rows "
@@ -230,17 +184,16 @@ def main() -> None:
             "spark.sql.shuffle.partitions",
             str(_pinned_shuffle_partitions(_sf_of(sf_dir))),
         )
-        for streams, fn in which:
-            for name, table, schema, build in streams:
-                if only and name not in only:
-                    continue
-                n_in, n_out, wall, rate = fn(
-                    spark, sf_dir, name, table, schema, build, ckpt_root
-                )
-                print(
-                    f"| {name} | {sf_dir} | {n_in} | {n_out} | {wall} | {rate} |",
-                    flush=True,
-                )
+        for name, table, schema, query in COMPACTED:
+            if only and name not in only:
+                continue
+            n_in, n_out, wall, rate = drain_compacted(
+                spark, sf_dir, name, table, schema, query, ckpt_root
+            )
+            print(
+                f"| {name} | {sf_dir} | {n_in} | {n_out} | {wall} | {rate} |",
+                flush=True,
+            )
 
 
 if __name__ == "__main__":
