@@ -702,15 +702,8 @@ def word_tf(
     )
 
 
-# vocab split width for weighted_jaccard_pairs' segment-mass prune: 4
-# contiguous ranges keeps the per-pair bound walk tiny (two higher-order
-# exprs over 4-element arrays — well inside whole-stage codegen) while
-# bounding Σmin far tighter than the scalar mass ratio
-_WJ_SEGMENTS = 4
-
-
 def _wj_prune_floor(threshold: float) -> float:
-    """Bound the weighted-Jaccard prunes compare against, just below τ. A
+    """Bound the weighted-Jaccard prune compares against, just below τ. A
     true pair's unrounded J_w can sit at τ − 5e-7 (the final filter is on
     J_w rounded to 6 places), so the floor must stay at or below that for
     every τ. ``τ·0.999`` alone fails for τ ≤ 5e-4; ``τ − 1e-6`` alone
@@ -823,28 +816,6 @@ def weighted_jaccard_pairs(
             lambda w: F.size(F.filter(F.col("words"), lambda x: x == w)),
         ).alias("tfv"),
     )
-    # Round 12 (guide §1.2 step 2): per-doc SEGMENT masses — the vocab
-    # split into _WJ_SEGMENTS contiguous ranges, each row carrying the tf
-    # sum per range. Σ_seg min(segA, segB) ≥ Σ_t min(tfA, tfB) bounds the
-    # pair's shared mass from above with a k-element walk instead of the
-    # V-element one, and is uniformly tighter than min(massA, massB)
-    # (the k=1 case), so it slots between the mass-ratio prune and the
-    # full zip_with fold as a second short-circuit conjunct.
-    seg_len = max(1, -(-len(vocab) // _WJ_SEGMENTS))
-    seg_starts = list(range(1, len(vocab) + 1, seg_len))
-    prep = prep.withColumn(
-        "segm",
-        F.array(
-            *[
-                F.aggregate(
-                    F.slice("tfv", s, seg_len),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, x: acc + x,
-                )
-                for s in seg_starts
-            ]
-        ),
-    )
     # Round 11 (guide §5): prep (dense tf vectors — the expensive
     # per-vocab-word filter transform) feeds BOTH the broadcast side and
     # the streamed side; persist so it is computed once.
@@ -854,22 +825,12 @@ def weighted_jaccard_pairs(
     a = prep.repartition(target, F.col(id_col)).alias("a")
     b = F.broadcast(prep).alias("b")
     floor = F.lit(_wj_prune_floor(threshold))
+    # the only prune: a segment-mass bound (Σ over 4 vocab ranges of the
+    # smaller range mass) cut 62 % of the pairs ratio_ok keeps at sf0.1,
+    # but its per-pair walk cost more than the folds it saved (4-core
+    # qprof A/B, min 20.3-20.6 s without it vs 20.6-23.3 s with it)
     ratio_ok = F.least(F.col("a.mass"), F.col("b.mass")) >= floor * F.greatest(
         F.col("a.mass"), F.col("b.mass")
-    )
-    # segment-mass upper bound on the shared mass (see prep above):
-    # J_w ≤ U/(mass_a + mass_b − U) because J_w = S/(ma+mb−S) is
-    # increasing in S and S ≤ U. Same floor as ratio_ok (see
-    # _wj_prune_floor: a true pair has J_w ≥ τ − 5e-7, never below the
-    # floor, so neither prune can drop one); the authoritative filter
-    # stays the rounded J_w ≥ threshold at the end.
-    seg_ub = F.aggregate(
-        F.zip_with(F.col("a.segm"), F.col("b.segm"), lambda x, y: F.least(x, y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    seg_ok = seg_ub.cast("double") >= floor * (
-        F.col("a.mass") + F.col("b.mass") - seg_ub
     )
     # Σmin over the dense vectors: one zip_with + integer fold per
     # surviving pair. Round 11 A/B: an UNROLLED flat sum of V
@@ -891,7 +852,7 @@ def weighted_jaccard_pairs(
     return (
         a.join(
             b,
-            (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & ratio_ok & seg_ok,
+            (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & ratio_ok,
         )
         .select(
             F.col(f"a.{id_col}").alias("id_a"),

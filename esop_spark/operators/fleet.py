@@ -8,33 +8,32 @@ Reference semantics re-expressed as DataFrame plans:
   dcs under the cluster dir and sibling nodes under each dc dir
   (/root/reference/core/src/main/java/com/instaclustr/esop/local/LocalFileRestorer.java:279-313
   ``listDcs``/``listNodes``), optionally restricted by ``--dcs``.
-- Global removal: the per-node victim selection (exact name XOR --oldest XOR
-  --older-than) and per-node unique-object deletion run for EVERY resolved
-  node location
-  (/root/reference/core/src/main/java/com/instaclustr/esop/impl/remove/RemoveBackupOperation.java:100-190).
-  ``--oldest`` is per node: each node's own oldest backup is that node's
-  victim (``getBackupsToDelete`` evaluates against each node's report).
-- An object is deletable iff NO surviving backup of ANY node references it.
-  Physical keys are node-scoped (``<cluster>/<dc>/<node>/<object_key>``), so
-  this reduces to a per-(dc, node, object_key) refcount — expressed here as
-  one anti-join keyed on the full physical identity, which keeps the rule
-  correct even if a deployment shares objects across nodes.
+- Listing and removal are esop's node rules (``operators.manifest``) run at
+  the fleet scope ``FLEET = ("dc", "node")``: each (dc, node) is one
+  manifest set, and an object is identified by ``(dc, node, object_key)``
+  because physical keys are node-scoped
+  (``<cluster>/<dc>/<node>/<object_key>``). So victims are chosen per node
+  (exact name XOR that node's own oldest XOR --older-than,
+  RemoveBackupOperation.java:100-190), and an object is deletable iff every
+  backup of its node that references it is a victim.
 
 Scale design: the fleet manifest read is ONE glob read over
 ``<cluster>/*/*/manifests`` (dc/node recovered from the file path), not an
-N-way per-node union — 1000 nodes cost one Spark job. All aggregations key on
-(dc, node, …) so per-node reports parallelize across the fleet; the only
-driver-side state is the dc/node directory listing (fleet-sized, not
-file-sized).
+N-way per-node union — 1000 nodes cost one Spark job. Every window and
+aggregation keys on (dc, node, …), so per-node work parallelizes across the
+fleet; the only driver-side state is the dc/node directory listing and the
+victim list (fleet × victim backups).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from esop_spark.operators.manifest import FLEET, list_backups, removal_plan
+from esop_spark.operators.pipelines import delete_backups
 from esop_spark.sources import manifest_json
 
 
@@ -97,83 +96,9 @@ def read_fleet_manifests(
 
 
 def global_list_backups(fleet_entries: DataFrame) -> DataFrame:
-    """Per-(dc, node, backup) files / size / reclaimable — list_backups (A1-A3)
-    generalized over the fleet union. Reclaimable uses the full physical
-    object identity (dc, node, object_key): bytes freed if that node's backup
-    were removed and no other backup anywhere still referenced the object."""
-    # Round 11 (guide §2.4): two-level aggregation replaces the former
-    # object-grain join-back (agg → SMJ of the full entry relation against
-    # its own refcounts → re-agg). An object with exactly one referencing
-    # backup contributes ALL its rows' bytes to that one backup, so the
-    # reclaimable mass aggregates straight off the object grain — no
-    # entry-relation join, one exchange fewer.
-    per_backup = fleet_entries.groupBy(
-        "dc", "node", "backup_name", "backup_ts"
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("files"),
-        F.sum("size").cast("bigint").alias("size_bytes"),
-    )
-    single_ref = (
-        fleet_entries.groupBy("dc", "node", "object_key")
-        .agg(
-            F.countDistinct("backup_name").alias("n_backups"),
-            F.max("backup_name").alias("backup_name"),
-            F.sum("size").alias("sz"),
-        )
-        .filter(F.col("n_backups") == 1)
-        .groupBy("dc", "node", "backup_name")
-        .agg(F.sum("sz").cast("bigint").alias("reclaimable_bytes"))
-    )
-    return (
-        per_backup.join(
-            single_ref, ["dc", "node", "backup_name"], "left_outer"
-        )
-        .withColumn(
-            "reclaimable_bytes",
-            F.coalesce("reclaimable_bytes", F.lit(0)).cast("bigint"),
-        )
-        .select(
-            "dc",
-            "node",
-            "backup_name",
-            "backup_ts",
-            "files",
-            "size_bytes",
-            "reclaimable_bytes",
-        )
-    )
-
-
-def _select_victims(
-    fleet_entries: DataFrame,
-    backup_name: str | None = None,
-    oldest: bool = False,
-    older_than_ms: int | None = None,
-) -> DataFrame:
-    """Per-node victim selection (RemoveBackupOperation.getBackupsToDelete,
-    evaluated against each node's own report): exact name XOR per-node oldest
-    XOR older-than cutoff. Returns (dc, node, backup_name)."""
-    manifests = fleet_entries.select(
-        "dc", "node", "backup_name", "backup_ts"
-    ).distinct()
-    if backup_name is not None:
-        return manifests.filter(F.col("backup_name") == backup_name).select(
-            "dc", "node", "backup_name"
-        )
-    if oldest:
-        w = Window.partitionBy("dc", "node").orderBy(
-            F.col("backup_ts").asc_nulls_last(), F.col("backup_name").asc()
-        )
-        return (
-            manifests.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("dc", "node", "backup_name")
-        )
-    if older_than_ms is not None:
-        return manifests.filter(F.col("backup_ts") < older_than_ms).select(
-            "dc", "node", "backup_name"
-        )
-    raise ValueError("select victims via backup_name, oldest, or older_than_ms")
+    """Per-(dc, node, backup) files / size / reclaimable: ``list_backups``
+    at fleet scope."""
+    return list_backups(fleet_entries, *FLEET)
 
 
 def global_removal_plan(
@@ -182,46 +107,14 @@ def global_removal_plan(
     oldest: bool = False,
     older_than_ms: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """The pure-query core of global removal: (victims, removable).
-
-    removable = (dc, node, object_key, size) referenced by a victim backup
-    and by NO surviving backup of any node — one semi-join + one anti-join on
-    the physical object identity.
-    """
-    victims = _select_victims(fleet_entries, backup_name, oldest, older_than_ms)
-    keyed = fleet_entries.select("dc", "node", "backup_name", "object_key", "size")
-    # Round 11 (guide §2.4): ONE object-grain aggregation over the entry
-    # relation flagged by a broadcast victim join replaces the former
-    # semi-join + anti-join + distinct ×2 + object-grain anti-join (three
-    # full-relation exchanges). Victim-side sizes ride a per-object
-    # collect_set (bounded by the distinct sizes one object exhibits), so
-    # the output rows equal the old distinct(victim rows) exactly; struct
-    # wrapping keeps a null size representable.
-    flagged = keyed.join(
-        F.broadcast(victims.withColumn("_v", F.lit(1))),
-        ["dc", "node", "backup_name"],
-        "left",
+    """(victims, removable): ``removal_plan`` at fleet scope."""
+    return removal_plan(
+        fleet_entries,
+        *FLEET,
+        backup_name=backup_name,
+        oldest=oldest,
+        older_than_ms=older_than_ms,
     )
-    removable = (
-        flagged.groupBy("dc", "node", "object_key")
-        .agg(
-            F.collect_set(
-                F.when(F.col("_v") == 1, F.struct("size"))
-            ).alias("_vsizes"),
-            F.max(F.when(F.col("_v").isNull(), 1).otherwise(0)).alias(
-                "_any_sur"
-            ),
-        )
-        .filter((F.size("_vsizes") > 0) & (F.col("_any_sur") == 0))
-        .select(
-            "dc",
-            "node",
-            "object_key",
-            F.explode("_vsizes").alias("_s"),
-        )
-        .select("dc", "node", "object_key", F.col("_s.size").alias("size"))
-    )
-    return victims, removable
 
 
 def global_removal_report(
@@ -260,62 +153,16 @@ def global_remove_backup(
     dry_run: bool = False,
 ) -> dict[str, int]:
     """remove-backup --global-request: resolve the fleet from one node
-    location, select victims per node, delete victim-unique objects + victim
-    manifests (+ topology files) on every node.
-
-    Object deletion is distributed (foreachPartition over the removable set,
-    the DeleteObjects-batch analog); manifest/topology removal is per-victim
-    (fleet × backups rows — driver-small, as in the reference's per-node
-    loop).
-    """
+    location, then ``delete_backups`` at fleet scope under the cluster dir:
+    victims per node, their unique objects, manifests and topology files on
+    every node."""
     base, cluster, _dc, _node = split_node_location(node_location)
-    fleet = read_fleet_manifests(spark, base, cluster, dcs)
-    victims, removable = global_removal_plan(
-        fleet, backup_name, oldest, older_than_ms
+    return delete_backups(
+        read_fleet_manifests(spark, base, cluster, dcs),
+        os.path.join(base, cluster),
+        *FLEET,
+        backup_name=backup_name,
+        oldest=oldest,
+        older_than_ms=older_than_ms,
+        dry_run=dry_run,
     )
-    removable = removable.persist()
-    n_objects = removable.count()
-    victim_rows = victims.collect()  # fleet × victim-backups: driver-small
-    batch_sizes: list = []
-    if not dry_run:
-        cluster_dir = os.path.abspath(os.path.join(base, cluster))
-
-        def delete_partition(rows):
-            # chunked like the provider API (DeleteObjects caps at 100 keys
-            # per request, BaseS3Restorer.java:251-253): one round-trip per
-            # batch against an object store, plain unlinks locally; yields
-            # the per-request batch sizes (n/100 ints — bounded collect).
-            # NOTE: the deletes themselves are idempotent (missing keys are
-            # treated as deleted), but this request LOG is best-effort
-            # under task retries/stage recompute — a retried partition
-            # re-runs its (no-op) requests and the collected sizes can
-            # include the extras, so delete_requests/max_delete_batch are
-            # observability stats, not an exactly-once request count.
-            from esop_spark.sources.cloud_profiles import delete_objects_batched
-
-            return iter(
-                delete_objects_batched(
-                    os.path.join(
-                        cluster_dir, row["dc"], row["node"], row["object_key"]
-                    )
-                    for row in rows
-                )
-            )
-
-        batch_sizes = removable.rdd.mapPartitions(delete_partition).collect()
-        for r in victim_rows:
-            node_dir = os.path.join(cluster_dir, r["dc"], r["node"])
-            for rel in (
-                os.path.join("manifests", f"{r['backup_name']}.json"),
-                os.path.join("topology", f"{r['backup_name']}.json"),
-            ):
-                p = os.path.join(node_dir, rel)
-                if os.path.exists(p):
-                    os.remove(p)
-    removable.unpersist()
-    return {
-        "backups_removed": len(victim_rows),
-        "objects_removed": n_objects,
-        "delete_requests": len(batch_sizes),
-        "max_delete_batch": max(batch_sizes, default=0),
-    }

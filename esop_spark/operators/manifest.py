@@ -1,4 +1,4 @@
-"""Backup-listing analytics (the `esop list` surface).
+"""Backup listing and removal (the `esop list` and `remove-backup` rules).
 
 Reference semantics:
 - per-backup report: files = count(entries), size = sum(size)
@@ -6,20 +6,30 @@ Reference semantics:
 - reclaimable space: bytes of objects referenced by exactly one manifest
   (Manifest.java:460-483, ManifestFilesCounter at :407-457)
 - global totals over distinct object keys (Manifest.java:452-458,676-702)
+- safe removal: delete an object only when no surviving backup references
+  it; victims by exact name XOR oldest XOR older-than
+  (RemoveBackupOperation.java:100-190)
+
+Every rule takes a **scope**: the columns that name one manifest set.
+``()`` is one node's bucket; ``FLEET = ("dc", "node")`` is the
+``--global-request`` union, where an object is identified by
+``(dc, node, object_key)`` because physical keys are node-scoped.
 
 Scale notes: listing and removal read the entries once. The object-reference
-test is a single shuffle on ``object_key`` (one window, shared by both); the
-per-backup rollup is a second shuffle on ``backup_name``, partial-aggregated
-map-side by Catalyst. At 100 TB the
-``object_key`` shuffle dominates; keys are content-addressed (uniform hash
-distribution) so no skew handling is needed.
+test is a single shuffle on ``(*scope, object_key)`` (one window); the
+per-backup rollup is a second shuffle on the backup, partial-aggregated
+map-side by Catalyst. No window is partitioned by the scope alone, which
+would put a whole node in one task. At 100 TB the ``object_key`` shuffle
+dominates; keys are content-addressed (uniform hash distribution) so no skew
+handling is needed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+FLEET = ("dc", "node")
 
 
 def object_reference_counts(entries: DataFrame) -> DataFrame:
@@ -34,32 +44,27 @@ def object_reference_counts(entries: DataFrame) -> DataFrame:
     )
 
 
-def _flag_single_backup(entries: DataFrame) -> DataFrame:
-    """Entries with a non-null ``object_key``, each flagged ``_one`` when its
-    object names exactly one backup: one window over ``object_key``, so
-    listing and removal read ``entries`` once (no self-join).
-
-    min = max is exact for "one distinct non-null backup_name": both ignore
-    nulls as countDistinct does, and an object whose backup names are all
-    null gets a null flag, which no filter keeps. Null object keys are
-    dropped, as the inner join on ``object_key`` did.
-    """
-    by_object = Window.partitionBy("object_key")
-    return entries.filter(F.col("object_key").isNotNull()).withColumn(
-        "_one",
-        F.min("backup_name").over(by_object) == F.max("backup_name").over(by_object),
-    )
-
-
-def list_backups(entries: DataFrame) -> DataFrame:
-    """Q1: per-backup files / occupied / reclaimable report.
+def list_backups(entries: DataFrame, *scope: str) -> DataFrame:
+    """Q1: per-backup files / occupied / reclaimable report, one row per
+    ``(*scope, backup_name, backup_ts)``.
 
     Equivalent of AllManifestsReport.report (Manifest.java:676-702) minus the
     driver-side rendering (that lives in esop_spark.functions.render).
+
+    An entry is reclaimable when its object names exactly one backup within
+    its scope: one window over ``(*scope, object_key)``, so listing reads
+    ``entries`` once (no self-join). min = max is exact for "one distinct
+    non-null backup_name": both ignore nulls as countDistinct does, and an
+    object whose backup names are all null gets a null flag, which counts
+    nothing. Null object keys are dropped, as an inner join on
+    ``object_key`` would.
     """
+    by_object = Window.partitionBy(*scope, "object_key")
+    one = F.min("backup_name").over(by_object) == F.max("backup_name").over(by_object)
     return (
-        _flag_single_backup(entries)
-        .groupBy("backup_name", "backup_ts")
+        entries.filter(F.col("object_key").isNotNull())
+        .withColumn("_one", one)
+        .groupBy(*scope, "backup_name", "backup_ts")
         .agg(
             F.count(F.lit(1)).alias("files"),
             F.sum("size").cast("bigint").alias("size_bytes"),
@@ -156,21 +161,74 @@ def render_report(
     return render_table(table)
 
 
-def removable_entries(entries: DataFrame, backup_name: str) -> DataFrame:
-    """Q2: objects safe to delete with backup `backup_name` — those referenced
-    by exactly one manifest (necessarily that backup).
+def removable(entries: DataFrame, is_victim: Column, *scope: str) -> DataFrame:
+    """``(*scope, object_key, size)`` of the objects safe to delete with the
+    victim backups: those every non-null backup that references them
+    within their scope marks ``is_victim``. ``is_victim`` is a predicate on
+    an entry row, so the victims reach the window without a join.
 
     Mirrors RemoveBackupOperation's unique-file selection
     (/root/reference/core/src/main/java/com/instaclustr/esop/impl/remove/RemoveBackupOperation.java:100-190
-    via Manifest.java:460-483). A row of `backup_name` whose object names
-    one backup can only name that one. The window keeps the output
-    partitioned on ``object_key``, so the distinct adds no exchange. (One
-    ``groupBy(object_key)`` with a ``collect_set`` of the sizes was faster
-    at sf0.01 but slower than the self-join at sf0.1.)
+    via Manifest.java:460-483), generalized to many victims. Null object
+    keys are dropped, as in listing. The window keeps the output
+    partitioned on ``(*scope, object_key)``, so the distinct adds no
+    exchange. (One ``groupBy(object_key)`` with a ``collect_set`` of the
+    sizes, and a semi- plus anti-join, were both slower at sf0.1.)
     """
+    by_object = Window.partitionBy(*scope, "object_key")
+    named = F.when(F.col("backup_name").isNotNull(), is_victim)
     return (
-        _flag_single_backup(entries)
-        .filter(F.col("_one") & (F.col("backup_name") == backup_name))
-        .select("object_key", "size")
+        entries.filter(F.col("object_key").isNotNull())
+        .withColumn("_all", F.min(named).over(by_object))
+        .filter(is_victim & F.col("_all"))
+        .select(*scope, "object_key", "size")
         .distinct()
     )
+
+
+def removable_entries(entries: DataFrame, backup_name: str) -> DataFrame:
+    """Q2: objects safe to delete with backup ``backup_name`` in one node's
+    manifest set."""
+    return removable(entries, F.col("backup_name") == backup_name)
+
+
+def removal_plan(
+    entries: DataFrame,
+    *scope: str,
+    backup_name: str | None = None,
+    oldest: bool = False,
+    older_than_ms: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(victims, removable) of a removal request: the ``(*scope,
+    backup_name)`` of the victim backups, and ``removable`` over them.
+
+    Victim selection mirrors RemoveBackupOperation.getBackupsToDelete
+    (RemoveBackupOperation.java:177-190), evaluated per scope and per
+    manifest: exact name XOR the scope's oldest manifest (``backup_ts``
+    ascending nulls last, then ``backup_name``) XOR ``backup_ts <
+    older_than_ms``. Name and cutoff are row predicates; the oldest
+    manifests are collected (one per scope) into one.
+    """
+    if backup_name is not None:
+        is_victim = F.col("backup_name") == backup_name
+    elif oldest:
+        # nulls last: a manifest whose name lacks a parseable -<millis> tail
+        # must never win --oldest
+        key = (*scope, "backup_name", "backup_ts")
+        first = F.min(F.struct(F.col("backup_ts").isNull(), "backup_ts", "backup_name"))
+        rows = (
+            entries.groupBy(*scope)
+            .agg(first.alias("_first"))
+            .filter(F.col("_first").isNotNull())
+            .select(*scope, "_first.backup_name", "_first.backup_ts")
+            .collect()
+        )
+        is_victim = F.struct(*key).isin(
+            [F.struct(*(F.lit(r[c]).alias(c) for c in key)) for r in rows]
+        )
+    elif older_than_ms is not None:
+        is_victim = F.col("backup_ts") < older_than_ms
+    else:
+        raise ValueError("select victims via backup_name, oldest, or older_than_ms")
+    victims = entries.filter(is_victim).select(*scope, "backup_name").distinct()
+    return victims, removable(entries, is_victim, *scope)

@@ -28,6 +28,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from esop_spark.operators.manifest import removal_plan
 from esop_spark.sources import manifest_json, snapshot_scan
 
 
@@ -216,6 +217,64 @@ def restore_commitlogs(
     return n
 
 
+def delete_backups(
+    entries: DataFrame,
+    root: str,
+    *scope: str,
+    dry_run: bool = False,
+    **selection,
+) -> dict[str, int]:
+    """Delete the victim backups of ``entries``: first every object only
+    victims reference (``manifest.removal_plan``), then each victim's
+    manifest and topology file, last, so a crashed run stays listable.
+
+    An object lives at ``<root>/<scope values>/<object_key>`` and a victim's
+    manifest at ``<root>/<scope values>/manifests/<name>.json``.
+    ``selection`` holds ``removal_plan``'s victim keywords; ``dry_run``
+    reports the counts without deleting (the reference's report mode).
+
+    Deletion is distributed: each partition issues DeleteObjects-sized bulk
+    requests (100 keys/request, BaseS3Restorer.java:252-276) and yields its
+    request log (n/100 ints, a bounded collect). Deletes are idempotent,
+    but the request log is best-effort under task retries (a recomputed
+    partition re-logs its no-op requests), so delete_requests/
+    max_delete_batch are observability stats, not exactly-once counts.
+    """
+    victims, removable = removal_plan(entries, *scope, **selection)
+    victim_rows = victims.collect()  # scope × victim backups: driver-small
+    removable = removable.persist()
+    n_objects = removable.count()
+    batch_sizes: list = []
+    if not dry_run:
+        root = os.path.abspath(root)
+
+        def delete_partition(rows):
+            from esop_spark.sources.cloud_profiles import delete_objects_batched
+
+            return iter(
+                delete_objects_batched(
+                    os.path.join(root, *(r[c] for c in scope), r["object_key"])
+                    for r in rows
+                )
+            )
+
+        batch_sizes = removable.rdd.mapPartitions(delete_partition).collect()
+        for v in victim_rows:
+            for kind in ("manifests", "topology"):
+                p = os.path.join(
+                    root, *(v[c] for c in scope), kind, f"{v['backup_name']}.json"
+                )
+                if os.path.exists(p):
+                    os.remove(p)
+    removable.unpersist()
+    return {
+        "backups_removed": len(victim_rows),
+        "objects_removed": n_objects,
+        "delete_requests": len(batch_sizes),
+        "max_delete_batch": max(batch_sizes, default=0),
+    }
+
+
 def remove_backup(
     spark: SparkSession,
     bucket_dir: str,
@@ -224,81 +283,19 @@ def remove_backup(
     older_than_ms: int | None = None,
     dry_run: bool = False,
 ) -> dict[str, int]:
-    """Safe backup removal (SURVEY.md §0.4): delete only objects referenced
-    exclusively by the victim backups, then their manifests.
-
-    Victim selection mirrors RemoveBackupOperation.java:177-190: exact name
-    XOR --oldest XOR --older-than. ``dry_run`` computes the deletion set as a
-    pure query (the reference's report mode).
-    """
-    from esop_spark.sources import manifest_json
-
+    """Safe backup removal (SURVEY.md §0.4) on one node's bucket: delete
+    only objects referenced exclusively by the victim backups (exact name
+    XOR --oldest XOR --older-than), then their manifests —
+    ``delete_backups`` at node scope."""
     entries = manifest_json.read_manifests(spark, os.path.join(bucket_dir, "manifests"))
-    manifests = entries.select("backup_name", "backup_ts").distinct()
-    if backup_name is not None:
-        victims = manifests.filter(F.col("backup_name") == backup_name)
-    elif oldest:
-        # nulls last: a manifest whose name lacks a parseable -<millis> tail
-        # must never win --oldest by default (Spark sorts NULLS FIRST asc)
-        victims = manifests.orderBy(
-            F.col("backup_ts").asc_nulls_last(), F.col("backup_name").asc()
-        ).limit(1)
-    elif older_than_ms is not None:
-        victims = manifests.filter(F.col("backup_ts") < older_than_ms)
-    else:
-        raise ValueError("select victims via backup_name, oldest, or older_than_ms")
-
-    victim_names = [r["backup_name"] for r in victims.collect()]
-    # removable iff NO surviving (non-victim) backup references the object —
-    # anti-join against survivor references generalizes the refcount==1 rule
-    # to multi-victim (--older-than) removals
-    removable = (
-        entries.join(victims.select("backup_name"), "backup_name", "left_semi")
-        .select("object_key")
-        .distinct()
-        .join(
-            entries.join(victims.select("backup_name"), "backup_name", "left_anti")
-            .select("object_key")
-            .distinct(),
-            "object_key",
-            "left_anti",
-        )
+    return delete_backups(
+        entries,
+        bucket_dir,
+        backup_name=backup_name,
+        oldest=oldest,
+        older_than_ms=older_than_ms,
+        dry_run=dry_run,
     )
-    removable = removable.persist()
-    n_objects = removable.count()
-    batch_sizes: list = []
-    if not dry_run:
-        abs_bucket = os.path.abspath(bucket_dir)
-
-        # distributed delete — each partition issues DeleteObjects-sized
-        # bulk requests (100 keys/request, BaseS3Restorer.java:252-276) and
-        # yields its request log (n/100 ints — bounded collect); victim
-        # manifests (one per backup, driver-small) removed last so a
-        # crashed run stays listable. Deletes are idempotent but the
-        # request log is best-effort under task retries (a recomputed
-        # partition re-logs its no-op requests), so delete_requests/
-        # max_delete_batch are observability stats, not exactly-once counts
-        def delete_partition(rows):
-            from esop_spark.sources.cloud_profiles import delete_objects_batched
-
-            return iter(
-                delete_objects_batched(
-                    os.path.join(abs_bucket, row["object_key"]) for row in rows
-                )
-            )
-
-        batch_sizes = removable.rdd.mapPartitions(delete_partition).collect()
-        for name in victim_names:
-            mp = os.path.join(bucket_dir, "manifests", f"{name}.json")
-            if os.path.exists(mp):
-                os.remove(mp)
-    removable.unpersist()
-    return {
-        "backups_removed": len(victim_names),
-        "objects_removed": n_objects,
-        "delete_requests": len(batch_sizes),
-        "max_delete_batch": max(batch_sizes, default=0),
-    }
 
 
 def restore(

@@ -5,7 +5,7 @@ Reference semantics:
   prefix, the one with the max embedded timestamp wins
   (/root/reference/core/src/main/java/com/instaclustr/esop/impl/Manifest.java:254-283).
 - P10 removal selection: --older-than → unixtimestamp < now − Δ
-  (--oldest and --backup-name are selected in pipelines.remove_backup)
+  (--oldest and --backup-name are selected in manifest.removal_plan)
   (/root/reference/core/src/main/java/com/instaclustr/esop/impl/remove/RemoveBackupOperation.java:177-190).
 - P9/W4 listing filters: --from-timestamp upper bound, --last-n oldest N
   (/root/reference/core/src/main/java/com/instaclustr/esop/impl/list/ListOperation.java:167-198).

@@ -12,7 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+from esop_spark.cli import main
 from esop_spark.operators import entities, manifest, pipelines, topology
+from esop_spark.operators.manifest import FLEET
 from esop_spark.operators.dedup import release_shared_relations
 from esop_spark.sources import fixtures
 from tests.test_library_session import SF_DIR
@@ -78,6 +80,61 @@ def test_remove_backup_keeps_shared_objects(spark, tmp_path):
     target = str(tmp_path / "restored")
     r = pipelines.restore(spark, bucket, target, backup_name="snap1-sv-1000")
     assert r["downloaded"] == 4
+
+
+KEYLESS_VICTIM = "snap1-sv-1000"
+
+
+def _add_keyless_entry(manifest_path):
+    """Append an entry with no ``objectKey`` to the first sstable of a
+    manifest file."""
+    with open(manifest_path) as f:
+        doc = json.load(f)
+    tables = next(iter(doc["snapshot"]["keyspaces"].values()))["tables"]
+    sstables = next(iter(tables.values()))["sstables"]
+    next(iter(sstables.values())).append({"type": "FILE", "size": 5, "hash": "h"})
+    with open(manifest_path, "w") as f:
+        json.dump(doc, f)
+
+
+@pytest.mark.parametrize(
+    "scope_flags",
+    [["--backup-name", KEYLESS_VICTIM], ["--oldest", "--global-request"]],
+    ids=["node", "global"],
+)
+def test_keyless_entry_never_reaches_the_deleter(spark, tmp_path, capsys, scope_flags):
+    """A manifest entry without ``objectKey`` is not an object: node and
+    global removal, dry run and real, count and delete only the victim's
+    unique object (the null key used to reach ``os.path.join``), then the
+    victim's manifest and topology file."""
+    data = str(tmp_path / "data")
+    node_dir = str(tmp_path / "buckets" / "cluster1" / "dc1" / "node-a")
+    unique = ("ks1", "t1", "me-9-big-Data.db")
+    make_tree(data, "snap1", {**BASE_FILES, unique: "unique-to-snap1"})
+    pipelines.backup(spark, [data], "snap1", node_dir, schema_version="sv", ts_millis=1000)
+    make_tree(data, "snap2", BASE_FILES)
+    pipelines.backup(spark, [data], "snap2", node_dir, schema_version="sv", ts_millis=2000)
+    _add_keyless_entry(os.path.join(node_dir, "manifests", f"{KEYLESS_VICTIM}.json"))
+    topology = os.path.join(node_dir, "topology", f"{KEYLESS_VICTIM}.json")
+    os.makedirs(os.path.dirname(topology))
+    open(topology, "w").close()
+
+    def objects():
+        return sorted(
+            fn for _dp, _d, fns in os.walk(os.path.join(node_dir, "data")) for fn in fns
+        )
+
+    before = objects()
+    argv = ["remove-backup", "--storage-location", node_dir, *scope_flags]
+    assert main([*argv, "--dry-run"]) == 0
+    dry_run = capsys.readouterr().out
+    assert objects() == before
+    assert main(argv) == 0
+    assert dry_run == "removed 1 backups, 1 objects (dry run)\n"
+    assert capsys.readouterr().out == "removed 1 backups, 1 objects\n"
+    assert objects() == sorted(set(before) - {unique[2]})
+    assert os.listdir(os.path.join(node_dir, "manifests")) == ["snap2-sv-2000.json"]
+    assert not os.path.exists(topology)
 
 
 def test_missing_entities_and_import_join(spark):
@@ -246,7 +303,47 @@ def _ref_removable_entries(entries, backup_name):
     )
 
 
+def _ref_remove_backup(entries, backup_name=None, oldest=False, older_than_ms=None):
+    manifests = entries.select("backup_name", "backup_ts").distinct()
+    if backup_name is not None:
+        victims = manifests.filter(F.col("backup_name") == backup_name)
+    elif oldest:
+        # nulls last: a manifest whose name lacks a parseable -<millis> tail
+        # must never win --oldest by default (Spark sorts NULLS FIRST asc)
+        victims = manifests.orderBy(
+            F.col("backup_ts").asc_nulls_last(), F.col("backup_name").asc()
+        ).limit(1)
+    elif older_than_ms is not None:
+        victims = manifests.filter(F.col("backup_ts") < older_than_ms)
+    else:
+        raise ValueError("select victims via backup_name, oldest, or older_than_ms")
+
+    victim_names = [r["backup_name"] for r in victims.collect()]
+    # removable iff NO surviving (non-victim) backup references the object —
+    # anti-join against survivor references generalizes the refcount==1 rule
+    # to multi-victim (--older-than) removals
+    removable = (
+        entries.join(victims.select("backup_name"), "backup_name", "left_semi")
+        .select("object_key")
+        .distinct()
+        .join(
+            entries.join(victims.select("backup_name"), "backup_name", "left_anti")
+            .select("object_key")
+            .distinct(),
+            "object_key",
+            "left_anti",
+        )
+    )
+    return victim_names, removable
+
+
 BACKUPS = {"b0": 1000, "b1": 2000, "b2": 3000}
+# one rule of each kind; the cutoffs select no backup, a backup_name whose
+# two backup_ts values straddle the cutoff, and every backup (null names too)
+VICTIM_RULES = [{"backup_name": "b1"}, {"oldest": True}] + [
+    {"older_than_ms": c} for c in (500, 3200, 10000)
+]
+NODES = [("dc1", "node-a"), ("dc2", "node-b")]
 
 
 def _generated_entries(seed):
@@ -281,14 +378,69 @@ def _sorted_rows(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
+ENTRY_SCHEMA = "backup_name string, backup_ts long, object_key string, size long"
+
+
+def _tagged(df, dc, node):
+    return df.select(F.lit(dc).alias("dc"), F.lit(node).alias("node"), "*")
+
+
 @pytest.mark.parametrize("seed", [5, 17])
 def test_one_read_listing_and_removal_match_join_forms(spark, seed):
-    e = spark.createDataFrame(
-        _generated_entries(seed),
-        "backup_name string, backup_ts long, object_key string, size long",
-    )
+    e = spark.createDataFrame(_generated_entries(seed), ENTRY_SCHEMA)
     assert _sorted_rows(manifest.list_backups(e)) == _sorted_rows(_ref_list_backups(e))
     for b in sorted(BACKUPS):
         assert _sorted_rows(manifest.removable_entries(e, b)) == _sorted_rows(
             _ref_removable_entries(e, b)
         ), b
+
+    # many victims: the semi/anti-join form on rows with an object key. It
+    # counts a null-named row as a survivor, where the single-victim form
+    # above (and the kernel) ignore it, so the two forms are compared on
+    # named rows; manifest names are file names, never null. A victim is a
+    # manifest, (backup_name, backup_ts), and the reference selects names,
+    # so for the oldest and cutoff rules it runs on rows named by their
+    # manifest, as read_manifests gives (one timestamp per name).
+    named = e.filter(F.col("backup_name").isNotNull())
+    by_manifest = named.withColumn(
+        "backup_name", F.concat_ws("@", "backup_name", "backup_ts")
+    )
+    for rule in VICTIM_RULES:
+        victims, got = manifest.removal_plan(named, **rule)
+        ref_names, ref = _ref_remove_backup(
+            named if "backup_name" in rule else by_manifest, **rule
+        )
+        assert sorted(v["backup_name"] for v in victims.collect()) == sorted(
+            {n.split("@")[0] for n in ref_names}
+        ), rule
+        assert _sorted_rows(got.select("object_key").distinct()) == _sorted_rows(
+            ref.filter(F.col("object_key").isNotNull())
+        ), rule
+
+    # fleet scope: each (dc, node) is its own manifest set, though both
+    # nodes use the same object keys
+    per_node = {
+        n: spark.createDataFrame(_generated_entries(seed + i), ENTRY_SCHEMA)
+        for i, n in enumerate(NODES)
+    }
+    fleet = _tagged(per_node[NODES[0]], *NODES[0]).unionByName(
+        _tagged(per_node[NODES[1]], *NODES[1])
+    )
+
+    def each_node(fn):
+        return sorted(
+            (rows for n, df in per_node.items() for rows in fn(df, n)), key=repr
+        )
+
+    assert _sorted_rows(manifest.list_backups(fleet, *FLEET)) == each_node(
+        lambda df, n: (n + tuple(r) for r in manifest.list_backups(df).collect())
+    )
+    for rule in VICTIM_RULES:
+        victims, got = manifest.removal_plan(fleet, *FLEET, **rule)
+        node_plans = {n: manifest.removal_plan(df, **rule) for n, df in per_node.items()}
+        assert _sorted_rows(victims) == each_node(
+            lambda df, n: (n + tuple(v) for v in node_plans[n][0].collect())
+        ), rule
+        assert _sorted_rows(got) == each_node(
+            lambda df, n: (n + tuple(r) for r in node_plans[n][1].collect())
+        ), rule

@@ -59,6 +59,20 @@ def test_stratum_selection_uses_distributed_rank(spark, name):
             assert "_pid" in spec, f"bare stratum window in {name}: {spec}"
 
 
+@pytest.mark.parametrize(
+    "name", ["q01_list_backups", "q02_removable_entries", "q45_global_listing"]
+)
+def test_listing_and_removal_read_entries_once(spark, name):
+    """esop's listing and removal rules, at node and fleet scope, flag each
+    entry through one window on (*scope, object_key): no join of the
+    entries with their own aggregate, and no window on the scope alone."""
+    plan = _plan(spark, name)
+    for join in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
+        assert join not in plan, f"{join} in {name}"
+    for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
+        assert "object_key" in m.group(1), f"window off the object in {name}"
+
+
 def test_scan_shaped_queries_have_minimal_exchanges(spark):
     # Pure signal projections: at most one aggregation exchange.
     for name in ["q27_lang_id", "q28_quality_score", "q54_pii_scan"]:
