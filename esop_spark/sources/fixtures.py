@@ -16,7 +16,10 @@ arithmetic) and is used verbatim by both engines:
 - Spark: ``register_fixture_views(spark, sf_dir, *names)`` creates plain temp
   views (nothing is cached; each query derives what it reads inside its own
   plan). A query names the views it reads and only those, with their
-  dependencies, are registered; no names registers all nine.
+  dependencies, are registered; no names registers all nine. The base
+  tables under them are read with the schemas of their parquet footers
+  (``load_base_tables``), so a fresh session runs no Spark job before its
+  first query.
 - DuckDB: ``oracle_with_clause(...)`` builds a ``WITH`` prefix for oracle SQL.
 
 ``_fixture_closure`` is the one definition of which fixture reads which, so
@@ -35,6 +38,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructField, StructType
 
 BASE_TABLES = [
     "region",
@@ -240,23 +244,55 @@ def _fixture_closure(names) -> list[str]:
     return [n for n in _FIXTURE_ORDER if n in needed]
 
 
+def _footer_schema(path: str) -> StructType:
+    """The Spark schema of a parquet table, from one footer read by pyarrow.
+    ``path`` may be a single file (driver testdata) or a parquet directory
+    (generated scale-rehearsal data), whose first ``*.parquet`` part file
+    gives the footer. TIMESTAMP(NANOS) columns are declared ``LongType``,
+    which is what Spark infers under ``spark.sql.legacy.parquet.nanosAsLong``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    foot = path
+    if os.path.isdir(path):
+        foot = next(
+            os.path.join(path, f)
+            for f in sorted(os.listdir(path))
+            if f.endswith(".parquet")
+        )
+    arrow = pq.read_schema(foot)
+    schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+    return StructType([
+        StructField(f.name, LongType(), f.nullable)
+        if arrow.field(f.name).type == pa.timestamp("ns") else f
+        for f in schema
+    ])
+
+
 def load_base_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register the driver parquet tables as temp views and return them.
+
+    Each table is read with the schema of its parquet footer
+    (``_footer_schema``), never an inferred one: Spark's parquet schema
+    inference runs one Spark job per table, even for one file with
+    mergeSchema off, so a fresh session used to fire ten jobs before its
+    first query. The footer schema is the one inference would find.
 
     ``events.ts`` has been written by the driver as either parquet
     TIMESTAMP(NANOS) (which Spark cannot read natively — read it as long
     via the legacy conf and truncate to micros; integer division because
     ns values exceed double's 53-bit mantissa) or plain TIMESTAMP(MICROS)
-    (read natively). Sniff the footer with pyarrow and handle both.
+    (read natively). The footer tells which.
 
-    Memoized per (session, sf_dir): every ``spark.read.parquet`` here costs
-    a JVM round-trip plus a footer read, and the query entry points call
-    this once per TABLE ARGUMENT — a 6-table join paid ~4 s of pure
-    driver-side re-registration per build before this cache (measured at
-    sf0.1: q209 build 4.5 s → execute 0.65 s). Registration is idempotent,
-    so caching only skips redundant work; an sf_dir switch re-registers.
+    Memoized per (session, sf_dir): every table here costs a JVM
+    round-trip plus a footer read (no Spark job), and the query entry
+    points call this once per TABLE ARGUMENT — a 6-table join paid ~4 s of
+    pure driver-side re-registration per build before this cache (measured
+    at sf0.1: q209 build 4.5 s → execute 0.65 s). Registration is
+    idempotent, so caching only skips redundant work; an sf_dir switch
+    re-registers.
     """
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     # keyed on the SparkSession object (temp views are per-session, not
@@ -276,33 +312,20 @@ def load_base_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     out: dict[str, DataFrame] = {}
     for name in BASE_TABLES:
         path = f"{sf_dir}/{name}.parquet"
-        if name == "events":
-            # path may be a single file (driver testdata) or a parquet
-            # directory (generated scale-rehearsal data) — sniff one footer
-            foot = path
-            if os.path.isdir(path):
-                foot = next(
-                    os.path.join(path, f)
-                    for f in sorted(os.listdir(path))
-                    if f.endswith(".parquet")
-                )
-            ts_type = str(pq.read_schema(foot).field("ts").type)
-            if ts_type == "timestamp[ns]":
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-                df = spark.read.parquet(path).withColumn(
-                    "ts", F.timestamp_micros(F.expr("ts div 1000"))
-                )
-            else:
-                # micros without isAdjustedToUTC reads as TIMESTAMP_NTZ;
-                # cast to TIMESTAMP (session tz is pinned UTC, so the digits
-                # are unchanged) — downstream unix_millis/window functions
-                # require the LTZ type, and DuckDB reads the same file as a
-                # naive timestamp, so both engines see identical instants
-                df = spark.read.parquet(path).withColumn(
-                    "ts", F.col("ts").cast("timestamp")
-                )
-        else:
-            df = spark.read.parquet(path)
+        schema = _footer_schema(path)
+        nanos = name == "events" and schema["ts"].dataType == LongType()
+        if nanos:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.schema(schema).parquet(path)
+        if nanos:
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        elif name == "events":
+            # micros without isAdjustedToUTC reads as TIMESTAMP_NTZ;
+            # cast to TIMESTAMP (session tz is pinned UTC, so the digits
+            # are unchanged) — downstream unix_millis/window functions
+            # require the LTZ type, and DuckDB reads the same file as a
+            # naive timestamp, so both engines see identical instants
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         df.createOrReplaceTempView(name)
         out[name] = df
     _BASE_LOADED[key] = (sf_dir, spark, out)

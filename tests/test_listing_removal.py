@@ -162,8 +162,7 @@ def _cold_jobs(spark, name):
     """Rows and Spark jobs of one cold command: bench.py's per-command
     reset, then build + collect in one job group. The base parquet tables
     are registered first, as bench.py's warm-up leaves them: the reset
-    keeps that memo, and a first read of each table's schema costs a job
-    of its own."""
+    keeps that memo, so the count is the command's own jobs."""
     fixtures.load_base_tables(spark, SF_DIR)
     release_shared_relations()
     spark.catalog.clearCache()
@@ -202,6 +201,22 @@ def test_cold_list_remove_job_budget(spark, name, budget):
     rows, jobs = _cold_jobs(spark, name)
     assert rows
     assert jobs <= budget, f"{jobs} jobs for one cold {name}"
+
+
+def test_fresh_session_registers_fixtures_without_a_job(spark):
+    """A fresh session's base tables take their schemas from the parquet
+    footers, not from Spark's inference (one job per table), and the
+    fixture views are plain: registering all of them fires no Spark job."""
+    session = spark.newSession()
+    sc = spark.sparkContext
+    group = f"register-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "register_fixture_views in a fresh session")
+    try:
+        fixtures.register_fixture_views(session, SF_DIR)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert _fixture_views(session) == fixtures.FIXTURE_SQL.keys()
 
 
 def _fixture_views(session):

@@ -7,6 +7,12 @@ Usage:
   python tools/qprof.py q301_cosine_pairs_lsh q48_dedup_clusters \
       [--sf /root/testdata/sf0.1] [--plans r11:before] [--trials 5]
 
+Before the per-query lines, one ``setup:`` line splits the session's start:
+CPU and wall seconds of ``get_spark``, ``fixtures.load_base_tables`` and
+``fixtures.register_fixture_views``, and the Spark jobs the last two fire
+(each in its own job group). CPU is the driver JVM's, with its reaped
+spark-submit launcher (``/proc/<pid>/stat``), plus this process's.
+
 Each timed trial runs in two job groups: one around the ``queries()`` call
 that BUILDS the DataFrame (operators that materialize intermediate rounds
 eagerly fire their jobs here) and one around the noop write that EXECUTES
@@ -31,6 +37,16 @@ from esop_spark.session import get_spark
 from esop_spark.sources import fixtures
 
 
+def cpu_s(jvm_pid: int) -> float:
+    """User and system CPU seconds of the driver JVM, with its reaped
+    children, and of this process."""
+    with open(f"/proc/{jvm_pid}/stat") as fh:
+        fields = fh.read().rsplit(")", 1)[1].split()
+    t = os.times()
+    jvm = sum(int(x) for x in fields[11:15]) / os.sysconf("SC_CLK_TCK")
+    return jvm + t.user + t.system
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
@@ -46,12 +62,31 @@ def main() -> None:
     sf = float(args.sf.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in args.sf else -1.0
     from bench import _pinned_shuffle_partitions
 
+    py0, w0 = os.times(), time.perf_counter()
     spark = get_spark(
         "esop-qprof",
         shuffle_partitions=_pinned_shuffle_partitions(sf),
         console_progress=False,
     )
     sc = spark.sparkContext
+    pid = int(sc._jvm.java.lang.ProcessHandle.current().pid())
+    setup = [f"get_spark cpu={cpu_s(pid) - py0.user - py0.system:.2f}"
+             f" wall={time.perf_counter() - w0:.2f}"]
+    for step, fn in (("load_base_tables", fixtures.load_base_tables),
+                     ("register_fixture_views", fixtures.register_fixture_views)):
+        group = f"qprof-setup-{step}-{uuid.uuid4().hex[:6]}"
+        c0, w0 = cpu_s(pid), time.perf_counter()
+        try:
+            sc.setJobGroup(group, step)
+            fn(spark, args.sf)
+        finally:
+            sc.setJobGroup(None, None)
+        setup.append(
+            f"{step} cpu={cpu_s(pid) - c0:.2f}"
+            f" wall={time.perf_counter() - w0:.2f}"
+            f" jobs={len(sc.statusTracker().getJobIdsForGroup(group))}"
+        )
+    print("setup: " + " | ".join(setup), flush=True)
     qs = entry_mod.queries()
     names = []
     for pat in args.queries:
