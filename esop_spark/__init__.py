@@ -18,8 +18,11 @@ The engine is organized as:
 
 Everything is DataFrame-first: logical plans are declared with the DataFrame /
 Spark SQL API and Catalyst chooses the physical strategy. Python UDFs are kept
-off hot paths; where Python is unavoidable (multimodal decode), Arrow-batched
-``mapInPandas`` is used.
+off hot paths. Python touches the data in two places, each one Arrow pass per
+partition with no per-row Python call: multimodal decode (``mapInPandas``),
+where Python is unavoidable, and the local union-find of
+``graph.connected_components`` (``mapInArrow``), which replaces Spark
+propagation rounds.
 """
 
 __version__ = "0.1.0"

@@ -319,10 +319,11 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     for fuzzy duplicates identity is the transitive closure of the pair
     relation.
 
-    A thin wrapper over :func:`graph.connected_components` (one exchange
-    and one eager checkpoint per propagation round, convergence observed
-    on that checkpoint): the pair columns become the edge relation and the
-    output is cast to bigint.
+    A thin wrapper over :func:`graph.connected_components` (a local
+    union-find per partition, then one exchange and one eager checkpoint
+    per propagation round, convergence observed on that checkpoint): the
+    pair columns become the edge relation and the output is cast to
+    bigint.
 
     Input: (id_a, id_b [, ...]) pair DataFrame. Output: one row per
     distinct doc appearing in any pair — (doc_id, cluster_id, cluster_size)

@@ -261,13 +261,87 @@ def _checkpoint_counting_changed(
     return out, obs.get["n"]
 
 
+def _contract_locally(edges: DataFrame) -> DataFrame:
+    """Each partition's edges merged by a local union-find: one
+    ``mapInArrow`` over ``(src, dst)`` as the relation is already
+    partitioned, so no exchange is added.
+
+    A partition links every node to the smallest key of its local
+    component and emits ``(v, root)`` for each node ``v`` that is not its
+    root, plus ``(v, v)`` for a node whose only edges are self-loops, so no
+    node drops out and a partition never emits more rows than it read.
+    Edges with a null endpoint pass through unchanged. The output has the
+    input's nodes and connectivity, so the minimum of each component is
+    unchanged; the root choice only decides how far labels still travel.
+    Keys are cast to the type :func:`_symmetrize` gives both endpoints."""
+    key = _symmetrize(edges).schema["src"].dataType
+    pairs = edges.select(F.col("src").cast(key), F.col("dst").cast(key))
+
+    def contract(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        parent = {}
+
+        def find(v):
+            root = v
+            while parent[root] != root:
+                root = parent[root]
+            while parent[v] != root:
+                parent[v], v = root, parent[v]
+            return root
+
+        for b in batches:
+            schema = b.schema
+            ok = pc.and_(b.column(0).is_valid(), b.column(1).is_valid())
+            if not pc.all(ok).as_py():
+                yield b.filter(pc.invert(ok))
+                b = b.filter(ok)
+            for u, v in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
+                ru = find(parent.setdefault(u, u))
+                rv = find(parent.setdefault(v, v))
+                if ru != rv:
+                    parent[max(ru, rv)] = min(ru, rv)
+        src, dst, rooted = [], [], set()
+        for v in parent:
+            r = find(v)
+            if r != v:
+                src.append(v)
+                dst.append(r)
+                rooted.add(r)
+        for v, r in parent.items():
+            if r == v and v not in rooted:  # only self-loops
+                src.append(v)
+                dst.append(v)
+        if src:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(src, schema.field(0).type),
+                 pa.array(dst, schema.field(1).type)],
+                schema=schema,
+            )
+
+    return pairs.mapInArrow(contract, pairs.schema)
+
+
 def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     """Connected components over a ``(src, dst)`` edge relation with keys
     of any orderable type (bigint doc ids in :func:`dedup.dedup_clusters`,
     strings in the PMI term graph). Duplicate edges, both orientations and
     self-loops are all allowed.
 
-    Vertex-centric min-label propagation (Pregel-style messages with
+    Local contraction first (Łącki et al. 2018; Kiveris et al. 2014):
+    :func:`_contract_locally` merges each partition's edges with a
+    union-find and hands the loop a star per local component. This is the
+    second place Python touches the data (after multimodal decode): one
+    Arrow pass per partition, with no per-row Python call, and it replaces
+    Spark rounds — when the edges sit in one partition it solves the
+    graph outright and the loop runs no round.
+    Memory per partition is one dict entry per distinct node. One
+    original edge becomes at most two hops (both endpoints point at their
+    root), so in the worst case a graph that converges today in 25 rounds
+    could need up to 50 (``max_iters``).
+
+    Then vertex-centric min-label propagation (Pregel-style messages with
     semi-naive evaluation). The state is ONE checkpointed vertex relation
     ``(node, label, nbrs, changed)``:
 
@@ -276,9 +350,11 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
       every node starts at the minimum of its closed neighbourhood, which
       already spends the first propagation hop;
     - ``changed`` marks the nodes whose label a neighbour may not have
-      seen yet. Initially that is ``label < node``: a node labelled with
-      its own key is a local minimum, and every neighbour already took it
-      into account when its own label was built.
+      seen yet. Initially that is ``label < node`` and a neighbour other
+      than the label's own node: a node labelled with its own key is a
+      local minimum, and every neighbour already took it into account
+      when its own label was built; the node the label came from holds a
+      label no larger. A contracted star therefore starts settled.
 
     Each round is one union and one ``groupBy(node)``, i.e. one exchange:
     self rows carry ``nbrs`` and the old label, and every changed node
@@ -288,24 +364,36 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     round's eager ``localCheckpoint`` itself, so a round costs one
     exchange and no separate convergence job. The loop stops when no
     label changed, or after ``max_iters`` rounds (labels are then the
-    minimum within ``max_iters + 1`` hops). Superseded rounds' checkpoint
-    blocks are released as soon as the next round is materialized, and
-    the final round is handed to the shared registry because the returned
-    frame reads it lazily.
+    minimum within ``max_iters + 1`` hops of the contracted graph).
+    Superseded rounds' checkpoint blocks are released as soon as the next
+    round is materialized, and the final round is handed to the shared
+    registry because the returned frame reads it lazily.
 
     Returns ``(node, cluster_id, cluster_size)`` with cluster_id = the
     minimum node key in the component.
     """
-    ckpt = RoundCheckpointer(edges)
-    adj = _symmetrize(edges).groupBy(F.col("src").alias("node")).agg(
-        F.collect_set("dst").alias("nbrs")
+    labels = _component_labels(edges, max_iters)
+    return labels.join(_component_sizes(labels), "label").select(
+        "node", F.col("label").alias("cluster_id"), "cluster_size"
     )
-    label = F.least(F.col("node"), F.array_min("nbrs"))
+
+
+def _component_labels(edges: DataFrame, max_iters: int) -> DataFrame:
+    """The ``(node, label)`` relation of :func:`connected_components`."""
+    ckpt = RoundCheckpointer(edges)
+    adj = (
+        _symmetrize(_contract_locally(edges))
+        .groupBy(F.col("src").alias("node"))
+        .agg(F.collect_set("dst").alias("nbrs"))
+    )
+    node = F.col("node")
+    label = F.least(node, F.array_min("nbrs"))
+    tells = F.exists("nbrs", lambda u: (u != label) & (u != node))
     state, n_changed = _checkpoint_counting_changed(
         ckpt,
         adj.select(
             "node", label.alias("label"), "nbrs",
-            (label < F.col("node")).alias("changed"),
+            ((label < node) & tells).alias("changed"),
         ),
     )
     for _ in range(max_iters):
@@ -331,13 +419,13 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
         prev = state
         state, n_changed = _checkpoint_counting_changed(ckpt, nxt)
         ckpt.release(prev)
-    ckpt.disown_to_shared(state)  # the returned join reads it lazily
-    node_labels = state.select("node", "label")
-    sizes = node_labels.groupBy("label").agg(
+    ckpt.disown_to_shared(state)  # the returned frame reads it lazily
+    return state.select("node", "label")
+
+
+def _component_sizes(labels: DataFrame) -> DataFrame:
+    return labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
-    )
-    return node_labels.join(sizes, "label").select(
-        "node", F.col("label").alias("cluster_id"), "cluster_size"
     )
 
 
@@ -742,17 +830,14 @@ def component_census(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     |nodes|) means the similarity threshold is too loose and transitive
     closure is about to merge the corpus into one doc.
 
-    Scale shape: :func:`connected_components`' vertex-state min-label
-    loop (one exchange and one eager checkpoint per round, convergence
-    observed on the checkpoint itself), then two bounded folds:
-    component grain → size grain. Output per size:
+    Scale shape: :func:`connected_components`' local contraction and
+    vertex-state min-label loop, then two folds straight off the label
+    relation — node grain → component grain → size grain, with no
+    node-grain join back. Output per size:
     (component_size, n_components)."""
-    comp = connected_components(edges, max_iters=max_iters)
-    return (
-        comp.select("cluster_id", "cluster_size")
-        .distinct()
-        .groupBy(F.col("cluster_size").alias("component_size"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_components"))
+    sizes = _component_sizes(_component_labels(edges, max_iters))
+    return sizes.groupBy(F.col("cluster_size").alias("component_size")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_components")
     )
 
 

@@ -2,8 +2,9 @@
 
 Image/audio/video payloads are carried as ``binary`` columns with typed
 metadata columns alongside; decode / feature-extraction runs as Arrow-batched
-``mapInPandas`` (the only place Python touches the data, amortized per batch,
-never per row).
+``mapInPandas`` (one of the two places Python touches the data, with
+``graph.connected_components``' local union-find; amortized per batch, never
+per row).
 
 Decode comes in two layers:
 - ``decode_media``: the general codec seam. Third-party codec libraries

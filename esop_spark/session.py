@@ -42,7 +42,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # managed-table state (bucketed materializations) stays out of the repo
         .config("spark.sql.warehouse.dir", "/tmp/esop-spark-warehouse")
-        .config("spark.driver.extraJavaOptions", "-Dderby.system.home=/tmp/esop-spark-derby")
         .getOrCreate()
     )
     # getOrCreate() silently reuses an existing session, and showConsoleProgress

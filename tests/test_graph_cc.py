@@ -1,7 +1,10 @@
-"""graph.connected_components: the vertex-state min-label loop shared by
-q48, q84, q108, q176 and q278 — edge-shape edge cases, the ``max_iters``
-cap, and a deterministic Spark-job budget per propagation round."""
+"""graph.connected_components: the local contraction and vertex-state
+min-label loop shared by q48, q84, q108, q176 and q278 — edge-shape edge
+cases, the ``max_iters`` cap, a deterministic Spark-job budget per
+propagation round, and a differential check against a plain-Python
+union-find."""
 
+import random
 import uuid
 
 from esop_spark.operators import dedup, graph
@@ -55,12 +58,18 @@ def test_cc_isolated_pairs(spark):
     assert out == {v: (v - v % 2, 2) for v in range(12)}
 
 
+def _path(spark, n_parts):
+    """The path 0 - 1 - ... - 20 spread over ``n_parts`` partitions."""
+    rows = spark.sparkContext.parallelize([(i, i + 1) for i in range(20)], n_parts)
+    return spark.createDataFrame(rows, "src long, dst long")
+
+
 def test_cc_max_iters_caps_propagation(spark):
-    # path 0 - 1 - ... - 20: the initial label covers one hop and each
-    # round one more, so after r rounds node v holds max(0, v - r - 1)
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(20)], "src long, dst long"
-    )
+    # max_iters caps rounds over the contracted graph. With one edge per
+    # partition the contraction merges nothing, so on the path
+    # 0 - 1 - ... - 20 the initial label covers one hop and each round
+    # one more: after r rounds node v holds max(0, v - r - 1)
+    edges = _path(spark, 20)
     for r in (0, 2, 5):
         out = graph.connected_components(edges, max_iters=r).collect()
         assert {row["node"]: row["cluster_id"] for row in out} == {
@@ -68,6 +77,74 @@ def test_cc_max_iters_caps_propagation(spark):
         }
     out = graph.connected_components(edges, max_iters=19).collect()
     assert {row["cluster_id"] for row in out} == {0}
+
+
+def _build_jobs(spark, edges, **kw):
+    """connected_components(edges, **kw) and the Spark jobs its build fired."""
+    sc = spark.sparkContext
+    group = f"cc-build-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "connected_components build")
+    try:
+        out = graph.connected_components(edges, **kw)
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cc_one_partition_path_needs_no_label_changing_round(spark):
+    # in one partition the contraction solves the path outright: every
+    # node points at 0, so the initial labels are already final and the
+    # loop runs no round (no more jobs than with max_iters=0)
+    edges = _path(spark, 1)
+    capped, capped_jobs = _build_jobs(spark, edges, max_iters=0)
+    assert _labels(capped) == {v: (0, 21) for v in range(21)}
+    out, jobs = _build_jobs(spark, edges)
+    assert _labels(out) == {v: (0, 21) for v in range(21)}
+    assert jobs == capped_jobs
+    dedup.release_shared_relations()
+
+
+def _union_find_components(pairs):
+    """{node: (min node, size)} of the non-null endpoints of ``pairs``."""
+    parent = {}
+
+    def find(v):
+        while parent[v] != v:
+            v = parent[v]
+        return v
+
+    for u, v in pairs:
+        if u is None or v is None:
+            continue
+        ru, rv = find(parent.setdefault(u, u)), find(parent.setdefault(v, v))
+        parent[max(ru, rv)] = min(ru, rv)
+    roots = {v: find(v) for v in parent}
+    sizes = {r: list(roots.values()).count(r) for r in set(roots.values())}
+    return {v: (r, sizes[r]) for v, r in roots.items()}
+
+
+def test_cc_matches_python_union_find(spark):
+    """Seeded random graphs with duplicate edges, both orientations,
+    self-loops and one null endpoint, at 1, 3 and 8 partitions: every
+    non-null node gets its component's minimum and size. The null node
+    keeps the kernel's null behaviour: its label is the least of its own
+    neighbours and it is not propagated."""
+    rng = random.Random(20181)
+    base = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
+    base += [(b, a) for a, b in base[:10]] + base[10:20] + [(7, 7), (61, 61)]
+    rng.shuffle(base)
+    for key, conv in (("long", int), ("string", str)):
+        pairs = [(conv(a), conv(b)) for a, b in base] + [(None, conv(40))]
+        expected = _union_find_components(pairs)
+        null_label = conv(40)
+        null_size = 1 + sum(1 for r, _ in expected.values() if r == null_label)
+        expected[None] = (null_label, null_size)
+        for n_parts in (1, 3, 8):
+            rows = spark.sparkContext.parallelize(pairs, n_parts)
+            edges = spark.createDataFrame(rows, f"src {key}, dst {key}")
+            assert _labels(graph.connected_components(edges)) == expected, (
+                key, n_parts,
+            )
 
 
 def test_dedup_clusters_wraps_the_kernel(spark):
@@ -89,20 +166,10 @@ def test_cc_job_budget_per_round(spark):
     with convergence observed on that checkpoint: at most two Spark jobs
     a round (AQE runs the shuffle map stage as its own job), plus the
     initial vertex-state build. The 21-node path with its minimum at one
-    end needs 19 label-changing rounds and one round that changes
-    nothing."""
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(20)], "src long, dst long"
-    )
+    end, one edge per partition so the contraction merges nothing, needs
+    19 label-changing rounds and one round that changes nothing."""
     rounds = 20
-    sc = spark.sparkContext
-    group = f"cc-budget-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "connected_components build")
-    try:
-        out = graph.connected_components(edges)
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    out, jobs = _build_jobs(spark, _path(spark, 20))
     assert jobs <= 2 * rounds + 4, f"{jobs} jobs for {rounds} rounds"
     assert {r["cluster_id"] for r in out.collect()} == {0}
     dedup.release_shared_relations()

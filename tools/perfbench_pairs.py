@@ -13,17 +13,31 @@ and ``run_cpu_s``, the user + system CPU seconds of the run and every
 process it waited for (``getrusage(RUSAGE_CHILDREN)``: the driver JVM, the
 spark-submit launcher and the Python process). That total shows whether
 set-up CPU was removed or only moved into the warm-up and the passes.
+
+``run_cpu_s`` cannot see the pyspark daemon or its Python workers: the
+daemon ignores ``SIGCHLD``, so its workers are never waited for and no
+``RUSAGE_CHILDREN`` counts them. ``worker_cpu_s`` does: every ~0.5 s the
+run's process tree is read from ``/proc``, the last user + system CPU
+reading of each pid is kept, and the sum runs over every process but
+``run.py`` and the JVMs (the launcher JVM is reaped into the driver JVM's
+children, so ``run_cpu_s`` already holds it). A worker that lives less
+than one sampling interval is missed. ``whole_cpu_s`` in the summary is
+the sum of the two.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import resource
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
+
+SAMPLE_S = 0.5
 
 
 def children_cpu_s() -> float:
@@ -31,15 +45,54 @@ def children_cpu_s() -> float:
     return r.ru_utime + r.ru_stime
 
 
+def proc_stats() -> dict[int, tuple[int, str, float]]:
+    """``{pid: (ppid, comm, own user + system CPU seconds)}`` of every
+    process /proc shows."""
+    tick = os.sysconf("SC_CLK_TCK")
+    out = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as fh:
+                text = fh.read()
+        except OSError:  # exited while listing
+            continue
+        comm = text[text.index("(") + 1:text.rindex(")")]
+        fields = text.rsplit(")", 1)[1].split()
+        out[int(name)] = (int(fields[1]), comm, (int(fields[11]) + int(fields[12])) / tick)
+    return out
+
+
+def sample_workers(root: int, last: dict[int, float]) -> None:
+    """Record in ``last`` the CPU of each non-JVM process below ``root``."""
+    stats = proc_stats()
+    kids: dict[int, list[int]] = {}
+    for pid, (ppid, _, _) in stats.items():
+        kids.setdefault(ppid, []).append(pid)
+    todo = list(kids.get(root, []))
+    while todo:
+        pid = todo.pop()
+        todo += kids.get(pid, [])
+        if stats[pid][1] != "java":
+            last[pid] = stats[pid][2]
+
+
 def run_one(checkout: str, workload: str, seed: int, trace: int, seconds: float) -> dict:
     cpu0, t0 = children_cpu_s(), time.perf_counter()
-    proc = subprocess.run(
-        [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
-        cwd=checkout, capture_output=True, text=True,
-    )
-    wall, cpu = time.perf_counter() - t0, children_cpu_s() - cpu0
-    lines = proc.stdout.strip().splitlines()
+    workers: dict[int, float] = {}
+    with tempfile.TemporaryFile("w+") as out:
+        proc = subprocess.Popen(
+            [sys.executable, "perfbench/run.py", "--workload", workload,
+             "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
+            cwd=checkout, stdout=out, stderr=subprocess.DEVNULL, text=True,
+        )
+        while proc.poll() is None:
+            sample_workers(proc.pid, workers)
+            time.sleep(SAMPLE_S)
+        wall, cpu = time.perf_counter() - t0, children_cpu_s() - cpu0
+        out.seek(0)
+        lines = out.read().strip().splitlines()
     last = json.loads(lines[-1]) if proc.returncode == 0 and lines else None
     return {
         "returncode": proc.returncode,
@@ -47,6 +100,7 @@ def run_one(checkout: str, workload: str, seed: int, trace: int, seconds: float)
         "metrics": {k: v["value"] for k, v in last["metrics"].items()} if last else {},
         "wall_s": round(wall, 2),
         "run_cpu_s": round(cpu, 2),
+        "worker_cpu_s": round(sum(workers.values()), 2),
     }
 
 
@@ -72,6 +126,13 @@ def stats(xs: list[float]) -> dict:
     return {"median": round(med, 3), "q1": round(q1, 3), "q3": round(q3, 3)}
 
 
+RUN_CPU = {
+    "run_cpu_s": lambda r: r["run_cpu_s"],
+    "worker_cpu_s": lambda r: r["worker_cpu_s"],
+    "whole_cpu_s": lambda r: r["run_cpu_s"] + r["worker_cpu_s"],
+}
+
+
 def cmd_summary(args: argparse.Namespace) -> None:
     recs = []
     for path in args.files:
@@ -86,11 +147,11 @@ def cmd_summary(args: argparse.Namespace) -> None:
         seeds = sorted(s for s in paired if runs[(s, "parent")]["metrics"]
                        and runs[(s, "change")]["metrics"])
         metrics = {}
-        keys = list(runs[(seeds[0], "parent")]["metrics"]) + ["run_cpu_s"]
+        keys = list(runs[(seeds[0], "parent")]["metrics"]) + list(RUN_CPU)
         for k in keys:
             def val(seed, side):
                 r = runs[(seed, side)]
-                return r["run_cpu_s"] if k == "run_cpu_s" else r["metrics"][k]
+                return RUN_CPU[k](r) if k in RUN_CPU else r["metrics"][k]
             p = [round(val(s, "parent"), 4) for s in seeds]
             c = [round(val(s, "change"), 4) for s in seeds]
             ps, cs = stats(p), stats(c)
@@ -98,7 +159,8 @@ def cmd_summary(args: argparse.Namespace) -> None:
                 "parent": p, "change": c,
                 "parent_stats": ps, "change_stats": cs,
                 "change_wins": sum(b < a for a, b in zip(p, c)),
-                "median_delta_pct": round(100 * (cs["median"] / ps["median"] - 1), 1),
+                "median_delta_pct": (round(100 * (cs["median"] / ps["median"] - 1), 1)
+                                     if ps["median"] else None),
                 "parent_iqr": round(ps["q3"] - ps["q1"], 3),
             }
         out[wl] = {

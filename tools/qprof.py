@@ -19,6 +19,9 @@ eagerly fire their jobs here) and one around the noop write that EXECUTES
 it. The status tracker's job ids per group give ``build_jobs=`` and
 ``exec_jobs=`` per trial, next to the build and total seconds — numbers
 that explain "why is this 5 s on 2,000 rows" faster than any timeline.
+A query that runs ``graph.connected_components`` also prints
+``cc_rounds=``, its propagation rounds per trial: every call of the
+kernel checkpoints its initial vertex state once and then once per round.
 """
 
 from __future__ import annotations
@@ -32,6 +35,7 @@ import uuid
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
+from esop_spark.operators import graph
 from esop_spark.operators.dedup import release_shared_relations
 from esop_spark.session import get_spark
 from esop_spark.sources import fixtures
@@ -45,6 +49,21 @@ def cpu_s(jvm_pid: int) -> float:
     t = os.times()
     jvm = sum(int(x) for x in fields[11:15]) / os.sysconf("SC_CLK_TCK")
     return jvm + t.user + t.system
+
+
+def count_cc_rounds() -> list:
+    """Route the kernel's per-round checkpoint through a counter. Returns
+    the list it appends each call's checkpointer to; holding them keeps
+    their ids distinct, so rounds = calls - distinct checkpointers."""
+    ckpts = []
+    inner = graph._checkpoint_counting_changed
+
+    def counting(ckpt, state):
+        ckpts.append(ckpt)
+        return inner(ckpt, state)
+
+    graph._checkpoint_counting_changed = counting
+    return ckpts
 
 
 def main() -> None:
@@ -120,6 +139,7 @@ def main() -> None:
         )
         os.makedirs(plan_dir, exist_ok=True)
 
+    cc_ckpts = count_cc_rounds()
     for name in names:
         reset()
         qs[name](spark, args.sf).write.format("noop").mode("overwrite").save()
@@ -134,7 +154,9 @@ def main() -> None:
         builds = []
         build_jobs = []
         exec_jobs = []
+        cc_rounds = []
         for t in range(args.trials):
+            cc_ckpts.clear()
             tag = f"qprof-{name}-{t}-{uuid.uuid4().hex[:6]}"
             try:
                 sc.setJobGroup(f"{tag}-build", name)
@@ -151,11 +173,13 @@ def main() -> None:
             tracker = sc.statusTracker()
             build_jobs.append(len(tracker.getJobIdsForGroup(f"{tag}-build")))
             exec_jobs.append(len(tracker.getJobIdsForGroup(f"{tag}-exec")))
+            cc_rounds.append(len(cc_ckpts) - len({id(c) for c in cc_ckpts}))
         trials_r = [round(x, 3) for x in trials]
         print(
             f"{name}: min={min(trials_r)} med={sorted(trials_r)[len(trials_r)//2]}"
             f" trials={trials_r} build_s={[round(x, 3) for x in builds]}"
-            f" build_jobs={build_jobs} exec_jobs={exec_jobs}",
+            f" build_jobs={build_jobs} exec_jobs={exec_jobs}"
+            + (f" cc_rounds={cc_rounds}" if cc_ckpts else ""),
             flush=True,
         )
     spark.stop()
