@@ -11,6 +11,7 @@ two engines compute over identical inputs.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -3176,313 +3177,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "q01_list_backups": q01_list_backups,
-        "q02_removable_entries": q02_removable_entries,
-        "q03_upload_diff": q03_upload_diff,
-        "q04_restore_diff": q04_restore_diff,
-        "q05_latest_manifest": q05_latest_manifest,
-        "q06_retention_older_than": q06_retention_older_than,
-        "q07_commitlog_window": q07_commitlog_window,
-        "q08_entity_filter": q08_entity_filter,
-        "q09_rename_remap": q09_rename_remap,
-        "q10_topology_dc_racks": q10_topology_dc_racks,
-        "q11_snapshot_merge": q11_snapshot_merge,
-        "q12_schema_diff": q12_schema_diff,
-        "q13_filter_project": q13_filter_project,
-        "q14_join_agg": q14_join_agg,
-        "q15_group_agg": q15_group_agg,
-        "q16_window_rank": q16_window_rank,
-        "q17_rollup": q17_rollup,
-        "q18_topk": q18_topk,
-        "q19_anti_semi_join": q19_anti_semi_join,
-        "q20_events_windows": q20_events_windows,
-        "q21_dedup_exact": q21_dedup_exact,
-        "q22_dedup_minhash_lsh": q22_dedup_minhash_lsh,
-        "q23_ngram_jaccard": q23_ngram_jaccard,
-        "q24_simhash_pairs": q24_simhash_pairs,
-        "q25_embedding_neardup": q25_embedding_neardup,
-        "q26_ann_topk": q26_ann_topk,
-        "q27_lang_id": q27_lang_id,
-        "q28_quality_score": q28_quality_score,
-        "q29_token_stats": q29_token_stats,
-        "q30_fingerprint": q30_fingerprint,
-        "q31_multimodal_decode": q31_multimodal_decode,
-        "q32_cube": q32_cube,
-        "q33_sliding_windows": q33_sliding_windows,
-        "q34_storage_location": q34_storage_location,
-        "q35_import_join": q35_import_join,
-        "q36_asof_join": q36_asof_join,
-        "q37_sessions": q37_sessions,
-        "q38_percentiles": q38_percentiles,
-        "q39_chunking": q39_chunking,
-        "q40_curation": q40_curation,
-        "q41_range_join": q41_range_join,
-        "q42_grouping_sets": q42_grouping_sets,
-        "q43_pivot": q43_pivot,
-        "q44_setops": q44_setops,
-        "q45_global_listing": q45_global_listing,
-        "q46_global_removal": q46_global_removal,
-        "q47_container_decode": q47_container_decode,
-        "q48_dedup_clusters": q48_dedup_clusters,
-        "q49_contamination": q49_contamination,
-        "q50_stratified_sample": q50_stratified_sample,
-        "q51_sample_k_per_stratum": q51_sample_k_per_stratum,
-        "q52_tfidf_top_terms": q52_tfidf_top_terms,
-        "q53_quantize_int8": q53_quantize_int8,
-        "q54_pii_scan": q54_pii_scan,
-        "q55_boilerplate": q55_boilerplate,
-        "q56_semantic_dedup": q56_semantic_dedup,
-        "q57_mixture_resample": q57_mixture_resample,
-        "q58_repeated_ngrams": q58_repeated_ngrams,
-        "q59_bm25": q59_bm25,
-        "q60_oov_rate": q60_oov_rate,
-        "q61_unigram_logprob": q61_unigram_logprob,
-        "q62_release_gate": q62_release_gate,
-        "q63_embedding_dim_stats": q63_embedding_dim_stats,
-        "q64_train_split": q64_train_split,
-        "q65_shard_packing": q65_shard_packing,
-        "q66_bigram_logprob": q66_bigram_logprob,
-        "q67_gopher_rules": q67_gopher_rules,
-        "q68_kcenter_assign": q68_kcenter_assign,
-        "q69_containment_dedup": q69_containment_dedup,
-        "q70_bpe_token_stats": q70_bpe_token_stats,
-        "q71_corpus_diff": q71_corpus_diff,
-        "q72_quality_cdf": q72_quality_cdf,
-        "q73_embedding_outliers": q73_embedding_outliers,
-        "q74_dup_span_coverage": q74_dup_span_coverage,
-        "q75_temperature_resample": q75_temperature_resample,
-        "q76_source_cap": q76_source_cap,
-        "q77_slice_divergence": q77_slice_divergence,
-        "q78_winnow_fingerprints": q78_winnow_fingerprints,
-        "q79_weighted_sample": q79_weighted_sample,
-        "q80_chunk_dedup": q80_chunk_dedup,
-        "q81_bloom_decontaminate": q81_bloom_decontaminate,
-        "q82_dsir_importance": q82_dsir_importance,
-        "q83_conjunctive_search": q83_conjunctive_search,
-        "q84_canonical_reps": q84_canonical_reps,
-        "q85_centroid_purity": q85_centroid_purity,
-        "q86_slice_overlap": q86_slice_overlap,
-        "q87_novelty": q87_novelty,
-        "q88_zipf_fit": q88_zipf_fit,
-        "q89_incremental_dedup": q89_incremental_dedup,
-        "q90_cms_heavy_hitters": q90_cms_heavy_hitters,
-        "q91_pmi_collocations": q91_pmi_collocations,
-        "q92_score_drift_psi": q92_score_drift_psi,
-        "q93_image_neardup": q93_image_neardup,
-        "q94_corpus_datasheet": q94_corpus_datasheet,
-        "q95_phrase_search": q95_phrase_search,
-        "q96_embedding_covariance": q96_embedding_covariance,
-        "q97_funnel": q97_funnel,
-        "q98_cohort_retention": q98_cohort_retention,
-        "q99_event_transitions": q99_event_transitions,
-        "q100_char_entropy": q100_char_entropy,
-        "q101_padding_waste": q101_padding_waste,
-        "q102_langid_confusion": q102_langid_confusion,
-        "q103_mixture_ess": q103_mixture_ess,
-        "q104_lsh_recall_audit": q104_lsh_recall_audit,
-        "q105_bpe_merge_step": q105_bpe_merge_step,
-        "q106_score_auc": q106_score_auc,
-        "q107_funnel_in_session": q107_funnel_in_session,
-        "q108_cluster_size_histogram": q108_cluster_size_histogram,
-        "q109_incremental_stats": q109_incremental_stats,
-        "q110_pmc_compression": q110_pmc_compression,
-        "q111_window_anomalies": q111_window_anomalies,
-        "q112_heaps_fit": q112_heaps_fit,
-        "q113_interevent_gaps": q113_interevent_gaps,
-        "q114_session_cooccurrence": q114_session_cooccurrence,
-        "q115_distinct_ngrams": q115_distinct_ngrams,
-        "q116_hard_negatives": q116_hard_negatives,
-        "q117_quality_length_corr": q117_quality_length_corr,
-        "q118_length_gini": q118_length_gini,
-        "q119_fuzzy_join": q119_fuzzy_join,
-        "q120_sequence_packing": q120_sequence_packing,
-        "q121_dedup_rewrite": q121_dedup_rewrite,
-        "q122_matryoshka_eval": q122_matryoshka_eval,
-        "q123_quantized_recall": q123_quantized_recall,
-        "q124_split_leakage": q124_split_leakage,
-        "q125_hybrid_retrieval": q125_hybrid_retrieval,
-        "q126_anneal_schedule": q126_anneal_schedule,
-        "q127_knn_label_audit": q127_knn_label_audit,
-        "q128_vocab_coverage": q128_vocab_coverage,
-        "q129_dedup_inflation": q129_dedup_inflation,
-        "q130_filter_funnel": q130_filter_funnel,
-        "q131_subsample_ci": q131_subsample_ci,
-        "q132_dau_wau": q132_dau_wau,
-        "q133_json_props": q133_json_props,
-        "q134_extremes_report": q134_extremes_report,
-        "q135_integrity_check": q135_integrity_check,
-        "q136_minhash_calibration": q136_minhash_calibration,
-        "q137_temporal_split": q137_temporal_split,
-        "q138_group_split": q138_group_split,
-        "q139_release_manifest": q139_release_manifest,
-        "q140_uncertainty_sample": q140_uncertainty_sample,
-        "q141_embed_documents": q141_embed_documents,
-        "q142_curriculum_order": q142_curriculum_order,
-        "q143_nb_confusion": q143_nb_confusion,
-        "q144_cluster_topics": q144_cluster_topics,
-        "q145_token_waterfill": q145_token_waterfill,
-        "q146_hot_keys": q146_hot_keys,
-        "q147_histogram_quantiles": q147_histogram_quantiles,
-        "q148_burst_detection": q148_burst_detection,
-        "q149_prototypicality": q149_prototypicality,
-        "q150_dedup_threshold_curve": q150_dedup_threshold_curve,
-        "q151_kn_bigram_logprob": q151_kn_bigram_logprob,
-        "q152_quantile_normalize": q152_quantile_normalize,
-        "q153_retrieval_metrics": q153_retrieval_metrics,
-        "q154_surprisal_spans": q154_surprisal_spans,
-        "q155_table_profile": q155_table_profile,
-        "q156_join_cardinality": q156_join_cardinality,
-        "q157_blocklist_scan": q157_blocklist_scan,
-        "q158_token_mass_quantiles": q158_token_mass_quantiles,
-        "q159_pagerank": q159_pagerank,
-        "q160_ewma_anomaly": q160_ewma_anomaly,
-        "q161_association_rules": q161_association_rules,
-        "q162_readability": q162_readability,
-        "q163_winsorize": q163_winsorize,
-        "q164_diversity": q164_diversity,
-        "q165_pareto_frontier": q165_pareto_frontier,
-        "q166_triangles": q166_triangles,
-        "q167_epoch_allocation": q167_epoch_allocation,
-        "q168_normalization_audit": q168_normalization_audit,
-        "q169_decayed_engagement": q169_decayed_engagement,
-        "q170_path_trigrams": q170_path_trigrams,
-        "q171_gap_regularity": q171_gap_regularity,
-        "q172_doc_keywords": q172_doc_keywords,
-        "q173_chi2_independence": q173_chi2_independence,
-        "q174_mmr_diversify": q174_mmr_diversify,
-        "q175_source_length_quantiles": q175_source_length_quantiles,
-        "q176_term_clusters": q176_term_clusters,
-        "q177_benford": q177_benford,
-        "q178_conversion_time": q178_conversion_time,
-        "q179_dow_profile": q179_dow_profile,
-        "q180_coverage_select": q180_coverage_select,
-        "q181_cohen_kappa": q181_cohen_kappa,
-        "q182_pseudonymize_audit": q182_pseudonymize_audit,
-        "q183_k_anonymity": q183_k_anonymity,
-        "q184_audio_neardup": q184_audio_neardup,
-        "q185_bucket_balance": q185_bucket_balance,
-        "q186_split_balance": q186_split_balance,
-        "q187_centroid_drift": q187_centroid_drift,
-        "q188_attribution": q188_attribution,
-        "q189_transition_drift": q189_transition_drift,
-        "q190_ctx_sweep": q190_ctx_sweep,
-        "q191_vocab_tail": q191_vocab_tail,
-        "q192_jl_audit": q192_jl_audit,
-        "q193_ece_calibration": q193_ece_calibration,
-        "q194_ks_drift": q194_ks_drift,
-        "q195_rfm_segments": q195_rfm_segments,
-        "q196_markov_attribution": q196_markov_attribution,
-        "q197_survival": q197_survival,
-        "q198_intrinsic_dim": q198_intrinsic_dim,
-        "q199_doremi_weights": q199_doremi_weights,
-        "q200_term_burstiness": q200_term_burstiness,
-        "q201_markov_entropy": q201_markov_entropy,
-        "q202_hill_tail": q202_hill_tail,
-        "q203_top_eigen": q203_top_eigen,
-        "q204_cusum": q204_cusum,
-        "q205_spearman": q205_spearman,
-        "q206_halflife": q206_halflife,
-        "q207_chao1": q207_chao1,
-        "q208_lang_source_mi": q208_lang_source_mi,
-        "q209_regional_revenue": q209_regional_revenue,
-        "q210_ab_conversion": q210_ab_conversion,
-        "q211_time_spine": q211_time_spine,
-        "q212_char_bigram_entropy": q212_char_bigram_entropy,
-        "q213_crossplit_nll": q213_crossplit_nll,
-        "q214_wilson_ci": q214_wilson_ci,
-        "q215_daily_acf": q215_daily_acf,
-        "q216_revenue_concentration": q216_revenue_concentration,
-        "q217_hubness": q217_hubness,
-        "q218_ucb_source_rank": q218_ucb_source_rank,
-        "q219_daily_jsd": q219_daily_jsd,
-        "q220_cramers_v": q220_cramers_v,
-        "q221_dow_bands": q221_dow_bands,
-        "q222_head_churn": q222_head_churn,
-        "q223_negative_sampling": q223_negative_sampling,
-        "q224_sample_size": q224_sample_size,
-        "q225_event_dedup_audit": q225_event_dedup_audit,
-        "q226_sole_late_supplier": q226_sole_late_supplier,
-        "q227_l_diversity": q227_l_diversity,
-        "q228_cap_sweep": q228_cap_sweep,
-        "q229_feature_hash_collisions": q229_feature_hash_collisions,
-        "q230_mann_kendall": q230_mann_kendall,
-        "q231_sparse_cosine": q231_sparse_cosine,
-        "q232_partition_advisor": q232_partition_advisor,
-        "q233_assortativity": q233_assortativity,
-        "q234_yoy_growth": q234_yoy_growth,
-        "q235_best_split": q235_best_split,
-        "q236_stump_eval": q236_stump_eval,
-        "q237_seasonal_strength": q237_seasonal_strength,
-        "q238_user_entropy": q238_user_entropy,
-        "q239_smoothed_popularity": q239_smoothed_popularity,
-        "q240_tukey_outliers": q240_tukey_outliers,
-        "q241_shipping_priority": q241_shipping_priority,
-        "q242_revenue_forecast": q242_revenue_forecast,
-        "q243_nation_trade_volume": q243_nation_trade_volume,
-        "q244_market_share": q244_market_share,
-        "q245_product_profit": q245_product_profit,
-        "q246_returned_items": q246_returned_items,
-        "q247_order_count_distribution": q247_order_count_distribution,
-        "q248_promo_revenue": q248_promo_revenue,
-        "q249_top_supplier": q249_top_supplier,
-        "q250_small_qty_revenue": q250_small_qty_revenue,
-        "q251_large_volume_customers": q251_large_volume_customers,
-        "q252_discounted_revenue": q252_discounted_revenue,
-        "q253_dormant_customers": q253_dormant_customers,
-        "q254_min_unit_price_supplier": q254_min_unit_price_supplier,
-        "q255_important_part_value": q255_important_part_value,
-        "q256_pricing_summary": q256_pricing_summary,
-        "q257_late_order_priority": q257_late_order_priority,
-        "q258_part_supplier_counts": q258_part_supplier_counts,
-        "q259_excess_shippers": q259_excess_shippers,
-        "q260_zorder_layout": q260_zorder_layout,
-        "q261_centroid_silhouette": q261_centroid_silhouette,
-        "q262_adamic_adar": q262_adamic_adar,
-        "q263_theil_sen_trend": q263_theil_sen_trend,
-        "q264_layout_advisor": q264_layout_advisor,
-        "q265_changepoint": q265_changepoint,
-        "q266_kcore": q266_kcore,
-        "q267_hampel_outliers": q267_hampel_outliers,
-        "q268_compaction_plan": q268_compaction_plan,
-        "q269_conformal_coverage": q269_conformal_coverage,
-        "q270_loso_influence": q270_loso_influence,
-        "q271_shipmode_priority": q271_shipmode_priority,
-        "q272_brand_rules": q272_brand_rules,
-        "q273_salt_advisor": q273_salt_advisor,
-        "q274_xcorr_leadlag": q274_xcorr_leadlag,
-        "q275_top2_eigen": q275_top2_eigen,
-        "q276_hll_audit": q276_hll_audit,
-        "q277_brier_decomposition": q277_brier_decomposition,
-        "q278_component_census": q278_component_census,
-        "q279_join_advisor": q279_join_advisor,
-        "q280_sample_quantile_audit": q280_sample_quantile_audit,
-        "q281_shuffle_balance": q281_shuffle_balance,
-        "q282_partial_corr": q282_partial_corr,
-        "q283_theil_decomposition": q283_theil_decomposition,
-        "q284_object_lifetimes": q284_object_lifetimes,
-        "q285_rollup_census": q285_rollup_census,
-        "q286_robust_profile": q286_robust_profile,
-        "q287_hll_window_merge": q287_hll_window_merge,
-        "q288_kmv_jaccard": q288_kmv_jaccard,
-        "q289_rpo_gaps": q289_rpo_gaps,
-        "q290_histogram_pctile": q290_histogram_pctile,
-        "q291_deletion_impact": q291_deletion_impact,
-        "q292_median_ci": q292_median_ci,
-        "q293_delete_batches": q293_delete_batches,
-        "q294_dataset_card": q294_dataset_card,
-        "q295_backup_growth": q295_backup_growth,
-        "q296_readability": q296_readability,
-        "q297_pit_features": q297_pit_features,
-        "q298_linear_attribution": q298_linear_attribution,
-        "q299_linear_mmd": q299_linear_mmd,
-        "q300_curation_funnel": q300_curation_funnel,
-        "q301_cosine_pairs_lsh": q301_cosine_pairs_lsh,
-        "q302_ngram_jaccard_capped": q302_ngram_jaccard_capped,
-        "q303_weighted_jaccard": q303_weighted_jaccard,
-        "q304_weighted_minhash_lsh": q304_weighted_minhash_lsh,
-        "q305_densest_subgraph": q305_densest_subgraph,
-    }
+    """Every ``qNNN_<name>`` function of this module under its own name,
+    in query-number order."""
+    found = [(n, f) for n, f in globals().items() if re.fullmatch(r"q\d+_\w+", n)]
+    return dict(sorted(found, key=lambda nf: int(nf[0][1:].split("_")[0])))
 
 
 # --- DuckDB oracle ----------------------------------------------------------

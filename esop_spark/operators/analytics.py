@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from esop_spark.operators.iterate import share_relation
+from esop_spark.operators.iterate import ordered_prefix_sum, share_relation
 
 
 def cents(col: Column | str) -> Column:
@@ -3721,8 +3721,8 @@ def theil_sen_daily_revenue(orders: DataFrame) -> DataFrame:
     Scale shape: the corpus collapses to the bounded day grain (≈3000 rows
     for a decade — corpus-size-independent) in one mergeable agg; the
     pairwise slope explode is |days|²/2 ≈ 5M tiny rows, a fixed cost that
-    does not grow with data volume. The slope median is rank-exact via the
-    distributed range-partition construction — NOT Spark's percentile()
+    does not grow with data volume. The slope median is rank-exact via
+    :func:`iterate.ordered_prefix_sum` — NOT Spark's percentile()
     aggregate, which funnels every slope into one in-memory buffer (a
     single-task sort of millions of doubles; measured 12 s at sf0.1 and
     the 100 TB straggler shape). Medians interpolate at 0.5 exactly like
@@ -3734,8 +3734,6 @@ def theil_sen_daily_revenue(orders: DataFrame) -> DataFrame:
 
     Output one row: (n_days, n_pairs, slope_cents_per_day, intercept_cents).
     """
-    from esop_spark.operators.sampling import _distributed_stratum_rank
-
     # Round 11 (guide §5: cache only what's reused): the day-grain series
     # (~2.4k rows) is consumed FOUR times — both slope-join legs, the
     # n_pairs count, and the residual pass — each evaluation a full
@@ -3761,14 +3759,14 @@ def theil_sen_daily_revenue(orders: DataFrame) -> DataFrame:
     counted = daily.agg(F.count(F.lit(1)).alias("nd")).select(
         F.expr("nd * (nd - 1) div 2").cast("bigint").alias("n_pairs")
     )
-    ranked = _distributed_stratum_rank(
-        slopes.withColumn("_one", F.lit(1)), "_one", F.col("slope"), F.col("pk")
+    ranked = ordered_prefix_sum(
+        slopes, ["slope", F.col("pk").cast("string")], F.lit(1)
     )
     med = (
         ranked.crossJoin(F.broadcast(counted))
         .filter(
-            (F.col("_rn") == F.expr("(n_pairs + 1) div 2"))
-            | (F.col("_rn") == F.expr("n_pairs div 2 + 1"))
+            (F.col("cum_incl") == F.expr("(n_pairs + 1) div 2"))
+            | (F.col("cum_incl") == F.expr("n_pairs div 2 + 1"))
         )
         .agg(
             F.max("n_pairs").alias("n_pairs"),

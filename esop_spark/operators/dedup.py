@@ -269,7 +269,7 @@ def ngram_jaccard_pairs(
     # ~1.9e8 rows, and the default deserialized MEMORY_AND_DISK block
     # build materializes whole partitions on-heap — 32 concurrent tasks
     # OOM'd the 8 GiB rehearsal heap; DISK_ONLY streams through the
-    # serializer instead (the k-core RoundCheckpointer precedent)
+    # serializer instead (the k-core peel's precedent)
     shared_rare = shared_checkpoint(
         ra.join(
             rb,

@@ -30,10 +30,14 @@ cross-backup identity.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from esop_spark.operators.iterate import RoundCheckpointer, share_relation
+from esop_spark.operators.iterate import (
+    release_checkpoint,
+    share_relation,
+    shared_checkpoint,
+)
 
 RANK_ONE = 1_000_000_000  # 1.0 in nano units
 
@@ -250,14 +254,15 @@ def triangle_count(edges_undirected: DataFrame) -> DataFrame:
     )
 
 
-def _checkpoint_counting_changed(
-    ckpt: RoundCheckpointer, state: DataFrame
+def _checkpoint_counting(
+    df: DataFrame, count: Column, storage_level: StorageLevel | None = None
 ) -> tuple[DataFrame, int]:
-    """Eagerly checkpoint one vertex-state round and return it with its
-    number of ``changed`` rows. The count rides on the checkpoint's own
-    job as an observed metric, so convergence costs no extra job."""
+    """:func:`shared_checkpoint` one loop round and return it with the
+    value of the aggregate ``count`` over it. The count rides on the
+    checkpoint's own job as an observed metric, so a loop's convergence
+    test costs no extra job."""
     obs = Observation()
-    out = ckpt.checkpoint(state.observe(obs, F.count_if("changed").alias("n")))
+    out = shared_checkpoint(df.observe(obs, count.alias("n")), storage_level)
     return out, obs.get["n"]
 
 
@@ -366,8 +371,9 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     label changed, or after ``max_iters`` rounds (labels are then the
     minimum within ``max_iters + 1`` hops of the contracted graph).
     Superseded rounds' checkpoint blocks are released as soon as the next
-    round is materialized, and the final round is handed to the shared
-    registry because the returned frame reads it lazily.
+    round is materialized; the final round, which the returned frame
+    reads lazily, stays in the shared-checkpoint registry until the
+    between-queries hook.
 
     Returns ``(node, cluster_id, cluster_size)`` with cluster_id = the
     minimum node key in the component.
@@ -380,7 +386,6 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
 
 def _component_labels(edges: DataFrame, max_iters: int) -> DataFrame:
     """The ``(node, label)`` relation of :func:`connected_components`."""
-    ckpt = RoundCheckpointer(edges)
     adj = (
         _symmetrize(_contract_locally(edges))
         .groupBy(F.col("src").alias("node"))
@@ -389,12 +394,12 @@ def _component_labels(edges: DataFrame, max_iters: int) -> DataFrame:
     node = F.col("node")
     label = F.least(node, F.array_min("nbrs"))
     tells = F.exists("nbrs", lambda u: (u != label) & (u != node))
-    state, n_changed = _checkpoint_counting_changed(
-        ckpt,
+    state, n_changed = _checkpoint_counting(
         adj.select(
             "node", label.alias("label"), "nbrs",
             ((label < node) & tells).alias("changed"),
         ),
+        F.count_if("changed"),
     )
     for _ in range(max_iters):
         if n_changed == 0:
@@ -417,9 +422,8 @@ def _component_labels(edges: DataFrame, max_iters: int) -> DataFrame:
             )
         )
         prev = state
-        state, n_changed = _checkpoint_counting_changed(ckpt, nxt)
-        ckpt.release(prev)
-    ckpt.disown_to_shared(state)  # the returned frame reads it lazily
+        state, n_changed = _checkpoint_counting(nxt, F.count_if("changed"))
+        release_checkpoint(prev)
     return state.select("node", "label")
 
 
@@ -562,6 +566,33 @@ def adamic_adar_topk(
     )
 
 
+def _both_directions(edges: DataFrame) -> DataFrame:
+    """The peels' edge relation: each undirected edge in both
+    orientations, checkpointed (DISK_ONLY) every round — it is
+    corpus-scale, written once and read once next round, so on-heap
+    caching buys nothing and competes with the degree-agg/semi-join
+    execution memory (the sf10 local-mode OOM).
+
+    A union of two projections, not :func:`_symmetrize` (round 11 A/B,
+    q305 3.37/3.53 → 4.93/3.92 min-of-5): the union feeds the checkpoint
+    directly, so the explode's one branch runs with half the task
+    parallelism while exchange reuse already shares the shuffle beneath
+    both branches. Eager checkpoints too: a lazy one-job-per-round
+    variant measured flat-to-slower at sf0.1 (q266 3.5 → 3.7, q305 3.3 →
+    3.5+)."""
+    return edges.select("src", "dst").union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
+def _induced(both: DataFrame, keep: DataFrame) -> DataFrame:
+    """The edges of ``both`` with both endpoints in ``keep(u)``: two
+    semi-joins on the node key."""
+    return both.join(keep, both["src"] == keep["u"], "left_semi").join(
+        keep, both["dst"] == keep["u"], "left_semi"
+    )
+
+
 def kcore_peel(
     edges_undirected: DataFrame, k: int = 4, rounds: int = 6
 ) -> DataFrame:
@@ -590,35 +621,19 @@ def kcore_peel(
     references the previous round's relation three times, so without
     lineage truncation the logical plan grows exponentially in ``rounds``
     (Catalyst analysis alone becomes the bottleneck). Each superseded
-    round's checkpoint blocks are released explicitly (RoundCheckpointer)
-    the moment the next round materializes — without that, every dead
-    round stays resident until JVM GC, which is what pushed the sf10
-    rehearsal past the default local-mode heap. The relation shrinks
+    round's blocks are released (:func:`release_checkpoint`) the moment
+    the next round materializes — without that, every dead round stays
+    resident until JVM GC, which is what pushed the sf10 rehearsal past
+    the default local-mode heap. The relation shrinks
     monotonically, so later rounds are cheaper; a converged round (no
     edge dropped) breaks out early — the remaining rounds are no-ops by
     definition, so early exit preserves run-count parity with the
-    oracle. Output grain: surviving nodes."""
-    # DISK_ONLY rounds: the edge relation is corpus-scale, written once and
-    # read once next round — on-heap caching buys nothing and competes with
-    # the degree-agg/semi-join execution memory (the sf10 local-mode OOM)
-    ckpt = RoundCheckpointer(edges_undirected, storage_level=StorageLevel.DISK_ONLY)
-    # eager checkpoints: the lazy one-job-per-round variant was
-    # A/B-measured flat-to-slower at sf0.1 (q266 min 3.5 → 3.7, q305
-    # 3.3 → 3.5+) and reverted — in local mode the saved job's ~50 ms of
-    # scheduling does not pay for losing the probe-over-blocks shape.
-    # Round 11: explode-based symmetrization (_symmetrize) REVERTED here
-    # too (q305 3.37/3.53 → 4.93/3.92 min-of-5, two interleaved A/B
-    # pairs): the union feeds the eager checkpoint directly, so its two
-    # branches materialize as twice as many parallel tasks while exchange
-    # reuse already shares the dropDuplicates shuffle beneath them.
-    both = ckpt.checkpoint(
-        edges_undirected.select("src", "dst").union(
-            edges_undirected.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
+    oracle. Each round's edge count is observed on its own checkpoint
+    job. Output grain: surviving nodes."""
+    n_rows = F.count(F.lit(1))
+    both, n_edges = _checkpoint_counting(
+        _both_directions(edges_undirected), n_rows, StorageLevel.DISK_ONLY
     )
-    n_edges = both.count()
     for _ in range(rounds):
         keep = (
             both.groupBy("src")
@@ -627,16 +642,13 @@ def kcore_peel(
             .select(F.col("src").alias("u"))
         )
         prev = both
-        both = ckpt.checkpoint(
-            both.join(keep, both["src"] == keep["u"], "left_semi")
-            .join(keep, both["dst"] == keep["u"], "left_semi")
+        both, n_next = _checkpoint_counting(
+            _induced(prev, keep), n_rows, StorageLevel.DISK_ONLY
         )
-        ckpt.release(prev)  # checkpoint was eager: prev has no consumers left
-        n_next = both.count()
+        release_checkpoint(prev)
         if n_next == n_edges:
             break
         n_edges = n_next
-    ckpt.disown_to_shared(both)  # the returned aggregation still reads the final round
     return both.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("degree")
     )
@@ -687,9 +699,10 @@ def densest_subgraph_peel(
     nodes or the threshold test would contradict the average. Per round:
     one degree aggregation, a 1-row stats collect (|V|, 2|E|) for the
     threshold, and two semi-joins — the iterated-small-step shape, edges
-    localCheckpoint-ed with superseded rounds released (RoundCheckpointer,
-    DISK_ONLY); the BEST round's relation is retained until the end and
-    disowned to the shared registry for the between-queries release hook.
+    checkpointed (DISK_ONLY) with superseded rounds released; the BEST
+    round's relation is retained and left to the between-queries release
+    hook. The stats stay a collect: ``nv`` counts distinct edge sources,
+    and ``observe`` takes no distinct aggregate.
 
     Round-count parity with the SQL oracle (:func:`densest_sql`): both
     engines run AT MOST ``rounds`` peels and pick the best nonempty round
@@ -711,16 +724,8 @@ def densest_subgraph_peel(
     Output: one row per node of the best-density subgraph —
     (node, degree, density), degree measured inside that subgraph and
     density the (constant) winning ρ."""
-    ckpt = RoundCheckpointer(edges_undirected, storage_level=StorageLevel.DISK_ONLY)
-    # eager checkpoints: see kcore_peel — the lazy variant measured
-    # slower at sf0.1 (q305 3.3 → 3.5+) and was reverted, as was the
-    # explode-based symmetrization (round 11, same A/B as kcore_peel).
-    both = ckpt.checkpoint(
-        edges_undirected.select("src", "dst").union(
-            edges_undirected.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
+    both = shared_checkpoint(
+        _both_directions(edges_undirected), StorageLevel.DISK_ONLY
     )
     best = None
     best_density = float("-inf")
@@ -734,23 +739,18 @@ def densest_subgraph_peel(
             break  # empty stays empty: remaining oracle rounds are no-ops
         density = (ne2 / 2.0) / nv  # same op order as the SQL oracle
         if density > best_density:  # strict: ties keep the earliest round
-            if best is not None:
-                ckpt.release(best)
+            release_checkpoint(best)
             best, best_density = both, density
         if r == rounds:
             break
         thr = ((1.0 + eps) * ne2) / nv  # same op order as the SQL oracle
         keep = deg.filter(F.col("deg") > thr).select(F.col("src").alias("u"))
         prev = both
-        both = ckpt.checkpoint(
-            prev.join(keep, prev["src"] == keep["u"], "left_semi").join(
-                keep, prev["dst"] == keep["u"], "left_semi"
-            )
-        )
+        both = shared_checkpoint(_induced(prev, keep), StorageLevel.DISK_ONLY)
         if prev is not best:
-            ckpt.release(prev)
+            release_checkpoint(prev)
     if both is not best:
-        ckpt.release(both)
+        release_checkpoint(both)
     if best is None:
         # zero edges: the first round saw nv == 0, so no round was ever a
         # candidate — return the empty result the SQL oracle produces for
@@ -758,7 +758,6 @@ def densest_subgraph_peel(
         return edges_undirected.sparkSession.createDataFrame(
             [], "node bigint, degree bigint, density double"
         )
-    ckpt.disown_to_shared(best)  # the returned aggregation still reads it
     return (
         best.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("degree"))

@@ -1,38 +1,36 @@
-"""Explicit block release for ``localCheckpoint``-ed iterative loops.
+"""Block lifetime for ``localCheckpoint``-ed frames, and the ordered scan
+built on it.
 
 ``DataFrame.localCheckpoint()`` materializes the plan into cached RDD
 blocks and truncates lineage — the right tool for label-propagation /
-peel loops where the logical plan would otherwise grow per round. But
-unlike ``persist()`` there is no public unpersist handle: the blocks are
-freed only when the JVM garbage-collects the LogicalRDD plan and the
+peel loops where the logical plan would otherwise grow per round, and
+for pinning one range partitioning that two consumers must agree on.
+But unlike ``persist()`` there is no public unpersist handle: the blocks
+are freed only when the JVM garbage-collects the LogicalRDD plan and the
 ContextCleaner notices. In a loop that rebinds the checkpointed frame
 every round, every superseded round's blocks stay resident until a GC
-happens to run. Harmless on a cluster (blocks are spread across
-executors and evicted under pressure), but in a single-JVM local run at
-100x data it is the difference between fitting in the default heap and
-OOM: the sf10 k-core rehearsal needed a 48 GiB heap purely to hold dead
-peel rounds (SCALE.md round-6 finding).
+happens to run — in a single-JVM local run at 100x data the difference
+between fitting in the default heap and OOM (the sf10 k-core rehearsal
+needed a 48 GiB heap purely to hold dead peel rounds, SCALE.md round 6).
 
-:class:`RoundCheckpointer` closes the gap: after the eager checkpoint it
-reads the checkpointed plan's OWN RDD id straight off the ``LogicalRDD``
-node the checkpoint produced (``analyzed().rdd().id()``) and unpersists
-exactly that id once the caller declares the frame superseded. Owning
-the plan's own id — rather than diffing ``getPersistentRDDs`` around the
-call, the round-7 construction — matters because the checkpoint's job
-can materialize OTHER persistent RDDs as a side effect: a lazily
+One primitive decides block lifetime. :func:`shared_checkpoint` eagerly
+checkpoints a frame and registers the RDD id it pinned in a module-wide
+registry. :func:`release_checkpoint` frees one such frame early (a loop
+releases the round it just replaced, so it holds at most two rounds),
+and :func:`release_shared_relations` — the between-queries hook bench.py
+and tools/check_oracle.py call — frees whatever is still registered: the
+final round a returned frame reads lazily, the one-shot intermediates
+(ngram hot-key lists, candidate pair lists, ordered-scan partitionings),
+and the rounds of a loop that raised partway.
+
+The id is read straight off the ``LogicalRDD`` node the checkpoint
+produced (``analyzed().rdd().id()``), never by diffing
+``getPersistentRDDs`` around the call: the checkpoint's job can
+materialize OTHER persistent RDDs as a side effect — a lazily
 ``persist()``-ed input whose SQL cache buffer first builds inside the
-checkpoint action would land in the diff and be wrongly unpersisted on
-the first ``release``, silently recomputing that input every later round
-(the round-8 advice finding on ``connected_components``' ``sym`` cache).
-
-:func:`shared_checkpoint` is the same idea for ONE-SHOT eager
-checkpoints (bounded intermediates pinned so two consumer legs share a
-materialization — ngram hot-key lists, candidate pair lists, stratum
-rank exchanges): the block id is registered module-globally and freed by
-:func:`release_shared_checkpoints`, which
-:func:`release_shared_relations` (the between-queries hook bench.py and
-tools/check_oracle.py already call) invokes — so a long-lived library
-session no longer accumulates checkpoint blocks until JVM GC.
+checkpoint action — and a diff would claim and later unpersist that
+cache, silently recomputing the input every later round (the round-8
+finding on ``connected_components``' ``sym`` cache).
 
 Contract note: unlike a released ``persist()`` (which recomputes), a
 released checkpoint CANNOT re-execute — lineage was truncated — so the
@@ -45,19 +43,26 @@ relations that several legs of one query read are persisted and
 registered here, and the same hook unpersists them. Every operator
 module imports the pair from this module; ``dedup`` re-exports both for
 callers that have always imported them from there.
+
+:func:`ordered_prefix_sum` is the one ordered scan (delete batches,
+compaction bins, shard packing, per-stratum ranks): a running sum in a
+global or per-stratum order with no single-task window. It imports no
+operator module, so every operator module can use it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 
 def _checkpoint_rdd_id(out: DataFrame) -> int | None:
-    """RDD id a just-created eager ``localCheckpoint`` pinned: the
-    ``LogicalRDD`` the checkpoint produced wraps the persisted RDD
-    directly. Returns None if the plan shape is unexpected (caller falls
-    back to not tracking — blocks then free on JVM GC as before)."""
+    """RDD id an eager ``localCheckpoint`` pinned: the ``LogicalRDD`` the
+    checkpoint produced wraps the persisted RDD directly. None for any
+    other plan shape (a frame derived from a checkpoint, a plain frame)."""
     try:
         plan = out._jdf.queryExecution().analyzed()
         return int(plan.rdd().id())
@@ -65,24 +70,48 @@ def _checkpoint_rdd_id(out: DataFrame) -> int | None:
         return None
 
 
-# (jsc, rdd_id) pairs pinned by shared_checkpoint(), released between
-# queries via release_shared_checkpoints(). Module-global like
-# _SHARED_RELATIONS, and freed by the same hook.
-_SHARED_CHECKPOINT_IDS: list[tuple[object, int]] = []
+# rdd_id -> jsc for every block shared_checkpoint() pinned and nobody has
+# released yet. Module-global like _SHARED_RELATIONS, and freed by the
+# same hook.
+_SHARED_CHECKPOINT_IDS: dict[int, object] = {}
+
+
+def _unpersist(jsc, rid: int) -> None:
+    try:
+        jmap = jsc.getPersistentRDDs()
+        if jmap.containsKey(rid):
+            jmap.get(rid).unpersist(False)
+    except Exception:
+        # JVM already stopped (session teardown) — nothing to free
+        pass
 
 
 def shared_checkpoint(df: DataFrame, storage_level: StorageLevel | None = None) -> DataFrame:
-    """Eagerly ``localCheckpoint`` a one-shot bounded intermediate and
-    register its block for deferred release (between-queries hook), so
-    repeated operator calls in one long-lived session do not accumulate
-    checkpoint blocks until JVM GC."""
-    out = df.localCheckpoint(eager=True, storageLevel=storage_level)
+    """Eagerly ``localCheckpoint`` ``df`` and register its block for
+    release, early by :func:`release_checkpoint` or between queries by
+    :func:`release_shared_relations`.
+
+    ``storage_level`` sets the block placement: the default
+    MEMORY_AND_DISK suits small relations, while edge-relation peels over
+    corpus-scale graphs pass DISK_ONLY — the round's blocks are written
+    once and read once next round, so caching them on-heap buys little
+    and (in a single-JVM local run) competes with the very join/agg
+    execution memory the round needs."""
+    out = df.localCheckpoint(storageLevel=storage_level)  # eager by default
     rid = _checkpoint_rdd_id(out)
     if rid is not None:
-        _SHARED_CHECKPOINT_IDS.append(
-            (out.sparkSession.sparkContext._jsc, rid)
-        )
+        _SHARED_CHECKPOINT_IDS[rid] = out.sparkSession.sparkContext._jsc
     return out
+
+
+def release_checkpoint(df: DataFrame | None) -> None:
+    """Free the blocks of a frame :func:`shared_checkpoint` returned once
+    nothing will read it again (a loop's superseded round). A no-op for
+    ``None``, for a frame derived from a checkpoint and for any frame the
+    registry does not hold, so loops can release unconditionally."""
+    rid = None if df is None else _checkpoint_rdd_id(df)
+    if rid in _SHARED_CHECKPOINT_IDS:
+        _unpersist(_SHARED_CHECKPOINT_IDS.pop(rid), rid)
 
 
 def release_shared_checkpoints() -> None:
@@ -91,14 +120,8 @@ def release_shared_checkpoints() -> None:
     blocks are dropped (lineage is truncated), so frames returned by
     earlier operator calls must not be re-executed after this runs."""
     while _SHARED_CHECKPOINT_IDS:
-        jsc, rid = _SHARED_CHECKPOINT_IDS.pop()
-        try:
-            jmap = jsc.getPersistentRDDs()
-            if jmap.containsKey(rid):
-                jmap.get(rid).unpersist(False)
-        except Exception:
-            # JVM already stopped (session teardown) — nothing to free
-            pass
+        rid, jsc = _SHARED_CHECKPOINT_IDS.popitem()
+        _unpersist(jsc, rid)
 
 
 # Corpus-shaped relations persisted so one query's legs share a single
@@ -139,91 +162,70 @@ def release_shared_relations() -> None:
     release_shared_checkpoints()
 
 
-class RoundCheckpointer:
-    """Tracks localCheckpoint block ownership per DataFrame so iterative
-    loops can free superseded rounds deterministically instead of waiting
-    for JVM GC.
+def ordered_prefix_sum(
+    df: DataFrame,
+    order: Sequence[Column | str],
+    value: Column | str,
+    strata: Sequence[str] = (),
+    num_partitions: int = 32,
+) -> DataFrame:
+    """Adds ``cum_incl`` = SUM(value) OVER (PARTITION BY strata ORDER BY
+    order ROWS UNBOUNDED PRECEDING) without a single-task window. A rank
+    is the prefix sum of ``F.lit(1)``.
 
-    ``storage_level`` sets the checkpoint block placement: the default
-    MEMORY_AND_DISK is right for label-relation loops (rounds are small),
-    while edge-relation peels over corpus-scale graphs should pass
-    DISK_ONLY — the round's blocks are written once and read once next
-    round, so caching them on-heap buys little and (in a single-JVM local
-    run) competes with the very join/agg execution memory the round
-    needs."""
+    ``order`` should be unique within a stratum: tied rows get distinct,
+    arbitrarily ordered sums (as ``row_number`` ranks ties). Four steps,
+    all bounded:
 
-    def __init__(self, df_or_spark, storage_level: StorageLevel | None = None) -> None:
-        spark = (
-            df_or_spark.sparkSession
-            if isinstance(df_or_spark, DataFrame)
-            else df_or_spark
+    1. range-repartition on ``(*strata, *order)`` — partitions hold
+       contiguous slices of the global lexicographic order, so within a
+       partition a stratum's rows are a contiguous run of its own order
+       (RangePartitioner sends equal keys to one partition, so ties never
+       straddle a boundary);
+    2. pin that partitioning with :func:`shared_checkpoint`:
+       RangePartitioner samples its boundaries with an RDD-id-derived
+       seed, so two independent evaluations of the exchange can disagree,
+       and both consumers below must read the SAME ``_pid``;
+    3. a running sum per (partition, stratum) over an explicit ROWS frame
+       (a default RANGE frame would give tied rows one sum) — a
+       pid-clustered window, so no task sorts more than its
+       ~1/num_partitions slice of any stratum, however hot;
+    4. per-(partition, stratum) totals -> exclusive offsets. The offsets
+       relation has at most ``num_partitions`` rows per stratum, so its
+       window is trivial and the join back is a broadcast hash join.
+
+    The sum is exact and invariant to where the boundaries land."""
+    # expressions become columns so the window can order by them
+    tags = {f"_o{i}": o for i, o in enumerate(order) if not isinstance(o, str)}
+    order_cols = [f"_o{i}" if f"_o{i}" in tags else o for i, o in enumerate(order)]
+    tagged = df.select("*", *[o.alias(c) for c, o in tags.items()])
+    ranged = shared_checkpoint(
+        tagged.repartitionByRange(num_partitions, *strata, *order_cols)
+        .withColumn("_pid", F.spark_partition_id())
+    )
+    value = F.col(value) if isinstance(value, str) else value
+    within = (
+        Window.partitionBy("_pid", *strata)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    before = (
+        Window.partitionBy(*strata)
+        .orderBy("_pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = (
+        ranged.groupBy("_pid", *strata)
+        .agg(F.sum(value).alias("_part"))
+        .select(
+            "_pid",
+            *strata,
+            F.coalesce(F.sum("_part").over(before), F.lit(0)).alias("_off"),
         )
-        self._jsc = spark.sparkContext._jsc
-        self._level = storage_level
-        # id(df) -> [persistent rdd ids created by that df's checkpoint].
-        # Ownership is read off the checkpoint's own LogicalRDD, never by
-        # diffing the global persistent set — a diff would claim RDDs the
-        # checkpoint's job persisted as a side effect (lazily persist()-ed
-        # inputs whose cache buffers first materialize inside the round-1
-        # checkpoint action) and release() would then unpersist a cache
-        # every later round still needs.
-        self._owned: dict[int, list[int]] = {}
-
-    def checkpoint(self, df: DataFrame, eager: bool = True) -> DataFrame:
-        """localCheckpoint ``df`` and record the RDD id it pinned.
-
-        ``eager=False`` defers materialization to the caller's next FULL
-        action over the frame (loop bodies that immediately run a
-        convergence aggregation over the new round use this to fold the
-        former materialize-then-check two-job sequence into ONE job —
-        the action both computes the checkpoint blocks and returns the
-        convergence statistic). The caller must guarantee that next
-        action computes every partition (an ungrouped aggregate does; a
-        limit-style action may not), otherwise Spark schedules a
-        fill-in job for the missing partitions at lineage-truncation
-        time — correct, but the second job returns."""
-        out = df.localCheckpoint(eager=eager, storageLevel=self._level)
-        rid = _checkpoint_rdd_id(out)
-        self._owned[id(out)] = [] if rid is None else [rid]
-        return out
-
-    def release(self, df: DataFrame | None) -> None:
-        """Unpersist the blocks a prior :meth:`checkpoint` created for
-        ``df``. No-op for frames this checkpointer doesn't own (including
-        ``None``), so loop prologues can release unconditionally."""
-        if df is None:
-            return
-        rdd_ids = self._owned.pop(id(df), [])
-        if not rdd_ids:
-            return
-        jmap = self._jsc.getPersistentRDDs()
-        for rid in rdd_ids:
-            if jmap.containsKey(rid):
-                jmap.get(rid).unpersist(False)
-
-    def release_all(self) -> None:
-        """Free every checkpoint this instance still owns (loop epilogue
-        for frames that never became the returned result)."""
-        jmap = self._jsc.getPersistentRDDs()
-        for rdd_ids in self._owned.values():
-            for rid in rdd_ids:
-                if jmap.containsKey(rid):
-                    jmap.get(rid).unpersist(False)
-        self._owned.clear()
-
-    def disown(self, df: DataFrame) -> None:
-        """Stop tracking ``df`` (e.g. it is about to be returned to the
-        caller and must outlive this checkpointer). The block then frees
-        only on JVM GC; prefer :meth:`disown_to_shared` for frames whose
-        blocks should be reclaimed by the between-queries release hook."""
-        self._owned.pop(id(df), None)
-
-    def disown_to_shared(self, df: DataFrame) -> None:
-        """Move ``df``'s checkpoint blocks from this checkpointer to the
-        shared-checkpoint registry: the frame outlives the loop (it feeds
-        the RETURNED result), but its blocks still free at the next
-        between-queries :func:`release_shared_relations` instead of JVM GC —
-        closing the last leak class for iterative operators in a
-        long-lived library session."""
-        for rid in self._owned.pop(id(df), []):
-            _SHARED_CHECKPOINT_IDS.append((self._jsc, rid))
+    )
+    return (
+        ranged.withColumn("_local", F.sum(value).over(within))
+        .join(F.broadcast(offsets), ["_pid", *strata])
+        .withColumn("cum_incl", (F.col("_local") + F.col("_off")).cast("bigint"))
+        .drop("_pid", "_local", "_off", *tags)
+    )

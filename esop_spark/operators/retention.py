@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from esop_spark.operators.iterate import shared_checkpoint
+from esop_spark.operators.iterate import ordered_prefix_sum
 
 
 _DURATION_UNITS_MS = {
@@ -126,9 +126,9 @@ def compaction_plan(
     core/src/main/java/com/instaclustr/esop/impl/restore/RestorationUtilities.java
     download groupings).
 
-    Scale shape: the per-table running sum uses the range-partition +
-    per-(partition, table) window + broadcast-offset construction
-    (splits._distributed_prefix_sum generalized per stratum) — NOT a
+    Scale shape: the per-table running sum is
+    :func:`iterate.ordered_prefix_sum` with the table as its stratum (range
+    partition + per-(partition, table) window + broadcast offsets) — NOT a
     per-table single-task window, so one million-sstable table cannot
     funnel through one reducer. The offsets relation is
     |tables|×|partitions| rows, broadcastable. Bin assignment is
@@ -148,52 +148,23 @@ def compaction_plan(
         # dropDuplicates, which keeps an arbitrary row
         .groupBy("keyspace", "table_name", "object_key")
         .agg(F.max("size").alias("size"))
-        .withColumn(
-            "_ord",
-            F.concat(
-                F.lpad(F.col("size").cast("string"), 14, "0"),
-                F.lit("|"),
-                F.col("object_key"),
-            ),
-        )
-        .withColumn("_tbl", F.concat_ws(".", "keyspace", "table_name"))
     )
-    # localCheckpoint pins ONE materialized range partitioning for both
-    # consumers (the local window and the offsets agg) — without it the
-    # two branches can sample different boundaries and disagree on _pid
-    ranged = shared_checkpoint(
-        objs.repartitionByRange(num_partitions, F.col("_tbl"), F.col("_ord"))
-        .withColumn("_pid", F.spark_partition_id())
+    size_order = F.concat(
+        F.lpad(F.col("size").cast("string"), 14, "0"),
+        F.lit("|"),
+        F.col("object_key"),
     )
-    w_local = (
-        Window.partitionBy("_pid", "_tbl")
-        .orderBy("_ord")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = ranged.withColumn("_lcum", F.sum("size").over(w_local))
-    w_off = (
-        Window.partitionBy("_tbl")
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        ranged.groupBy("_pid", "_tbl")
-        .agg(F.sum("size").alias("_psum"))
-        .select(
-            "_pid",
-            "_tbl",
-            F.coalesce(F.sum("_psum").over(w_off), F.lit(0)).alias("_off"),
-        )
-    )
-    packed = (
-        local.join(F.broadcast(offsets), ["_pid", "_tbl"])
-        .withColumn("_cum", F.col("_lcum") + F.col("_off"))
-        .withColumn(
-            "bin",
-            ((F.col("_cum") - F.col("size")) / F.lit(target_bytes)).cast(
-                "bigint"
-            ),
-        )
+    packed = ordered_prefix_sum(
+        objs.withColumn("_tbl", F.concat_ws(".", "keyspace", "table_name")),
+        [size_order],
+        "size",
+        ["_tbl"],
+        num_partitions,
+    ).withColumn(
+        "bin",
+        ((F.col("cum_incl") - F.col("size")) / F.lit(target_bytes)).cast(
+            "bigint"
+        ),
     )
     return (
         packed.groupBy("keyspace", "table_name", "bin")
@@ -297,25 +268,22 @@ def delete_batches(
     """Pack removable objects into bounded delete batches — the plan the
     S3 leg executes 100 keys per DeleteObjects call (reference batching:
     s3/src/main/java/com/instaclustr/esop/s3/v2/BaseS3Restorer.java:252-276).
-    Batch id = (global rank by object_key − 1) div batch_size, rank via
-    the distributed range-partition construction so a million-object
+    Batch id = (global rank by object_key − 1) div batch_size, the rank
+    being :func:`iterate.ordered_prefix_sum` of 1, so a million-object
     purge never funnels through one task.
 
     Output per batch: (batch, n_keys, batch_bytes, first_key)."""
-    from esop_spark.operators.sampling import _distributed_stratum_rank
-
-    ranked = _distributed_stratum_rank(
+    ranked = ordered_prefix_sum(
         removable.select(
             "object_key", F.col("size").cast("bigint").alias("size")
-        ).withColumn("_one", F.lit(1)),
-        "_one",
-        F.col("object_key"),
-        F.col("object_key"),
-        num_partitions,
+        ),
+        ["object_key"],
+        F.lit(1),
+        num_partitions=num_partitions,
     )
     return (
         ranked.withColumn(
-            "batch", F.expr(f"(_rn - 1) div {batch_size}").cast("bigint")
+            "batch", F.expr(f"(cum_incl - 1) div {batch_size}").cast("bigint")
         )
         .groupBy("batch")
         .agg(

@@ -12,9 +12,9 @@ Scale design: `hash_sample`/`stratified_sample` are narrow filters (no
 shuffle at all — the rate lookup is a broadcast of a tiny per-stratum map).
 The exact per-stratum selections (`sample_k_per_stratum`,
 `mixture_resample`, `temperature_resample`) rank with
-:func:`_distributed_stratum_rank` — a range partition on
-(stratum, bucket, key), a per-(partition, stratum) local row_number, and a
-broadcast join of the tiny per-(partition, stratum) offset table. A hot
+:func:`iterate.ordered_prefix_sum` of 1 — a range partition on
+(stratum, bucket, key), a per-(partition, stratum) local running count,
+and a broadcast join of the tiny per-(partition, stratum) offset table. A hot
 stratum (50% of a 100 TB corpus in one language) is spread across ALL
 partitions by its bucket range instead of funnelling through the single
 reducer a ``Window.partitionBy(stratum)`` sort would use; no task ever
@@ -29,7 +29,8 @@ from pyspark.sql.window import Window
 
 from esop_spark.operators.dedup import md5_hash32
 from esop_spark.operators.iterate import (
-    RoundCheckpointer,
+    ordered_prefix_sum,
+    release_checkpoint,
     share_relation,
     shared_checkpoint,
 )
@@ -92,76 +93,6 @@ def score_weighted_sample(
     )
 
 
-def _distributed_stratum_rank(
-    df: DataFrame,
-    strata_col: str,
-    bucket: Column,
-    key: Column,
-    num_partitions: int = 32,
-) -> DataFrame:
-    """Adds ``_rn`` = row_number() within each stratum ordered by
-    (bucket, key) WITHOUT a per-stratum single-task window.
-
-    The naive ``Window.partitionBy(stratum).orderBy(bucket, key)`` funnels
-    every row of a stratum through one reducer — the 100 TB failure mode
-    when one stratum dominates (e.g. English web text). Instead, the same
-    construction as :func:`esop_spark.operators.splits._distributed_prefix_sum`,
-    generalized to a composite range key:
-
-    1. range-repartition on (stratum, bucket, key) — partitions hold
-       contiguous slices of the global lexicographic order, so within a
-       partition a stratum's rows are a contiguous run of that stratum's
-       own (bucket, key) order. Spark's RangePartitioner sends equal keys
-       to one partition, so ties never straddle a boundary.
-    2. per-(partition, stratum) local row_number — a pid-clustered window;
-       no task sorts more than its ~1/num_partitions slice of any stratum.
-    3. per-(partition, stratum) counts -> exclusive offsets. The offsets
-       relation has at most num_partitions rows PER STRATUM (tiny), so its
-       window is trivial and the join back is a broadcast hash join.
-
-    Global rank = local rank + offset; exactness is preserved, and the
-    result is invariant to where the sampled range boundaries land —
-    PROVIDED both consumers below (the local window and the offsets agg)
-    read the SAME boundary set. RangePartitioner samples with an RDD-id-
-    derived seed, so two independent evaluations of the exchange can pick
-    different boundaries and leave ``_pid`` inconsistent between the two
-    branches (observed as run-to-run nondeterminism); the
-    ``localCheckpoint`` pins one materialized partitioning for both.
-    """
-    tagged = df.withColumn("_b", bucket).withColumn("_k", key.cast("string"))
-    ranged = (
-        tagged.repartitionByRange(
-            num_partitions, F.col(strata_col), F.col("_b"), F.col("_k")
-        )
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    # registry-registered so repeated sampler calls in one long session
-    # don't pin rank-exchange blocks until JVM GC (released between
-    # queries by iterate.release_shared_relations)
-    ranged = shared_checkpoint(ranged)
-    w_local = Window.partitionBy("_pid", strata_col).orderBy("_b", "_k")
-    local = ranged.withColumn("_local_rn", F.row_number().over(w_local))
-    w_off = (
-        Window.partitionBy(strata_col)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        ranged.groupBy("_pid", strata_col)
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .select(
-            "_pid",
-            strata_col,
-            F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off"),
-        )
-    )
-    return (
-        local.join(F.broadcast(offsets), ["_pid", strata_col])
-        .withColumn("_rn", (F.col("_local_rn") + F.col("_off")).cast("bigint"))
-        .drop("_pid", "_b", "_k", "_local_rn", "_off")
-    )
-
-
 def _check_unique_key(narrow: DataFrame, what: str) -> None:
     """Opt-in precondition check for the survivor-semi-join samplers: a
     repeated key would return every row sharing a surviving key (more
@@ -194,7 +125,7 @@ def sample_k_per_stratum(
 ) -> DataFrame:
     """Exactly min(k, |stratum|) rows per stratum, chosen by hash order —
     a deterministic uniform-without-replacement sample per group. Ranking
-    uses :func:`_distributed_stratum_rank` (range partition + broadcast
+    uses :func:`iterate.ordered_prefix_sum` (range partition + broadcast
     offsets), so a pathologically hot stratum spreads over every task
     instead of one reducer; ties broken by the key itself so the pick is
     total-ordered and engine-independent.
@@ -215,14 +146,14 @@ def sample_k_per_stratum(
     narrow = df.select(F.col(strata_col), key.alias("_jk"))
     if validate_key:
         _check_unique_key(narrow, "sample_k_per_stratum")
-    ranked = _distributed_stratum_rank(
+    ranked = ordered_prefix_sum(
         narrow,
-        strata_col,
-        sample_bucket(F.col("_jk"), seed),
-        F.col("_jk"),
+        [sample_bucket(F.col("_jk"), seed), F.col("_jk").cast("string")],
+        F.lit(1),
+        [strata_col],
         num_partitions,
     )
-    survivors = ranked.filter(F.col("_rn") <= k).select("_jk")
+    survivors = ranked.filter(F.col("cum_incl") <= k).select("_jk")
     return df.join(survivors, key == F.col("_jk"), "left_semi")
 
 
@@ -249,7 +180,7 @@ def mixture_resample(
     Strata not in the weights map (or with weight 0) are dropped. Plan:
     one tiny per-stratum count agg (broadcast back), then the same
     distributed hash-ordered ranking as `sample_k_per_stratum`
-    (:func:`_distributed_stratum_rank`) with a per-stratum keep count —
+    (:func:`iterate.ordered_prefix_sum`) with a per-stratum keep count —
     at 100 TB a hot stratum is range-spread across all tasks, never
     funnelled through one reducer.
     """
@@ -281,16 +212,16 @@ def mixture_resample(
     narrow = eligible.select(F.col(strata_col), key.alias("_jk"))
     if validate_key:  # PRECONDITION: see sample_k_per_stratum
         _check_unique_key(narrow, "mixture_resample")
-    ranked = _distributed_stratum_rank(
+    ranked = ordered_prefix_sum(
         narrow,
-        strata_col,
-        sample_bucket(F.col("_jk"), seed),
-        F.col("_jk"),
+        [sample_bucket(F.col("_jk"), seed), F.col("_jk").cast("string")],
+        F.lit(1),
+        [strata_col],
         num_partitions,
     )
     survivors = (
         ranked.join(F.broadcast(keeps), strata_col)
-        .filter(F.col("_rn") <= F.col("_keep"))
+        .filter(F.col("cum_incl") <= F.col("_keep"))
         .select("_jk")
     )
     return eligible.join(survivors, key == F.col("_jk"), "left_semi")
@@ -544,7 +475,7 @@ def uncertainty_sample(
     improvement (score-certain docs teach nothing).
 
     Selection ranks by (|score − threshold|, doc_id) through
-    :func:`_distributed_stratum_rank`, so a dominant stratum never funnels
+    :func:`iterate.ordered_prefix_sum`, so a dominant stratum never funnels
     through one task — the same scale-safe exact-ranking construction as
     sample_k_per_stratum, with the uncertainty distance as the bucket key.
     """
@@ -555,17 +486,21 @@ def uncertainty_sample(
         F.col(strata_col),
         quality_score_col("text").alias("q"),
     ).withColumn("dist", F.abs(F.col("q") - F.lit(threshold)))
-    ranked = _distributed_stratum_rank(
-        scored, strata_col, F.col("dist"), F.col(id_col), num_partitions
+    ranked = ordered_prefix_sum(
+        scored,
+        [F.col("dist"), F.col(id_col).cast("string")],
+        F.lit(1),
+        [strata_col],
+        num_partitions,
     )
     return (
-        ranked.filter(F.col("_rn") <= k)
+        ranked.filter(F.col("cum_incl") <= k)
         .select(
             F.col(strata_col).alias("stratum"),
             F.col(id_col).cast("bigint").alias(id_col),
             F.col("q").cast("bigint").alias("quality_score"),
             F.col("dist").cast("bigint").alias("dist"),
-            F.col("_rn").cast("bigint").alias("rank"),
+            F.col("cum_incl").alias("rank"),
         )
     )
 
@@ -778,9 +713,8 @@ def coverage_select(
     n_recompute = 0
     _OVERLAY_CAP = 10_000
     # all checkpoints here are loop-internal (the result is the driver-side
-    # picked list), so superseded rounds release immediately and
-    # release_all() frees the final ones before return
-    ckpt = RoundCheckpointer(documents)
+    # picked list), so superseded rounds release immediately and the
+    # final ones before return
 
     def _full_gains() -> DataFrame:
         nonlocal n_full
@@ -790,7 +724,7 @@ def coverage_select(
             rem = rem.filter(~F.col("did").isin([p[1] for p in picked]))
         if covered is not None:
             rem = rem.join(covered, "shingle", "left_anti")
-        return ckpt.checkpoint(
+        return shared_checkpoint(
             rem.groupBy("did").agg(F.count(F.lit(1)).alias("gain_ub"))
         )
 
@@ -846,7 +780,7 @@ def coverage_select(
             if len(overlay) > _OVERLAY_CAP:
                 old_base = base
                 base = _full_gains()
-                ckpt.release(old_base)
+                release_checkpoint(old_base)
                 base_step = step
                 overlay = {}
         if stop:
@@ -854,15 +788,16 @@ def coverage_select(
         covered_total += gain
         picked.append((step, did, gain, covered_total))
         new_cov = sh.filter(F.col("did") == did).select("shingle").distinct()
-        new_covered = ckpt.checkpoint(
+        new_covered = shared_checkpoint(
             new_cov if covered is None
             else covered.union(new_cov).distinct()
         )
-        ckpt.release(covered)
+        release_checkpoint(covered)
         covered = new_covered
         overlay[did] = (-1, step)  # tombstone: never re-selected
     sh.unpersist()
-    ckpt.release_all()
+    release_checkpoint(base)
+    release_checkpoint(covered)
     if stats is not None:
         stats["full_gain_passes"] = n_full
         stats["single_doc_recomputes"] = n_recompute
@@ -895,7 +830,7 @@ def conformal_calibration(
     milli-units.
 
     Scale shape: means and counts are stratum-grain aggs (broadcast back);
-    the per-stratum ranking uses _distributed_stratum_rank — range
+    the per-stratum ranking uses iterate.ordered_prefix_sum — range
     partition + pid-local window + broadcast offsets — so a dominant
     stratum never funnels through one task; q̂ is a |strata|-row relation.
 
@@ -922,8 +857,8 @@ def conformal_calibration(
         "nc", F.abs(F.col("val") - F.col("mean_val"))
     )
     cal = scored.filter("is_cal")
-    ranked = _distributed_stratum_rank(
-        cal, "stratum", F.col("nc"), F.col("rid")
+    ranked = ordered_prefix_sum(
+        cal, [F.col("nc"), F.col("rid").cast("string")], F.lit(1), ["stratum"]
     )
     # ⌈(n_cal+1)·(1−α)⌉ in exact milli-units (integer ceil), clamped to n_cal
     k_rank = F.least(
@@ -932,7 +867,7 @@ def conformal_calibration(
         ),
         F.col("n_cal"),
     )
-    qhat = ranked.filter(F.col("_rn") == k_rank).select(
+    qhat = ranked.filter(F.col("cum_incl") == k_rank).select(
         "stratum", F.col("nc").alias("q_hat")
     )
     test = scored.filter(~F.col("is_cal")).join(F.broadcast(qhat), "stratum")
@@ -981,7 +916,7 @@ def sample_quantile_audit(
     interpolation — every reported number is a value that exists in the
     data, bit-identical across engines.
 
-    Scale shape: the exact leg is the distributed range-partition rank
+    Scale shape: the exact leg ranks with :func:`iterate.ordered_prefix_sum`
     (no single-task global window); the sample leg is a k-row TakeOrdered
     by hash, ranked locally (bounded by k). Output per quantile:
     (q_milli, exact_cents, sample_cents, err_ppm)."""
@@ -994,9 +929,7 @@ def sample_quantile_audit(
         )
     )
     n_df = vals.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    ranked = _distributed_stratum_rank(
-        vals.withColumn("_one", F.lit(1)), "_one", F.col("v"), F.col("rid")
-    )
+    ranked = ordered_prefix_sum(vals, ["v", "rid"], F.lit(1))
     hashed = vals.withColumn(
         "h",
         F.conv(
@@ -1024,7 +957,7 @@ def sample_quantile_audit(
         "q_milli", F.expr("q_milli * (sn - 1) div 1000 + 1").alias("_rk")
     )
     exact = ranked.join(
-        F.broadcast(ex_spec), F.col("_rn") == F.col("_rk")
+        F.broadcast(ex_spec), F.col("cum_incl") == F.col("_rk")
     ).select("q_milli", F.col("v").alias("exact_cents"))
     samp = s_ranked.join(
         F.broadcast(s_spec), F.col("_srn") == F.col("_rk")
@@ -1055,9 +988,9 @@ def robust_profile(
     (median of |x − med|), and the count of |x − med| > k·1.4826·MAD
     outliers. q267's Hampel filter does this over TIME on the bounded day
     grain; this is the per-SOURCE version where the value domain is
-    unbounded, so both medians are rank selections via the distributed
-    stratum-rank construction (range partition + broadcast offsets — a
-    dominant source never funnels through one task).
+    unbounded, so both medians are rank selections via
+    :func:`iterate.ordered_prefix_sum` (range partition + broadcast
+    offsets — a dominant source never funnels through one task).
 
     Exactness: medians are (lo+hi)/2 of bigint order statistics — the
     same double in any engine; MAD likewise over exact |x − med| values
@@ -1078,12 +1011,12 @@ def robust_profile(
             F.count(F.lit(1)).cast("bigint").alias("n")
         )
     )
-    r1 = _distributed_stratum_rank(vals, "stratum", F.col("x"), F.col("rid"))
+    r1 = ordered_prefix_sum(vals, ["x", "rid"], F.lit(1), ["stratum"])
     med = (
         r1.join(F.broadcast(counts), "stratum")
         .filter(
-            (F.col("_rn") == F.expr("(n + 1) div 2"))
-            | (F.col("_rn") == F.expr("n div 2 + 1"))
+            (F.col("cum_incl") == F.expr("(n + 1) div 2"))
+            | (F.col("cum_incl") == F.expr("n div 2 + 1"))
         )
         .groupBy("stratum")
         # ×2 median stays integral: lo + hi exactly
@@ -1106,12 +1039,12 @@ def robust_profile(
         "x",
         F.abs(2 * F.col("x") - F.col("med2x")).alias("d2x"),  # 2·|x−med|
     )
-    r2 = _distributed_stratum_rank(dev, "stratum", F.col("d2x"), F.col("rid"))
+    r2 = ordered_prefix_sum(dev, ["d2x", "rid"], F.lit(1), ["stratum"])
     mad = share_relation(
         r2.join(F.broadcast(counts), "stratum")
         .filter(
-            (F.col("_rn") == F.expr("(n + 1) div 2"))
-            | (F.col("_rn") == F.expr("n div 2 + 1"))
+            (F.col("cum_incl") == F.expr("(n + 1) div 2"))
+            | (F.col("cum_incl") == F.expr("n div 2 + 1"))
         )
         .groupBy("stratum")
         .agg(F.sum("d2x").cast("bigint").alias("mad4x"))
@@ -1194,30 +1127,28 @@ def median_ci(
         "lo_rank",
         (F.col("n") - F.col("lo_rank") + 1).alias("hi_rank"),
     )
-    ranked = _distributed_stratum_rank(
-        vals.withColumn("_one", F.lit(1)), "_one", F.col("v"), F.col("rid")
-    )
+    ranked = ordered_prefix_sum(vals, ["v", "rid"], F.lit(1))
     probed = ranked.crossJoin(F.broadcast(n_df)).filter(
-        (F.col("_rn") == F.col("lo_rank"))
-        | (F.col("_rn") == F.col("hi_rank"))
-        | (F.col("_rn") == F.expr("(n + 1) div 2"))
-        | (F.col("_rn") == F.expr("n div 2 + 1"))
+        (F.col("cum_incl") == F.col("lo_rank"))
+        | (F.col("cum_incl") == F.col("hi_rank"))
+        | (F.col("cum_incl") == F.expr("(n + 1) div 2"))
+        | (F.col("cum_incl") == F.expr("n div 2 + 1"))
     )
     return probed.groupBy("n", "lo_rank", "hi_rank").agg(
         F.round(
             F.avg(
                 F.when(
-                    (F.col("_rn") == F.expr("(n + 1) div 2"))
-                    | (F.col("_rn") == F.expr("n div 2 + 1")),
+                    (F.col("cum_incl") == F.expr("(n + 1) div 2"))
+                    | (F.col("cum_incl") == F.expr("n div 2 + 1")),
                     F.col("v"),
                 )
             ),
             6,
         ).alias("median_cents"),
         F.min(
-            F.when(F.col("_rn") == F.col("lo_rank"), F.col("v"))
+            F.when(F.col("cum_incl") == F.col("lo_rank"), F.col("v"))
         ).alias("ci_lo_cents"),
         F.min(
-            F.when(F.col("_rn") == F.col("hi_rank"), F.col("v"))
+            F.when(F.col("cum_incl") == F.col("hi_rank"), F.col("v"))
         ).alias("ci_hi_cents"),
     )

@@ -21,7 +21,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from esop_spark.operators.iterate import share_relation
+from esop_spark.operators.iterate import (
+    ordered_prefix_sum,
+    share_relation,
+    shared_checkpoint,
+)
 
 
 def _vec_double(col: str | Column) -> Column:
@@ -248,7 +252,6 @@ def _split_hot_buckets(
     Levels are shared-checkpointed (DISK_ONLY, registry-released between
     queries) — the iterated-small-step shape; the quantized vectors ride
     along in the pending relation so no level re-joins the corpus."""
-    from esop_spark.operators.iterate import shared_checkpoint
     from pyspark.storagelevel import StorageLevel
 
     c = F.col(vec_col)
@@ -663,75 +666,6 @@ def kmeans_centroids(
         return centroids
     finally:
         e.unpersist()
-
-
-def lsh_cosine_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.45,
-    num_planes: int = 16,
-    bands: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-) -> DataFrame:
-    """Random-hyperplane LSH near-neighbor pairs, exact-cosine-verified
-    (float-plane variant; :func:`cosine_pairs_lsh` is the integer-exact,
-    oracle-replicable production path).
-
-    Signature bit i = sign(<v, r_i>) for fixed pseudo-random planes r_i
-    (seeded, reproducible). Bands of sign-bits → bucket equi-join →
-    candidates → exact cosine computed for the CANDIDATES ONLY (the
-    pre-round-7 version verified by semi-joining against the full
-    brute-force pair list, which silently re-ran the O(n²) baseline the
-    LSH exists to avoid). False-positive-free; recall set by bands ×
-    planes-per-band.
-    """
-    rnd = __import__("random").Random(7)
-    planes = [
-        [rnd.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)
-    ]
-    e = with_norm(embeddings, vec_col, id_col)
-    sign_cols = [
-        (_dot(F.col("v"), F.array(*[F.lit(x) for x in p])) > 0).cast("int").alias(f"s{i}")
-        for i, p in enumerate(planes)
-    ]
-    sig = e.select(F.col(id_col), *sign_cols)
-    rows_per_band = num_planes // bands
-    band_cols = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.xxhash64(*[F.col(f"s{band * rows_per_band + r}") for r in range(rows_per_band)]).alias("bucket"),
-        )
-        for band in range(bands)
-    ]
-    buckets = sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    ea = e.select(
-        F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na")
-    )
-    eb = e.select(
-        F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb")
-    )
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return (
-        candidates.join(ea, "id_a")
-        .join(eb, "id_b")
-        .select("id_a", "id_b", F.round(cos, 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
 
 
 # Fixed-point scale for the semantic-dedup projection: embeddings are
@@ -1933,15 +1867,13 @@ def prototypicality(
     mean-of-integer-nano sums rounded to 6dp (order-independent), cosines
     round to 6dp, and the within-label ranking orders by the INTEGER
     micro-cosine (descending) with the id string as tiebreak — through
-    :func:`esop_spark.operators.sampling._distributed_stratum_rank`, so a
+    :func:`iterate.ordered_prefix_sum` of 1, so a
     dominant label never funnels through one task. Decile =
     ``1 + (rank-1)*deciles // n_label`` — integer math, exact everywhere.
 
     Scale: centroids are a (labels x dims)-grain mergeable-mean agg
     broadcast back (k·d rows); the rank is the range-partitioned
     construction; the report grain is labels x deciles."""
-    from esop_spark.operators.sampling import _distributed_stratum_rank
-
     v = _vec_double(vec_col)
     base = embeddings.select(
         F.col(id_col),
@@ -1977,11 +1909,14 @@ def prototypicality(
             _dot(F.col("v"), F.col("cvec")) / (F.col("norm") * F.col("cnorm")), 6
         ).alias("cos"),
     )
-    ranked = _distributed_stratum_rank(
+    ranked = ordered_prefix_sum(
         scored,
-        "lbl",
-        (-F.round(F.col("cos") * 1e6)).cast("bigint"),
-        F.col(id_col),
+        [
+            (-F.round(F.col("cos") * 1e6)).cast("bigint"),
+            F.col(id_col).cast("string"),
+        ],
+        F.lit(1),
+        ["lbl"],
         num_partitions,
     )
     counts = scored.groupBy("lbl").agg(F.count(F.lit(1)).alias("n_lbl"))
@@ -1989,7 +1924,7 @@ def prototypicality(
     return (
         ranked.join(F.broadcast(counts), "lbl")
         .withColumn(
-            "decile", F.expr(f"1 + ((_rn - 1) * {deciles}) div n_lbl")
+            "decile", F.expr(f"1 + ((cum_incl - 1) * {deciles}) div n_lbl")
         )
         .groupBy(
             F.col("lbl").cast("bigint").alias("label"),

@@ -13,9 +13,9 @@ Two operators every training-data pipeline needs downstream of curation:
   laid out in a deterministic global order, token counts are prefix-summed,
   and shard ``i`` owns the token interval ``[i*budget, (i+1)*budget)``. This
   is the standard fixed-token-window packing used to build pretraining
-  shards. The prefix sum is computed DISTRIBUTED: a range partition by the
-  order key, a per-partition running sum, and a broadcast join of the tiny
-  per-partition offset table — no global single-task window, which is what a
+  shards. The prefix sum is :func:`iterate.ordered_prefix_sum`: a range
+  partition by the order key, a per-partition running sum, and a broadcast
+  join of the tiny per-partition offset table — no global single-task window, which is what a
   naive ``Window.orderBy`` would give (all 100 TB through one task).
 
 Scale design: ``assign_split`` is a narrow projection (zero shuffles).
@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from esop_spark.operators.iterate import shared_checkpoint
+from esop_spark.operators.iterate import ordered_prefix_sum
 from esop_spark.operators.sampling import BUCKETS, sample_bucket
 
 
@@ -98,57 +98,6 @@ def split_report(
     )
 
 
-def _distributed_prefix_sum(
-    df: DataFrame,
-    order_col: str,
-    value_col: str,
-    num_partitions: int = 32,
-) -> DataFrame:
-    """Adds ``cum_incl`` = SUM(value) OVER (ORDER BY order_col) without a
-    single-task global window.
-
-    ``order_col`` must be UNIQUE (ties could straddle a range boundary and
-    make intra-tie order ambiguous). Three steps, all bounded:
-
-    1. range-repartition on the order key — partitions hold contiguous,
-       globally ordered key ranges (Spark samples boundaries; the final
-       ``cum_incl`` is invariant to WHERE the boundaries land, but both
-       consumers must read the SAME boundary set — RangePartitioner's
-       sample seed derives from the RDD id, so two independent
-       evaluations can disagree; the ``localCheckpoint`` pins one
-       materialized partitioning for both branches);
-    2. per-partition running sum — a pid-clustered window (one more
-       exchange, but clustered, never single-task);
-    3. per-partition totals -> exclusive offsets. The offsets relation has
-       ONE ROW PER PARTITION, so the window over it is trivially small and
-       the join back is a broadcast hash join.
-    """
-    ranged = shared_checkpoint(
-        df.repartitionByRange(num_partitions, F.col(order_col))
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.withColumn("_local_cum", F.sum(value_col).over(w_local))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        ranged.groupBy("_pid")
-        .agg(F.sum(value_col).alias("_psum"))
-        .select(
-            "_pid",
-            F.coalesce(F.sum("_psum").over(w_off), F.lit(0)).alias("_offset"),
-        )
-    )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn("cum_incl", (F.col("_local_cum") + F.col("_offset")).cast("bigint"))
-        .drop("_pid", "_local_cum", "_offset")
-    )
-
-
 def pack_shards(
     df: DataFrame,
     order_col: str,
@@ -166,7 +115,9 @@ def pack_shards(
     """
     if budget <= 0:
         raise ValueError("budget must be positive")
-    with_cum = _distributed_prefix_sum(df, order_col, token_col, num_partitions)
+    with_cum = ordered_prefix_sum(
+        df, [order_col], token_col, num_partitions=num_partitions
+    )
     return with_cum.withColumn(
         "shard_id",
         ((F.col("cum_incl") - F.col(token_col)) / F.lit(budget)).cast("bigint"),
@@ -223,7 +174,7 @@ def pack_sequences(
     token count, and ``is_head`` marks the segment holding the document's
     first token (segment 0 of the doc — where its BOS would go).
 
-    Scale: the prefix sum is :func:`_distributed_prefix_sum` (range
+    Scale: the prefix sum is :func:`iterate.ordered_prefix_sum` (range
     partition + broadcast offsets — no single-task global window); the
     per-document fan-out is ``n_tokens/ctx + 1`` rows via a JVM-side
     ``sequence``+``explode``, proportional to total token count / ctx, i.e.
@@ -231,7 +182,9 @@ def pack_sequences(
     """
     if ctx <= 0:
         raise ValueError("ctx must be positive")
-    with_cum = _distributed_prefix_sum(df, order_col, token_col, num_partitions)
+    with_cum = ordered_prefix_sum(
+        df, [order_col], token_col, num_partitions=num_partitions
+    )
     start = (F.col("cum_incl") - F.col(token_col)).cast("bigint")
     end = F.col("cum_incl").cast("bigint")
     spanned = (
@@ -451,13 +404,11 @@ def curriculum_order(
     stage map is broadcast back — the same scale-safe grain trick as the
     quality CDF (q72).
 
-    The within-stage rank uses
-    :func:`esop_spark.operators.sampling._distributed_stratum_rank` (range
+    The within-stage rank is :func:`iterate.ordered_prefix_sum` of 1 (range
     partition + broadcast offsets), NOT a per-stage ``Window.partitionBy``
     sort — with 4 stages a naive window would funnel ~25% of a 100 TB
     corpus through each of 4 tasks.
     """
-    from esop_spark.operators.sampling import _distributed_stratum_rank
     from esop_spark.operators.text import quality_score_col
 
     scored = documents.select(
@@ -480,18 +431,18 @@ def curriculum_order(
         )
     )
     staged = scored.join(F.broadcast(stage_map), "q")
-    ranked = _distributed_stratum_rank(
+    ranked = ordered_prefix_sum(
         staged,
-        "stage",
-        sample_bucket(F.col(id_col), seed),
-        F.col(id_col),
+        [sample_bucket(F.col(id_col), seed), F.col(id_col).cast("string")],
+        F.lit(1),
+        ["stage"],
         num_partitions,
     )
     return ranked.select(
         F.col(id_col).cast("bigint").alias(id_col),
         F.col("q").cast("bigint").alias("quality_score"),
         F.col("stage").cast("bigint").alias("stage"),
-        F.col("_rn").cast("bigint").alias("position"),
+        F.col("cum_incl").alias("position"),
     )
 
 

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from esop_spark.operators.iterate import share_relation
+from esop_spark.operators.iterate import ordered_prefix_sum, share_relation
 
 DEFAULT_STOPWORDS = ("a", "the")
 
@@ -4405,14 +4405,13 @@ def kmv_jaccard(
     only thing two corpora ever exchange to estimate overlap.
 
     Scale shape: one distinct (stratum, term) relation feeds both legs;
-    the signature ranking is the distributed stratum-rank (no per-stratum
-    single-task window); everything pairwise happens on the
+    the signature ranking is :func:`iterate.ordered_prefix_sum` of 1 (no
+    per-stratum single-task window); everything pairwise happens on the
     |strata|²×k-bounded signature grain. The exact leg joins on the term
     key (vocab grain).
 
     Output per pair: (src_a, src_b, n_a, n_b, exact_j, kmv_j)."""
     from esop_spark.operators.dedup import md5_hash32
-    from esop_spark.operators.sampling import _distributed_stratum_rank
 
     terms = (
         documents.select(
@@ -4426,10 +4425,8 @@ def kmv_jaccard(
     counts = terms.groupBy("s").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_terms")
     )
-    ranked = _distributed_stratum_rank(
-        terms, "s", F.col("h"), F.col("term")
-    )
-    sig = share_relation(ranked.filter(F.col("_rn") <= k).select("s", "h"))
+    ranked = ordered_prefix_sum(terms, ["h", "term"], F.lit(1), ["s"])
+    sig = share_relation(ranked.filter(F.col("cum_incl") <= k).select("s", "h"))
     # exact jaccard from the vocab-grain term join
     ta = terms.select(F.col("s").alias("sa"), "term")
     tb = terms.select(F.col("s").alias("sb"), "term")

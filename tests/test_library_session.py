@@ -12,8 +12,8 @@ the baseline holds no long-lived cache.
 The basket deliberately covers every block-pinning surface:
 ``share_relation``-ed corpus relations (q22/q23) and graph/text relations
 (q159/q166/q54), one-shot ``shared_checkpoint``s (q64 splits prefix sum,
-q75 stratum rank), and ``disown_to_shared``-ed final rounds of iterative
-loops (q48 clusters, q278 component census).
+q75 stratum rank), and the final rounds iterative loops leave in the
+checkpoint registry (q48 clusters, q305 densest subgraph).
 """
 
 import sys
@@ -31,14 +31,14 @@ BASKET = [
     "q21_dedup_exact",
     "q22_dedup_minhash_lsh",     # shared shingle/signature relations
     "q23_ngram_jaccard",         # shared exact shingle relation
-    "q48_dedup_clusters",        # RoundCheckpointer + disown_to_shared
-    "q64_train_split",           # splits shared_checkpoint (prefix sum)
-    "q75_temperature_resample",  # sampler shared_checkpoint (rank exchange)
+    "q48_dedup_clusters",        # CC rounds: final round left registered
+    "q64_train_split",           # ordered_prefix_sum's shared_checkpoint
+    "q75_temperature_resample",  # stratum rank: ordered_prefix_sum of 1
     "q159_pagerank",             # share_relation-ed edge/node relations
     "q166_triangles",            # share_relation-ed oriented edges
     "q54_pii_scan",
     "q304_weighted_minhash_lsh",  # shared replicated-element relation
-    "q305_densest_subgraph",     # best-round retention + disown_to_shared
+    "q305_densest_subgraph",     # best round left registered
 ]
 
 

@@ -77,21 +77,6 @@ def test_kmeans_converges_to_cluster_means(spark):
     assert closest == {0, 1}
 
 
-def test_lsh_pairs_subset_of_exact(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.cosine_pairs(emb, threshold=0.4).collect()
-    }
-    lsh = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.lsh_cosine_pairs(emb, threshold=0.4).collect()
-    }
-    assert lsh <= exact  # verified candidates: no false positives
-    if exact:
-        assert len(lsh) / len(exact) >= 0.5  # decent recall at these params
-
-
 def test_pq_recall_on_clustered_corpus(spark):
     """PQ codes must retrieve same-cluster neighbors: 4 well-separated
     clusters of 25 vectors; ADC top-10 for one query per cluster must come

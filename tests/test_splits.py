@@ -1,12 +1,15 @@
 """Split assignment and shard packing: determinism, exactness of the
-distributed prefix sum vs a single-window reference, and budget-grid
-invariants."""
+ordered-scan kernel (``iterate.ordered_prefix_sum``) vs a single-task
+window, and budget-grid invariants."""
+
+import random
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from esop_spark.operators import splits
+from esop_spark.operators.iterate import ordered_prefix_sum
 
 
 def _docs(spark, n=500):
@@ -60,20 +63,6 @@ def test_split_report_shares_sum_to_one(spark):
         assert abs(tot - 1.0) < 1e-5, (s, tot)
 
 
-def test_distributed_prefix_sum_matches_global_window(spark):
-    docs = _docs(spark).repartition(11)  # scrambled input layout
-    got = {
-        r["doc_id"]: r["cum_incl"]
-        for r in splits._distributed_prefix_sum(docs, "doc_id", "n_tokens", 7).collect()
-    }
-    w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
-    want = {
-        r["doc_id"]: r["c"]
-        for r in docs.withColumn("c", F.sum("n_tokens").over(w)).collect()
-    }
-    assert got == want
-
-
 def test_pack_shards_budget_grid(spark):
     budget = 1000
     packed = splits.pack_shards(_docs(spark), "doc_id", "n_tokens", budget).collect()
@@ -96,25 +85,68 @@ def test_shard_report_token_conservation(spark):
     assert all(r["fill_ratio"] > 0 for r in rep)
 
 
-import pytest as _pytest
+def _scan_input(spark, n_rows, stratified, seed=17):
+    """Seeded rows (s, o, v): ``o`` is unique within a stratum but, with
+    four strata, repeats across them — the ties the kernel's per-stratum
+    offsets must keep apart."""
+    rnd = random.Random(seed)
+    strata = ["a", "b", "c", "d"] if stratified else ["a"]
+    rows = []
+    for i, s in enumerate(strata):
+        n = n_rows // len(strata) + (i < n_rows % len(strata))
+        rows += [(s, o, rnd.randint(0, 50)) for o in rnd.sample(range(n_rows), n)]
+    rnd.shuffle(rows)
+    return spark.createDataFrame(rows, "s string, o bigint, v bigint").repartition(5)
 
 
-@_pytest.mark.parametrize("n_rows,n_parts", [(1, 1), (37, 7), (500, 3)])
-def test_prefix_sum_matches_window_across_shapes(spark, n_rows, n_parts):
-    docs = _docs(spark, n_rows).repartition(5)
+@pytest.mark.parametrize(
+    "n_rows,n_parts,stratified,value",
+    [
+        (1, 1, False, "v"),
+        (37, 7, False, "v"),
+        (500, 3, False, "v"),
+        (500, 7, False, "v"),
+        (300, 8, False, 1),
+        (300, 1, True, "v"),
+        (300, 3, True, "v"),
+        (300, 8, True, "v"),
+        (300, 1, True, 1),
+        (300, 3, True, 1),
+        (300, 8, True, 1),
+    ],
+    ids=[
+        "1-1", "37-7", "500-3", "500-7", "rank-8",
+        "strata-1", "strata-3", "strata-8",
+        "strata-rank-1", "strata-rank-3", "strata-rank-8",
+    ],
+)
+def test_prefix_sum_matches_window_across_shapes(
+    spark, n_rows, n_parts, stratified, value
+):
+    """ordered_prefix_sum against a single-task window over the same
+    ROWS frame. A rank (value 1) orders by a Column expression, as the
+    stratum-rank callers do; a sum orders by a column name."""
+    df = _scan_input(spark, n_rows, stratified)
+    strata = ["s"] if stratified else []
+    order, val = (["o"], F.col("v")) if value == "v" else ([F.col("o")], F.lit(1))
     got = {
-        r["doc_id"]: r["cum_incl"]
-        for r in splits._distributed_prefix_sum(docs, "doc_id", "n_tokens", n_parts).collect()
+        (r["s"], r["o"]): r["cum_incl"]
+        for r in ordered_prefix_sum(df, order, val, strata, n_parts).collect()
     }
-    w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
+    w = (
+        Window.partitionBy(*strata)
+        .orderBy("o")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
     want = {
-        r["doc_id"]: r["c"]
-        for r in docs.withColumn("c", F.sum("n_tokens").over(w)).collect()
+        (r["s"], r["o"]): r["c"]
+        for r in df.withColumn("c", F.sum(val).over(w)).collect()
     }
+    assert len(got) == n_rows
     assert got == want
 
 
-@_pytest.mark.parametrize("budget", [1, 10, 10**9])
+@pytest.mark.parametrize("budget", [1, 10, 10**9])
 def test_pack_shards_budget_extremes(spark, budget):
     docs = _docs(spark, 60)
     packed = splits.pack_shards(docs, "doc_id", "n_tokens", budget).collect()

@@ -63,7 +63,7 @@ def main() -> int:
         try:
             # release per-query shared relations AND registered one-shot
             # checkpoints, then purge any remaining persistent RDD blocks
-            # (disowned final rounds of iterative loops) — mirrors
+            # (anything pinned outside the registries) — mirrors
             # bench.py's reset so a 300-query sweep doesn't accumulate
             # pinned blocks until JVM GC.
             release_shared_relations()

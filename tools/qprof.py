@@ -53,17 +53,26 @@ def cpu_s(jvm_pid: int) -> float:
 
 def count_cc_rounds() -> list:
     """Route the kernel's per-round checkpoint through a counter. Returns
-    the list it appends each call's checkpointer to; holding them keeps
-    their ids distinct, so rounds = calls - distinct checkpointers."""
-    ckpts = []
-    inner = graph._checkpoint_counting_changed
+    the list each ``graph._component_labels`` call appends its round
+    count to: its ``graph._checkpoint_counting`` calls less the initial
+    state's one. Only calls inside the kernel count, so the k-core
+    peel's checkpoints do not."""
+    rounds, calls = [], [0]
+    checkpoint, labels = graph._checkpoint_counting, graph._component_labels
 
-    def counting(ckpt, state):
-        ckpts.append(ckpt)
-        return inner(ckpt, state)
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return checkpoint(*args, **kwargs)
 
-    graph._checkpoint_counting_changed = counting
-    return ckpts
+    def counted_labels(*args, **kwargs):
+        before = calls[0]
+        out = labels(*args, **kwargs)
+        rounds.append(calls[0] - before - 1)
+        return out
+
+    graph._checkpoint_counting = counting
+    graph._component_labels = counted_labels
+    return rounds
 
 
 def main() -> None:
@@ -139,7 +148,7 @@ def main() -> None:
         )
         os.makedirs(plan_dir, exist_ok=True)
 
-    cc_ckpts = count_cc_rounds()
+    cc_calls = count_cc_rounds()
     for name in names:
         reset()
         qs[name](spark, args.sf).write.format("noop").mode("overwrite").save()
@@ -156,7 +165,7 @@ def main() -> None:
         exec_jobs = []
         cc_rounds = []
         for t in range(args.trials):
-            cc_ckpts.clear()
+            cc_calls.clear()
             tag = f"qprof-{name}-{t}-{uuid.uuid4().hex[:6]}"
             try:
                 sc.setJobGroup(f"{tag}-build", name)
@@ -173,13 +182,13 @@ def main() -> None:
             tracker = sc.statusTracker()
             build_jobs.append(len(tracker.getJobIdsForGroup(f"{tag}-build")))
             exec_jobs.append(len(tracker.getJobIdsForGroup(f"{tag}-exec")))
-            cc_rounds.append(len(cc_ckpts) - len({id(c) for c in cc_ckpts}))
+            cc_rounds.append(sum(cc_calls))
         trials_r = [round(x, 3) for x in trials]
         print(
             f"{name}: min={min(trials_r)} med={sorted(trials_r)[len(trials_r)//2]}"
             f" trials={trials_r} build_s={[round(x, 3) for x in builds]}"
             f" build_jobs={build_jobs} exec_jobs={exec_jobs}"
-            + (f" cc_rounds={cc_rounds}" if cc_ckpts else ""),
+            + (f" cc_rounds={cc_rounds}" if cc_calls else ""),
             flush=True,
         )
     spark.stop()
